@@ -387,45 +387,25 @@ def minhash_pairs_cached(
     pair list once and every audit/split/components job scans that
     parquet shuffle-free instead of re-sketching the corpus.
 
-    Keyed like the other write-once stores (sources/tables.py
-    ``_materialize`` / tier7's incremental-signature store): sf key +
-    (threshold, n_hashes) + a version tag + the mtime/size fingerprint of
-    documents.parquet, so a driver testdata regeneration invalidates the
-    cache; stale fingerprints' stores and dead ``.tmp{pid}`` build dirs
-    are swept on every call; the build lands pid-suffixed and is renamed
-    into place so concurrent first-callers don't corrupt each other.
-    Contents are deterministic (the whole pipeline is), so any caller may
-    build."""
-    import os
-    import shutil
+    Named, swept and published like every derived store
+    (``sources.tables.store_path`` / ``publish_store``); the stem carries
+    (threshold, n_hashes) and a version tag, the fingerprint covers
+    documents.parquet.  Contents are deterministic (the whole pipeline
+    is), so any caller may build."""
+    from ..sources.tables import load_table, publish_store, store_path
 
-    from ..sources.tables import (
-        load_table,
-        source_fingerprint,
-        sweep_stale_store_dirs,
-    )
-
-    from ..sources.tables import store_root
-
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    tt = repr(threshold).replace(".", "p")
-    root = store_root()
-    prefix = f"spark_graft_mhpairs_{key}_t{tt}_h{n_hashes}_v1_"
-    out = f"{root}/{prefix}{source_fingerprint(sf_dir, tables=('documents',))}"
-    sweep_stale_store_dirs(root, prefix, out)
-    if not os.path.exists(out):
-        docs = load_table(spark, sf_dir, "documents")
-        tmp = f"{out}.tmp{os.getpid()}"
+    def write(tmp: str) -> None:
         # the pair table is tiny (thousands of rows at sf0.1) — 4 files
         # keeps the read-back parallel without a small-files mess
         minhash_near_dup_pairs(
-            docs, threshold=threshold, n_hashes=n_hashes
+            load_table(spark, sf_dir, "documents"),
+            threshold=threshold,
+            n_hashes=n_hashes,
         ).repartition(4).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:  # lost the race: another process renamed first
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(out)
+
+    tt = repr(threshold).replace(".", "p")
+    out = store_path(sf_dir, f"mhpairs_t{tt}_h{n_hashes}_v1", ("documents",))
+    return spark.read.parquet(publish_store(out, write))
 
 
 # Portable token hash: rolling polynomial hash of the token's characters

@@ -420,18 +420,12 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> SDF:
     fact-fact joins (pay one bucketed write, every later join is
     shuffle-free); the one-time write cost is why it's a separate query
     from join_inner_hash."""
-    from ..sources.tables import source_fingerprint
+    from ..sources.tables import store_path
 
-    # key carries the source fingerprint: regenerated testdata gets fresh
-    # bucketed tables (catalog names included) instead of a stale layout
-    key = (
-        sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-        + "_"
-        + source_fingerprint(sf_dir)
-    )
-    from ..sources.tables import store_root
-
-    loc = f"{store_root()}/spark_graft_bucketed_{key}"
+    loc = store_path(sf_dir, "bucketed", ("orders", "lineitem"))
+    # catalog names carry the store's sf + fingerprint tail: regenerated
+    # testdata gets fresh bucketed tables instead of a stale layout
+    key = loc.rsplit("spark_graft_bucketed_", 1)[-1].replace(".", "_")
     for name, src, col in (
         ("lineitem_b", "lineitem", "l_orderkey"),
         ("orders_b", "orders", "o_orderkey"),

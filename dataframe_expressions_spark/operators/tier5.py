@@ -1123,13 +1123,11 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> SDF:
 
 
 def _maint_dir(sf_dir: str, name: str) -> str:
-    from ..sources.tables import TABLE_NAMES, source_fingerprint, store_root
+    from ..sources.tables import TABLE_NAMES, store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     # keyed on the full source footprint: regenerated testdata must never
     # be served a maintenance copy built from the previous generation
-    return (f"{store_root()}/spark_graft_{name}_{key}_"
-            f"{source_fingerprint(sf_dir, TABLE_NAMES)}")
+    return store_path(sf_dir, name, TABLE_NAMES)
 
 
 @query(
@@ -1155,13 +1153,13 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> SDF:
     import os
     import shutil
 
-    frag = _maint_dir(sf_dir, "frag")
+    from ..sources.tables import write_once_parquet
+
     compact = _maint_dir(sf_dir, "compact")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    if not os.path.exists(frag):
-        ev.repartition(64).write.mode("overwrite").parquet(frag)
+    frag = write_once_parquet(ev, _maint_dir(sf_dir, "frag"), n_files=64)
     shutil.rmtree(compact, ignore_errors=True)
     small = spark.read.parquet(frag)
     n_bytes = sum(
@@ -1198,10 +1196,9 @@ def sink_sorted_skipping(spark: SparkSession, sf_dir: str) -> SDF:
     the rewrite preserved content.  At 100 TB this layout turns a
     full-table scan per time-slice query into reading ~1/240th of the
     files."""
-    import os
+    from ..sources.tables import publish_store
 
-    out = _maint_dir(sf_dir, "sorted")
-    if not os.path.exists(out):
+    def write(tmp: str) -> None:
         lin = load_table(spark, sf_dir, "lineitem").select(
             "l_shipdate", "l_quantity"
         )
@@ -1209,8 +1206,10 @@ def sink_sorted_skipping(spark: SparkSession, sf_dir: str) -> SDF:
             lin.repartitionByRange(8, "l_shipdate")
             .sortWithinPartitions("l_shipdate")
             .write.mode("overwrite")
-            .parquet(out)
+            .parquet(tmp)
         )
+
+    out = publish_store(_maint_dir(sf_dir, "sorted"), write)
     back = spark.read.parquet(out).where(
         (F.col("l_shipdate") >= F.lit("1997-06-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
@@ -1406,17 +1405,19 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> SDF:
     (fine for a demo; at 100 TB you pin the latest schema explicitly and
     get the same null-fill without the footer sweep — the read semantics
     this query locks in are identical either way)."""
-    import os
+    from ..sources.tables import publish_store
 
-    out = _maint_dir(sf_dir, "evolve")
     nation = load_table(spark, sf_dir, "nation")
-    if not os.path.exists(out):
+
+    def write(tmp: str) -> None:
         nation.where(F.col("n_regionkey") == 0).select(
             "n_nationkey", "n_name"
-        ).write.mode("overwrite").parquet(out + "/gen=1")
+        ).write.mode("overwrite").parquet(tmp + "/gen=1")
         nation.where(F.col("n_regionkey") != 0).select(
             "n_nationkey", "n_name", "n_regionkey"
-        ).write.mode("overwrite").parquet(out + "/gen=2")
+        ).write.mode("overwrite").parquet(tmp + "/gen=2")
+
+    out = publish_store(_maint_dir(sf_dir, "evolve"), write)
     back = spark.read.option("mergeSchema", True).parquet(
         out + "/gen=1", out + "/gen=2"
     )
@@ -1562,10 +1563,9 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> SDF:
     scan; the oracle computes the same filter on the ORIGINAL table,
     proving the rewrite preserved content.  This is what Delta/Iceberg
     `OPTIMIZE ZORDER BY` does, expressed with open Spark primitives."""
-    import os
+    from ..sources.tables import publish_store
 
-    out = _maint_dir(sf_dir, "zorder")
-    if not os.path.exists(out):
+    def write(tmp: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_custkey", "o_orderdate", "o_totalprice"
         )
@@ -1590,8 +1590,10 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> SDF:
             .sortWithinPartitions("zval")
             .drop("zval")
             .write.mode("overwrite")
-            .parquet(out)
+            .parquet(tmp)
         )
+
+    out = publish_store(_maint_dir(sf_dir, "zorder"), write)
     back = spark.read.parquet(out).where(
         F.col("o_custkey").between(40, 119)
         & (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))

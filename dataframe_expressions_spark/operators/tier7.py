@@ -656,26 +656,14 @@ def _restart_src_files(spark: SparkSession, sf_dir: str) -> list:
     restart test has real file-source offsets to checkpoint across."""
     import os
 
-    from ..sources.tables import store_root, sweep_stale_store_dirs
+    from ..sources.tables import publish_store, store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = store_root()
-    out = (
-        f"{root}/spark_graft_restart_stage_{key}_"
-        f"{source_fingerprint(sf_dir, ('events',))}"
+    out = publish_store(
+        store_path(sf_dir, "restart_stage", ("events",)),
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .select("event_id", "event_type", "value")
+        .repartition(8).write.mode("overwrite").parquet(tmp),
     )
-    sweep_stale_store_dirs(root, f"spark_graft_restart_stage_{key}_", out)
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp{os.getpid()}"
-        load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        ).repartition(8).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
     return sorted(
         os.path.join(out, f)
         for f in os.listdir(out)
@@ -797,17 +785,18 @@ def _month_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
     probed, not assumed)."""
     import os
 
-    from ..sources.tables import store_root, sweep_stale_store_dirs
+    from ..sources.tables import publish_store, store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = store_root()
-    out = (
-        f"{root}/spark_graft_dpp_orders_v2_{key}_"
-        f"{source_fingerprint(sf_dir, ('orders',))}"
+    rk = (
+        F.row_number()
+        # global window [aggregate-sized]: store-build dim rank over
+        # MONTH revenue rollup (~tens of rows)
+        # (inventoried in tests/test_window_audit.py)
+        .over(W.orderBy(F.desc("rev"), F.asc("o_ym")))
+        .alias("rk")
     )
-    sweep_stale_store_dirs(root, f"spark_graft_dpp_orders_v2_{key}_", out)
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp{os.getpid()}"
+
+    def write(tmp: str) -> None:
         fact = load_table(spark, sf_dir, "orders").withColumn(
             "o_ym", F.date_format("o_orderdate", "yyyy-MM")
         )
@@ -819,24 +808,13 @@ def _month_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
             .agg(
                 F.sum(F.col("o_totalprice").cast("decimal(38,6)")).alias("rev")
             )
-            .select(
-                "o_ym",
-                F.row_number()
-                # global window [aggregate-sized]: store-build dim rank over
-                # MONTH revenue rollup (~tens of rows)
-                # (inventoried in tests/test_window_audit.py)
-                .over(W.orderBy(F.desc("rev"), F.asc("o_ym")))
-                .alias("rk"),
-            )
+            .select("o_ym", rk)
         )
         dim.write.mode("overwrite").parquet(os.path.join(tmp, "dim"))
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    return publish_store(
+        store_path(sf_dir, "dpp_orders_v2", ("orders",)), write
+    )
 
 
 @query(
@@ -3117,19 +3095,9 @@ def _incremental_sig_store(spark: SparkSession, sf_dir: str) -> str:
     later batch probe reads only these two compact tables."""
     import os
 
-    from ..sources.tables import store_root, sweep_stale_store_dirs
+    from ..sources.tables import publish_store, store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = store_root()
-    # path tail = fingerprint + banding params: changing the band shape
-    # invalidates the store exactly like a testdata regeneration does
-    out = (
-        f"{root}/spark_graft_incsig_{key}_"
-        f"{source_fingerprint(sf_dir, ('documents',))}b32r1"
-    )
-    sweep_stale_store_dirs(root, f"spark_graft_incsig_{key}_", out)
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp{os.getpid()}"
+    def write(tmp: str) -> None:
         # signature staged in the same Arrow kernel pass (round 15) —
         # identical lane values to the standalone minhash_signature fold
         sh = D.hashed_shingle_sets(
@@ -3147,13 +3115,12 @@ def _incremental_sig_store(spark: SparkSession, sf_dir: str) -> str:
                 "band", "bucket"
             )
         ).write.mode("overwrite").parquet(os.path.join(tmp, "bands"))
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            import shutil
 
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    # the banding params (b32r1) ride in the stem: changing the band
+    # shape invalidates the store exactly like a testdata regeneration
+    return publish_store(
+        store_path(sf_dir, "incsig_b32r1", ("documents",)), write
+    )
 
 
 @query(

@@ -1954,18 +1954,9 @@ def _cn_scored_store(spark: SparkSession, sf_dir: str) -> SDF:
     table, so it is built once per orders fingerprint and read through
     parquet afterwards.  Keyed/swept exactly like the minhash pair
     store."""
-    import os
-    import shutil
+    from ..sources.tables import publish_store, store_path
 
-    from ..sources.tables import (source_fingerprint, store_root,
-                                  sweep_stale_store_dirs)
-
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    root = store_root()
-    prefix = f"spark_graft_cnsc_{key}_v1_"
-    out = f"{root}/{prefix}{source_fingerprint(sf_dir, tables=('orders',))}"
-    sweep_stale_store_dirs(root, prefix, out)
-    if not os.path.exists(out):
+    def write(tmp: str) -> None:
         pr, e, deg = _mod_graph(spark, sf_dir)
         e2 = e.select(F.col("s").alias("s2"), F.col("d").alias("d2"))
         cn = (
@@ -1998,13 +1989,11 @@ def _cn_scored_store(spark: SparkSession, sf_dir: str) -> SDF:
                 .alias("jaccard_ppm"),
             )
         )
-        tmp = f"{out}.tmp{os.getpid()}"
         sc.repartition(8).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:  # lost the race: another process renamed first
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(out)
+
+    return spark.read.parquet(
+        publish_store(store_path(sf_dir, "cnsc_v1", ("orders",)), write)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2928,23 +2917,12 @@ def join_skew_aqe(spark: SparkSession, sf_dir: str) -> SDF:
 
 
 def _merge_table_root(sf_dir: str) -> str:
-    from ..sources.tables import (
-        source_fingerprint,
-        store_root,
-        sweep_stale_store_dirs,
-    )
+    from ..sources.tables import store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
     # v3: v0/v1 now committed with stats_key (file statistics + sorted
     # layout) — store prefixes get a version bump whenever build logic
     # changes, so a stale artifact can never be served (round-10 lesson)
-    prefix = f"spark_graft_table_custmerge_v3_{key}_"
-    root = (
-        f"{store_root()}/{prefix}"
-        f"{source_fingerprint(sf_dir, ('customer', 'orders'))}"
-    )
-    sweep_stale_store_dirs(store_root(), prefix, root)
-    return root
+    return store_path(sf_dir, "table_custmerge_v3", ("customer", "orders"))
 
 
 @query(
@@ -3136,26 +3114,18 @@ def stream_table_upsert(spark: SparkSession, sf_dir: str) -> SDF:
     )
     from ..sources.tables import (
         drain_staged_stream,
-        source_fingerprint,
-        store_root,
-        sweep_stale_store_dirs,
+        store_path,
         write_done_marker,
         write_once_parquet,
     )
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fp = source_fingerprint(sf_dir, ("events",))
-    prefix = f"spark_graft_table_streamupsert_v2_{key}_"
-    root = f"{store_root()}/{prefix}{fp}"
-    sweep_stale_store_dirs(store_root(), prefix, root)
+    root = store_path(sf_dir, "table_streamupsert_v2", ("events",))
+    src = store_path(sf_dir, "upsert_stage_v2", ("events",))
     done = os.path.join(root, "_stream_done")
     if not os.path.exists(done):
         # write-once 8-file CDC stage CARRYING ITS KEY (a real change
         # stream arrives keyed; joining a uid map per micro-batch would
         # be a testdata artifact)
-        stage_prefix = f"spark_graft_upsert_stage_v2_{key}_"
-        src = f"{store_root()}/{stage_prefix}{fp}"
-        sweep_stale_store_dirs(store_root(), stage_prefix, src)
         write_once_parquet(
             load_table(spark, sf_dir, "events").select(
                 "event_id", "user_id", "value"
@@ -3278,20 +3248,9 @@ def table_merge_evolve(spark: SparkSession, sf_dir: str) -> SDF:
 
 
 def _bucketed_table_root(sf_dir: str) -> str:
-    from ..sources.tables import (
-        source_fingerprint,
-        store_root,
-        sweep_stale_store_dirs,
-    )
+    from ..sources.tables import store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    prefix = f"spark_graft_table_bucketed_v1_{key}_"
-    root = (
-        f"{store_root()}/{prefix}"
-        f"{source_fingerprint(sf_dir, ('customer', 'orders'))}"
-    )
-    sweep_stale_store_dirs(store_root(), prefix, root)
-    return root
+    return store_path(sf_dir, "table_bucketed_v1", ("customer", "orders"))
 
 
 @query(

@@ -112,17 +112,9 @@ def _order_changes(spark: SparkSession, sf_dir: str, where=None) -> SDF:
 
 
 def _table_root(sf_dir: str, prefix_stem: str, tables=("customer", "orders")):
-    from ..sources.tables import (
-        source_fingerprint,
-        store_root,
-        sweep_stale_store_dirs,
-    )
+    from ..sources.tables import store_path
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    prefix = f"spark_graft_table_{prefix_stem}_{key}_"
-    root = f"{store_root()}/{prefix}{source_fingerprint(sf_dir, tables)}"
-    sweep_stale_store_dirs(store_root(), prefix, root)
-    return root
+    return store_path(sf_dir, f"table_{prefix_stem}", tables)
 
 
 # ---------------------------------------------------------------------------
@@ -847,25 +839,17 @@ def stream_feed_consume(spark: SparkSession, sf_dir: str) -> SDF:
     )
     from ..sources.tables import (
         drain_staged_stream,
-        source_fingerprint,
-        store_root,
-        sweep_stale_store_dirs,
+        store_path,
         write_done_marker,
         write_once_parquet,
     )
 
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    fp = source_fingerprint(sf_dir, ("events",))
-    prefix = f"spark_graft_table_{STREAMFEED_TABLE_STEM}_{key}_"
-    root = f"{store_root()}/{prefix}{fp}"
-    sweep_stale_store_dirs(store_root(), prefix, root)
+    root = _table_root(sf_dir, STREAMFEED_TABLE_STEM, tables=("events",))
+    src = store_path(sf_dir, STREAMFEED_STAGE_STEM, ("events",))
     up, down = os.path.join(root, "up"), os.path.join(root, "down")
     done = os.path.join(root, "_stream_done")
     if not os.path.exists(done):
         os.makedirs(root, exist_ok=True)
-        stage_prefix = f"spark_graft_{STREAMFEED_STAGE_STEM}_{key}_"
-        src = f"{store_root()}/{stage_prefix}{fp}"
-        sweep_stale_store_dirs(store_root(), stage_prefix, src)
         # keyed CDC stream: only the key column is staged (nothing
         # downstream reads anything else — round-11 review), and
         # NULL-key events are dropped at ingest so the n_users fold
@@ -1113,37 +1097,30 @@ def stream_writers_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
     )
     from ..sources.tables import (
         drain_staged_stream,
-        source_fingerprint,
-        store_root,
-        sweep_stale_store_dirs,
+        store_path,
         write_done_marker,
         write_once_parquet,
     )
 
     root = _table_root(sf_dir, "streamdual_v1", tables=("events",))
+    srcs = {tag: store_path(sf_dir, f"dualstage_v1_{tag}", ("events",))
+            for tag in ("even", "odd")}
     done = os.path.join(root, "_stream_done")
     if not os.path.exists(done):
         # partial build (crashed mid-race) → rebuild from scratch: a
         # store with one writer's batches landed and the other's lost
         # would read back silently wrong (round-13 review discipline)
         shutil.rmtree(root, ignore_errors=True)
-        key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-        fp = source_fingerprint(sf_dir, ("events",))
         events = load_table(spark, sf_dir, "events").where(
             F.col("user_id").isNotNull()
         )
-        srcs = {}
         for tag, par in (("even", 0), ("odd", 1)):
-            prefix = f"spark_graft_dualstage_v1_{tag}_{key}_"
-            src = f"{store_root()}/{prefix}{fp}"
-            sweep_stale_store_dirs(store_root(), prefix, src)
             # 6 staged files × maxFilesPerTrigger=2 → 3 batches/writer
             write_once_parquet(
                 events.where(F.col("user_id") % 2 == par)
                 .select("user_id").repartition(6),
-                src,
+                srcs[tag],
             )
-            srcs[tag] = src
         commit_bucketed(
             events.where(F.col("user_id") % 2 == 0)
             .select("user_id").distinct()

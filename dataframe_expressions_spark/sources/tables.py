@@ -22,6 +22,8 @@ Scale notes (100 TB thinking):
 
 from __future__ import annotations
 
+import os
+import shutil
 from typing import Dict
 
 from pyspark.sql import DataFrame as SDF
@@ -32,6 +34,9 @@ __all__ = [
     "TABLE_NAMES",
     "epoch_us",
     "source_fingerprint",
+    "store_root",
+    "store_path",
+    "publish_store",
     "load_table",
     "load_tables",
     "orders_nested",
@@ -153,48 +158,83 @@ _ITEM_FIELDS = (
 
 
 def store_root() -> str:
-    """Root path for the write-once derived stores (nested views,
-    bucketed tables, minhash pair tables, scored CN tables, scan-format
-    copies) — ``$SPARK_GRAFT_STORE_ROOT``, default ``/tmp``.
+    """Root of every write-once derived store (nested views, bucketed
+    tables, minhash pair tables, scored CN tables, maintenance copies,
+    staged stream sources, copy-on-write table roots) —
+    ``$SPARK_GRAFT_STORE_ROOT``, default ``/tmp``.  ``store_path`` names
+    and sweeps them all; ``publish_store`` builds the write-once parquet
+    ones (bucketed tables are written by ``saveAsTable``, table roots by
+    mergetable's commits); no other module composes a store path.
 
-    Single machine (this sandbox): any local dir works; stores are
-    fingerprint-keyed and self-sweeping.  Real cluster: point this at a
-    shared object-store prefix every executor and driver can read —
+    Single machine: any local dir works; stores are fingerprint-keyed
+    and self-sweeping.  Real cluster: point this at a shared
+    object-store prefix every executor and driver can read —
     ``s3a://bucket/spark_graft_stores`` or
     ``abfss://container@account.dfs.core.windows.net/stores`` — so one
-    build serves the fleet.  Atomic-rename caveat: the local
-    implementation publishes a finished store by ``os.rename`` of a
-    pid-suffixed temp dir (atomic on POSIX); object stores have NO
-    atomic directory rename, so there the publish step must become
-    write-to-final-path + commit-marker (treat ``_SUCCESS`` as the
-    existence test) or a manifest-commit (Delta/Iceberg) — the keying,
-    fingerprinting, and sweep logic transfer unchanged.  The
-    copy-on-write table format (sources/mergetable.py, round 10) is the
-    marker-commit variant made first-class: versioned snapshots under
-    this root, marker = commit, reader resolves max committed version —
-    see its module docstring for the multi-writer object-store caveat."""
-    import os
-
+    build serves the fleet.  Atomic-rename caveat: ``publish_store``
+    publishes a finished store by ``os.rename`` of a pid-suffixed temp
+    dir (atomic on POSIX); object stores have NO atomic directory
+    rename, so there the publish step must become write-to-final-path +
+    commit-marker (treat ``_SUCCESS`` as the existence test) or a
+    manifest-commit (Delta/Iceberg) — the keying, fingerprinting, and
+    sweep logic transfer unchanged.  The copy-on-write table format
+    (sources/mergetable.py) is the marker-commit variant made
+    first-class: versioned snapshots under this root, marker = commit,
+    reader resolves max committed version — see its module docstring
+    for the multi-writer object-store caveat."""
     return os.environ.get("SPARK_GRAFT_STORE_ROOT", "/tmp")
 
 
 def source_fingerprint(sf_dir: str, tables=("orders", "lineitem")) -> str:
-    """Identity of the source tables feeding a derived /tmp artifact
-    (nested views, bucketed tables, maintenance copies).  The driver
-    regenerates testdata between rounds (round 2 changed the events
-    timestamp vintage in place); a cache keyed only on the sf name would
-    silently serve artifacts built from the previous generation.
-    mtime+size of the parquet footprint is the cheap, rename-safe
-    identity — the same check a lake-side materialized view does against
-    its source snapshot id."""
+    """Identity of the source tables feeding a derived store.  The
+    driver regenerates testdata between rounds (round 2 changed the
+    events timestamp vintage in place); a cache keyed only on the sf
+    name would silently serve artifacts built from the previous
+    generation.  mtime+size of the parquet footprint is the cheap,
+    rename-safe identity — the same check a lake-side materialized view
+    does against its source snapshot id."""
     import hashlib
-    import os
 
     sig = []
     for t in tables:
         st = os.stat(f"{sf_dir}/{t}.parquet")
         sig.append(f"{t}:{st.st_mtime_ns}:{st.st_size}")
     return hashlib.md5(";".join(sig).encode()).hexdigest()[:10]
+
+
+def store_path(sf_dir: str, stem: str, tables) -> str:
+    """The path of a derived store:
+    ``{store_root()}/spark_graft_{stem}_{sf}_{source_fingerprint}``.
+
+    ``stem`` names the store and carries its version tag (bump the tag
+    when the build changes); ``sf`` is the basename of ``sf_dir``;
+    the fingerprint covers exactly the ``tables`` feeding THIS store,
+    so regenerating any of them in place invalidates it.  Every call
+    sweeps the prefix's stale siblings — earlier fingerprints and the
+    ``.tmp{pid}`` dirs of dead builders; live-pid builds are kept (see
+    ``sweep_stale_store_dirs``)."""
+    root = store_root()
+    prefix = f"spark_graft_{stem}_{sf_dir.rstrip('/').rsplit('/', 1)[-1]}_"
+    out = f"{root}/{prefix}{source_fingerprint(sf_dir, tables)}"
+    sweep_stale_store_dirs(root, prefix, out)
+    return out
+
+
+def publish_store(path: str, write) -> str:
+    """Build the store at ``path`` once and return ``path``.  ``write``
+    fills a pid-suffixed temp dir, which is renamed into place, so a
+    half-written build is never read and concurrent first-callers
+    don't corrupt each other (the loser of the rename race discards
+    its temp).  An existing store is returned without calling
+    ``write``."""
+    if not os.path.exists(path):
+        tmp = f"{path}.tmp{os.getpid()}"
+        write(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:  # lost the race: another process renamed first
+            shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 def _materialize(
@@ -204,61 +244,31 @@ def _materialize(
     build,
     tables=("orders", "lineitem"),
 ) -> SDF:
-    """Write-once materialization of a derived view, keyed by sf dir, a
-    version tag (bump the tag when the view definition changes) and the
-    fingerprint of THAT VIEW'S source tables (so regenerating any feeding
-    table in place — the driver did exactly this to events.parquet in
-    round 2 — invalidates the cache; a fingerprint over a fixed default
-    table list would silently serve a stale view when a non-default
-    source like customer changes).  This IS the 100 TB shape the
-    docstrings describe: the nested view is built once (one shuffle) and
-    every query after that scans the materialized copy shuffle-free,
-    instead of re-running the groupBy-collect per query.  The build lands
-    in a pid-suffixed temp dir and is renamed into place, so concurrent
-    first-callers don't corrupt each other."""
-    import os
-    import shutil
-
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = (
-        f"{store_root()}/spark_graft_view_{name}_v1_{key}_"
-        f"{source_fingerprint(sf_dir, tables)}"
+    """Write-once materialization of a derived view.  This IS the 100 TB
+    shape the docstrings describe: the nested view is built once (one
+    shuffle) and every query after that scans the materialized copy
+    shuffle-free, instead of re-running the groupBy-collect per query.
+    8 files so the read-back parallelizes (testdata parquet is one row
+    group per file; don't reproduce that bottleneck here)."""
+    out = publish_store(
+        store_path(sf_dir, f"view_{name}_v1", tables),
+        lambda tmp: build().repartition(8).write.mode("overwrite").parquet(tmp),
     )
-    if not os.path.exists(out):
-        tmp = f"{out}.tmp{os.getpid()}"
-        # 8 files so the read-back parallelizes (testdata parquet is one
-        # row group per file; don't reproduce that bottleneck here)
-        build().repartition(8).write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, out)
-        except OSError:  # lost the race: another process renamed first
-            shutil.rmtree(tmp, ignore_errors=True)
     return spark.read.parquet(out)
 
 
-def write_once_parquet(df: SDF, path: str, n_files: int = 8) -> None:
-    """Write-once parquet stage: repartition, land in a pid-suffixed
-    temp dir, rename into place (losers of a concurrent rename race
-    discard their temp) — the _materialize discipline for callers that
-    manage their own path/fingerprint."""
-    import os
-    import shutil
-
-    if os.path.exists(path):
-        return
-    tmp = f"{path}.tmp{os.getpid()}"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
+def write_once_parquet(df: SDF, path: str, n_files: int = 8) -> str:
+    """Publish ``df`` as ``n_files`` parquet files at ``path`` unless a
+    store is already there (``publish_store``); returns ``path``."""
+    return publish_store(
+        path,
+        lambda tmp: df.repartition(n_files).write.mode("overwrite").parquet(tmp),
+    )
 
 
 def write_done_marker(path: str) -> None:
     """Publish a done marker via tmp + rename (atomic on POSIX), so a
     partially-written marker can never read as done."""
-    import os
-
     tmp = f"{path}.tmp{os.getpid()}"
     with open(tmp, "w") as fh:
         fh.write("done")
@@ -282,8 +292,6 @@ def drain_staged_stream(
     across RE-INVOCATIONS is the caller's marker/batch_id guard, not
     the checkpoint's).  Shared by every streaming-CDC query so the two
     exactly-once protocols cannot drift apart (round-11 review)."""
-    import shutil
-
     schema = spark.read.parquet(src).schema
     q = (
         spark.readStream.schema(schema)
@@ -432,8 +440,6 @@ def sweep_dead_pid_dirs(base: str, prefix: str) -> None:
     decimal ~0.9% of the time) must never be treated as a pid — that
     would either rmtree a live store or overflow os.kill (r6 review)."""
     import glob
-    import os
-    import shutil
 
     for d in glob.glob(os.path.join(base, prefix + "*")):
         pid_s = d.rsplit("_", 1)[-1]
@@ -456,8 +462,6 @@ def sweep_stale_store_dirs(base: str, prefix: str, keep: str) -> None:
     entry except ``keep`` (the current fingerprint's store) and any
     in-flight ``.tmp{pid}`` build belonging to a LIVE pid."""
     import glob
-    import os
-    import shutil
 
     for d in glob.glob(os.path.join(base, prefix + "*")):
         if d == keep:

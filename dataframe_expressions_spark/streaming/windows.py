@@ -24,23 +24,19 @@ __all__ = ["stream_events", "run_to_memory"]
 
 def _staged_dir(sf_dir: str) -> str:
     """The streaming file source requires a directory; stage the single
-    events.parquet into a tmp dir keyed by sf AND the source file's
-    mtime+size (testdata is read-only, but the driver regenerates it
-    between rounds — a stale staged copy must never be served)."""
-    import hashlib
+    events.parquet into a write-once store keyed by the events
+    fingerprint (the driver regenerates testdata between rounds — a
+    stale staged copy must never be served)."""
     import os
     import shutil
 
-    st = os.stat(f"{sf_dir}/events.parquet")
-    ident = f"{sf_dir}|{st.st_mtime_ns}|{st.st_size}"
-    key = hashlib.md5(ident.encode()).hexdigest()[:10]
-    d = f"/tmp/spark_stream_src_{key}"
-    dst = os.path.join(d, "events.parquet")
-    if not os.path.exists(dst):
-        os.makedirs(d, exist_ok=True)
-        shutil.copy(f"{sf_dir}/events.parquet", dst + ".tmp")
-        os.rename(dst + ".tmp", dst)
-    return d
+    from ..sources.tables import publish_store, store_path
+
+    def write(tmp: str) -> None:
+        os.makedirs(tmp, exist_ok=True)
+        shutil.copy(f"{sf_dir}/events.parquet", tmp)
+
+    return publish_store(store_path(sf_dir, "stream_src", ("events",)), write)
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> SDF:
@@ -103,7 +99,12 @@ def run_to_memory(df: SDF, mode: str, shuffle_partitions: int | None = 8) -> SDF
         spark.conf.set("spark.sql.shuffle.partitions", before)
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    # the resolved frame keeps the sink's plan; the catalog entry is only
+    # the lookup handle, so drop it rather than let every call grow the
+    # session catalog
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def stateful_running_count(spark: SparkSession, sf_dir: str) -> SDF:

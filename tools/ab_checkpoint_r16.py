@@ -7,9 +7,9 @@ c8 detail vs the r14 anchor): rank_bm25, tpch_q2_min_cost_supplier,
 dedup_incremental (plus the builder-flagged dedup_incremental_minhash,
 dq_duplicate_cluster_stats).  The host's proven +/-25% session noise
 makes cross-session numbers undecidable, so this tool re-runs the A/B
-the only defensible way: ONE session, alternating A/B/A/B..., >=4 reps
-per variant, min-of-reps (noise is one-sided), noop sink (bench.py's
-exact timed statistic).
+the only defensible way: ONE session, alternating A/B/A/B..., 5 reps
+per variant by default (``SPARK_GRAFT_AB_REPS``), min-of-reps (noise is
+one-sided), noop sink (bench.py's exact timed statistic).
 
 Variant A = current code.  Variant B = identical code with EVERY
 ``DataFrame.localCheckpoint`` call turned into the identity (monkey-

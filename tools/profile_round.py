@@ -1,31 +1,36 @@
-"""Round-15 optimization profiler: per-query build-vs-execute split and
-.explain("formatted") capture.
+"""Optimization profiler: per-query build-vs-execute split and
+.explain("formatted") capture, for one optimization round.
 
 The bench's timed region is ``fn(spark, sf_dir)`` + a noop write, so a
 query's cost decomposes into (a) Python construction + Catalyst
 analysis/planning on the driver and (b) the executed jobs — including
 any eager actions (localCheckpoint / count / collect) the builder fires
-*inside* fn.  This tool separates them so round-15 targets the right
-lever per id (guide §1: measure first; §7.3: planning time is
-driver-side single-threaded work).
+*inside* fn.  This tool separates them so a round targets the right
+lever per id (measure first; planning time is driver-side
+single-threaded work).
 
 Usage:
-  python tools/profile_r16.py before qid [qid ...]   # capture plans + timings
-  python tools/profile_r16.py after  qid [qid ...]
-  python tools/profile_r16.py before --top N         # N most anchor-expensive
+  python tools/profile_round.py r17 before qid [qid ...]   # capture plans + timings
+  python tools/profile_round.py r17 after  qid [qid ...]
+  python tools/profile_round.py r17 before --top N         # N most anchor-expensive
 
-Writes plans/r16/<qid>_<tag>.txt and prints one JSON line per qid:
+Writes plans/<round>/<qid>_<phase>.txt, merges the records into
+plans/<round>/_profile_<phase>.json and prints one JSON line per qid:
 {"qid":..., "build_s":..., "exec_s":..., "total_s":..., "n":samples}
 build_s times fn() (captures eager in-fn actions + analysis);
-exec_s times the noop write of the returned frame.
+exec_s times the noop write of the returned frame.  The formatted plan
+is captured after the timed samples, so no sample includes its cost.
 """
 
 from __future__ import annotations
 
+import argparse
 import contextlib
+import glob
 import io
 import json
 import os
+import re
 import sys
 import time
 
@@ -33,9 +38,26 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def _top_qids(n: int) -> list:
+    """The ``n`` most expensive ids of the newest bench anchor."""
+    cands = glob.glob(os.path.join(REPO, "bench_anchor_r*.json"))
+    if not cands:
+        sys.exit("--top needs a bench_anchor_r*.json in the repo root; none found")
+    newest = max(cands, key=lambda p: int(re.search(r"_r(\d+)", p).group(1)))
+    with open(newest) as fh:
+        anchor = json.load(fh)["queries"]
+    return sorted(anchor, key=anchor.get, reverse=True)[:n]
+
+
 def main() -> None:
-    tag = sys.argv[1]
-    args = sys.argv[2:]
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("round", help="round tag, e.g. r17: output goes to plans/<round>/")
+    ap.add_argument("phase", help="before | after (file-name suffix)")
+    ap.add_argument("qids", nargs="*")
+    ap.add_argument("--top", type=int, help="profile the N most anchor-expensive ids")
+    args = ap.parse_args()
+    if not args.qids and not args.top:
+        ap.error("give query ids or --top N")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("SPARK_GRAFT_PROFILE_REPS", "2"))
 
@@ -43,22 +65,9 @@ def main() -> None:
     from dataframe_expressions_spark.session import get_spark
 
     queries = load_all()
-    if args[0] == "--top":
-        import glob
-        import re
+    qids = args.qids or _top_qids(args.top)
 
-        cands = glob.glob(os.path.join(REPO, "bench_anchor_r*.json"))
-        newest = max(
-            cands,
-            key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
-        )
-        with open(newest) as fh:
-            anchor = json.load(fh)["queries"]
-        qids = sorted(anchor, key=anchor.get, reverse=True)[: int(args[1])]
-    else:
-        qids = args
-
-    spark = get_spark("profile_r16")
+    spark = get_spark(f"profile_{args.round}")
     from pyspark.sql import functions as F
 
     # same warm-ups as bench.py's cheap core (JVM, shuffle, HOF, Arrow)
@@ -75,7 +84,7 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     spark.range(1024).localCheckpoint(eager=True).count()
 
-    plans_dir = os.path.join(REPO, "plans", "r16")
+    plans_dir = os.path.join(REPO, "plans", args.round)
     os.makedirs(plans_dir, exist_ok=True)
 
     import gc
@@ -92,21 +101,18 @@ def main() -> None:
         spark._jvm.System.gc()
         q = queries[qid]
         samples = []
-        plan_txt = None
         for _ in range(reps):
-            spark.sparkContext.setJobDescription(f"r16-profile:{qid}")
+            spark.sparkContext.setJobDescription(f"{args.round}-profile:{qid}")
             t0 = time.perf_counter()
             df = q.fn(spark, sf_dir)
             t1 = time.perf_counter()
-            if plan_txt is None:
-                buf = io.StringIO()
-                with contextlib.redirect_stdout(buf):
-                    df.explain("formatted")
-                plan_txt = buf.getvalue()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             samples.append((t1 - t0, t2 - t1))
             spark.sparkContext.setJobDescription(None)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            df.explain("formatted")
         best = min(samples, key=lambda s: s[0] + s[1])
         rec = {
             "qid": qid,
@@ -118,9 +124,9 @@ def main() -> None:
         }
         out[qid] = rec
         print(json.dumps(rec), flush=True)
-        with open(os.path.join(plans_dir, f"{qid}_{tag}.txt"), "w") as fh:
-            fh.write(plan_txt)
-    summary_path = os.path.join(plans_dir, f"_profile_{tag}.json")
+        with open(os.path.join(plans_dir, f"{qid}_{args.phase}.txt"), "w") as fh:
+            fh.write(buf.getvalue())
+    summary_path = os.path.join(plans_dir, f"_profile_{args.phase}.json")
     merged = {}
     if os.path.exists(summary_path):
         with open(summary_path) as fh:
