@@ -22,13 +22,7 @@ from pyspark.sql import functions as F
 from ..sources.tables import load_table, orders_nested
 from ..functions.dedup import spread
 from .registry import query
-
-_DEC = "decimal(38,6)"
-
-
-def _dsum(col) -> F.Column:
-    c = col if isinstance(col, F.Column) else F.col(col)
-    return F.sum(c.cast(_DEC)).cast("double")
+from .tier2 import _DEC, _dsum
 
 
 # ---------------------------------------------------------------------------

@@ -2866,8 +2866,9 @@ def scan_xml(spark: SparkSession, sf_dir: str) -> SDF:
     non-starter at scale).  XML is the interchange format legacy feeds
     still arrive in; values round-trip exactly (Java shortest-repr double
     serialization + entity-escaped strings)."""
-    key = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    out = f"/tmp/spark_graft_xml_{key}"
+    from .tier4 import _roundtrip_dir
+
+    out = _roundtrip_dir(sf_dir, "xml")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", F.round("c_acctbal", 4).alias("c_acctbal")
     )

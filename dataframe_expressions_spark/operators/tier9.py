@@ -557,7 +557,7 @@ def dsl_table_write(spark: SparkSession, sf_dir: str) -> SDF:
     groupBy change set over orders MERGEs into it via the
     ``merge_into`` verb — both verbs lowering BY DELEGATION to the
     proven mergetable kernels (``commit_bucketed`` and the OCC
-    ``merge_into_bucketed_exclusive``), so a DSL-authored curation
+    ``merge_into_bucketed``), so a DSL-authored curation
     pipeline lands in a governed, versioned, time-travelable table with
     zero new write-path code.  The dim drops every third customer, so
     the merge exercises matched updates AND inserts ('NEW' rows);
@@ -644,7 +644,7 @@ def table_maintenance_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
         commit_meta,
         committed_versions,
         compact_buckets,
-        merge_into_bucketed_exclusive,
+        merge_into_bucketed,
         read_bucketed,
     )
 
@@ -678,7 +678,7 @@ def table_maintenance_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
         def merger():
             try:
                 barrier.wait(timeout=300)
-                merge_into_bucketed_exclusive(
+                merge_into_bucketed(
                     spark, root, chg,
                     matched_update={
                         "acctbal": "t.acctbal + s.rev",
@@ -1058,14 +1058,14 @@ def stream_writers_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
     VERDICT item 2 — composing what r12-r13 built): two ``foreachBatch``
     CDC streams over DISJOINT key ranges (even vs odd ``user_id``),
     each draining AvailableNow in its own REAL thread, both merging
-    into the SAME bucketed ledger through
-    ``merge_into_bucketed_exclusive``.  The modulo bucket layout maps
-    the parity split to disjoint bucket write-sets, so every
-    cross-writer claim collision takes the OCC REBASE path (manifest
-    union, zero recompute) — the two exactly-once protocols compose:
-    per-writer batch_id guards (replays of a batch skip, derived from
-    the writers' OWN markers — the commit log is the source of truth)
-    and OCC claim/rebase (no lost batch between writers).
+    into the SAME bucketed ledger through ``merge_into_bucketed``.
+    The modulo bucket layout maps the parity split to disjoint bucket
+    write-sets, so every cross-writer claim collision takes the OCC
+    REBASE path (manifest union, zero recompute) — the two exactly-once
+    protocols compose: per-writer batch_id guards (replays of a batch
+    skip, derived from the writers' OWN markers — the commit log is the
+    source of truth) and OCC claim/rebase (no lost batch between
+    writers).
 
     The seeded v0 holds only the EVEN users (zeroed), so the even
     writer exercises MATCHED updates while the odd writer exercises
@@ -1092,7 +1092,7 @@ def stream_writers_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
         commit_bucketed,
         commit_meta,
         committed_versions,
-        merge_into_bucketed_exclusive,
+        merge_into_bucketed,
         read_bucketed,
     )
     from ..sources.tables import (
@@ -1117,9 +1117,9 @@ def stream_writers_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
         for tag, par in (("even", 0), ("odd", 1)):
             # 6 staged files × maxFilesPerTrigger=2 → 3 batches/writer
             write_once_parquet(
-                events.where(F.col("user_id") % 2 == par)
-                .select("user_id").repartition(6),
+                events.where(F.col("user_id") % 2 == par).select("user_id"),
                 srcs[tag],
+                n_files=6,
             )
         commit_bucketed(
             events.where(F.col("user_id") % 2 == 0)
@@ -1152,7 +1152,7 @@ def stream_writers_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
                 chg = batch_df.groupBy("user_id").agg(
                     F.count(F.lit(1)).cast("long").alias("bn")
                 )
-                merge_into_bucketed_exclusive(
+                merge_into_bucketed(
                     spark, root, chg,
                     matched_update={"n_events": "t.n_events + s.bn"},
                     not_matched_insert={"n_events": "s.bn"},
@@ -2098,8 +2098,8 @@ def table_merge_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
     """CONCURRENT MERGE WITH OCC CONFLICT DETECTION (round 12, r11
     VERDICT item 1): two writers MERGE disjoint change sets — buckets
     {0,1} and {2,3} of 16 — into the same bucketed table from genuinely
-    concurrent threads via ``merge_into_bucketed_exclusive``.  Each
-    writer records its read-base and touched-bucket write-set in its
+    concurrent threads via ``merge_into_bucketed``.  Each writer
+    records its read-base and touched-bucket write-set in its
     commit marker; whichever writer loses the version claim detects the
     rival's write-set is DISJOINT and REBASES — adopts the rival's
     manifest, keeps its own already-written buckets, zero recompute —
@@ -2123,7 +2123,7 @@ def table_merge_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import (
         commit_bucketed,
         latest_version,
-        merge_into_bucketed_exclusive,
+        merge_into_bucketed,
         read_bucketed,
     )
 
@@ -2153,7 +2153,7 @@ def table_merge_concurrent(spark: SparkSession, sf_dir: str) -> SDF:
         )
 
         def writer(tag: str, pred) -> int:
-            return merge_into_bucketed_exclusive(
+            return merge_into_bucketed(
                 spark,
                 root,
                 _order_changes(spark, sf_dir, where=pred),

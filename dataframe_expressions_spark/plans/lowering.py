@@ -1527,11 +1527,11 @@ class Lowerer:
         not_matched_insert={...}, matched_delete=None, on=None,
         strict_source_keys=False)`` — MERGE the captured frame (the
         SOURCE change set) into the table at ``root``, delegating to
-        the mergetable kernels: bucketed tables run the OCC
-        ``merge_into_bucketed_exclusive`` (write-set conflict
-        detection, k/B rewrite, rebase on disjoint rivals; ``on`` is
-        the table's own bucket key — an explicit ``on=`` must match
-        it); plain tables run table-granularity ``merge_into`` +
+        the mergetable kernels: bucketed tables run
+        ``merge_into_bucketed``, the one bucketed MERGE (OCC write-set
+        conflict detection, k/B rewrite, rebase on disjoint rivals;
+        ``on`` is the table's own bucket key — an explicit ``on=`` must
+        match it); plain tables run table-granularity ``merge_into`` +
         ``commit_snapshot_exclusive`` with a required ``on=``.  Clause
         dicts are the mergetable SET-expression contract verbatim (SQL
         strings over ``t.``/``s.``).  Returns the committed version's
@@ -1575,7 +1575,7 @@ class Lowerer:
                         f".merge_into() on= must match the table's "
                         f"bucket key {spec_on} (got {want})"
                     )
-            n = mt.merge_into_bucketed_exclusive(
+            n = mt.merge_into_bucketed(
                 spark, root, parent.df,
                 matched_update=matched_update,
                 not_matched_insert=not_matched_insert,

@@ -53,8 +53,8 @@ versions with no lost COMMIT — both snapshots are durable and
 addressable.  That alone is NOT serializability: a MERGE that lost the
 claim still committed a state derived from a stale base, silently
 omitting the winner's changes from ``latest_version`` — the lost-update
-anomaly.  ``merge_into_bucketed_exclusive`` (round 12) closes it with
-OCC write-set conflict detection: every merge marker records its
+anomaly.  ``merge_into_bucketed`` (the one bucketed MERGE) closes it
+with OCC write-set conflict detection: every merge marker records its
 ``read_base`` and ``touched_buckets`` write-set; on claim loss the
 writer inspects the intervening commits and either REBASES (write-sets
 disjoint — the merged buckets are still valid, so the new manifest is
@@ -118,10 +118,14 @@ priced by its scale trade:
   fragmented fraction, never the table.
 
 Crash rule for the data-deriving commits (bucketed MERGE, compaction,
-MoR deletes): a marker-less orphan ``v<n>`` is CLEARED, never adopted
-— the orphan may hold a different call's output, and attaching a
-fresh marker to stale data is the silent-wrong-data class this
-module's protocol exists to rule out.
+MoR deletes, Z-order, restore): a marker-less orphan ``v<n>`` is never
+adopted and never deleted by a writer — the orphan may hold a
+different call's output (attaching a fresh marker to stale data is the
+silent-wrong-data class this module's protocol exists to rule out),
+and a writer cannot tell a crashed claimant's dir from a live rival's
+not-yet-published one.  The shared claim loop awaits its marker for
+``marker_timeout``, then FENCES the slot and commits past it; vacuum
+sweeps the orphan once superseded.
 """
 
 from __future__ import annotations
@@ -157,7 +161,6 @@ __all__ = [
     "feed_since",
     "merge_into",
     "merge_into_bucketed",
-    "merge_into_bucketed_exclusive",
     "optimize_zorder",
     "read_bucketed",
     "read_version",
@@ -199,10 +202,10 @@ class VersionVacuumedError(FileNotFoundError):
 def _is_fence_marker(root: str, n: int) -> bool:
     """True when version ``n``'s marker slot holds a FENCE tombstone —
     published by an OCC writer that declared a stalled claimant dead
-    (see ``merge_into_bucketed_exclusive``).  A fence is not a commit:
-    it exists purely to make the declared-dead writer's own late
-    marker publish FAIL (if-absent link against an occupied slot)
-    instead of silently landing a version the chain already skipped.
+    (see ``_claim_slot``).  A fence is not a commit: it exists purely
+    to make the declared-dead writer's own late marker publish FAIL
+    (if-absent link against an occupied slot) instead of silently
+    landing a version the chain already skipped.
 
     Thin wrapper over ``_marker_state`` (round-14 review: one shared
     marker parser, so fence-format changes land in exactly one place);
@@ -781,56 +784,65 @@ def commit_meta(root: str, n: Optional[int] = None) -> dict:
     return meta
 
 
-def _write_marker(root: str, n: int, payload: Optional[dict]) -> None:
-    """Publish the commit marker for version ``n`` — the commit point —
-    through the CommitStore's if-absent put (round 14: the last
-    replace-semantics marker rename is gone; EVERY marker publish in
-    the module, single-writer included, is now conditional).  Stamps
-    ``version`` and ``committed_at`` (the latter feeds vacuum's
-    marker-relative orphan horizon: object stores have no usable
-    directory mtime).  A lost put here is raised, never swallowed:
-    these are documented single-writer paths, so an occupied slot
-    means a protocol violation (two writers on a single-writer table),
-    and returning as-if-committed would silently drop the commit
-    (round-10 ADVICE: silent data loss in stream_table_upsert)."""
-    if _is_fence_marker(root, n):
-        # a fence tombstone is PERMANENT (round 13): replacing it with
-        # a real marker would re-open the dead-claimant slot this
-        # fence exists to close — and worse, a caller whose orphan dir
-        # survived at v<n> would attach this marker to THAT stale data
-        # (the silent-wrong-data class).  No code path may replace a
-        # published marker, fences included.
-        raise RuntimeError(
-            f"version {n} of {root} is a fenced dead-claimant slot — "
-            "its number is permanently retired; commit under the next "
-            "free version (the OCC paths skip fences automatically)"
-        )
+def _write_marker(
+    root: str, n: int, payload: Optional[dict], exc: type = RuntimeError
+) -> None:
+    """Publish version ``n``'s commit marker — the commit point — with
+    the CommitStore's if-absent put: the one marker publish every
+    commit kind shares, so NO code path can replace a published
+    marker (fences included).  Stamps ``version`` and ``committed_at``
+    (the latter feeds vacuum's marker-relative orphan horizon: object
+    stores have no usable directory mtime).
+
+    A lost put is never swallowed blindly — but on a conditional-put
+    store it is AMBIGUOUS (round 14): "someone else occupies the slot"
+    and "my own put landed but the ack was lost/duplicated by a
+    transport retry" report identically.  The marker therefore carries
+    a per-call ``writer_nonce``; on a lost put the occupant is read
+    back (polling briefly — visibility may lag the put on an
+    eventually-consistent store) and classified: OUR nonce → the
+    publish succeeded, return; a fence tombstone → the slot is
+    permanently retired (a rival declared this writer dead mid-publish,
+    or the slot was fenced before it) and the commit did NOT land,
+    raised as ``exc`` so an OCC caller may retry; any other occupant
+    means a foreign marker holds the slot, which is protocol
+    corruption (RuntimeError)."""
+    import time
     import uuid
 
     nonce = uuid.uuid4().hex
+    doc = {
+        "version": n,
+        "committed_at": time.time(),
+        **(payload or {}),
+        "writer_nonce": nonce,
+    }
     if commit_store_for(root).put_if_absent(
-        f"_commits/{n}", _marker_json(n, payload, writer_nonce=nonce).encode()
+        f"_commits/{n}", json.dumps(doc).encode()
     ):
         _maybe_checkpoint(root, n)
         return
-    # conditional-put ambiguity (round 14): a False may be a lost ack
-    # on OUR OWN landed put — read the occupant back before declaring
-    # a violation (same dance as _publish_exclusive)
     occ = _read_occupant(root, n, 5.0)
-    if occ is not None and occ.get("writer_nonce") == nonce:
-        _maybe_checkpoint(root, n)
-        return
-    if occ is not None and occ.get("fenced"):
+    if occ is None:
         raise RuntimeError(
-            f"version {n} of {root} was fenced while this writer "
-            "was committing — the slot is permanently retired; "
-            "commit under the next free version"
+            f"commit protocol violation: marker slot {n} of "
+            f"{root} reported occupied but no occupant became "
+            "readable"
+        )
+    if occ.get("writer_nonce") == nonce:
+        _maybe_checkpoint(root, n)
+        return  # our own earlier put landed; only the ack was lost
+    if occ.get("fenced"):
+        raise exc(
+            f"version {n} of {root} is fenced: its number is "
+            "permanently retired (a rival OCC writer declared its "
+            "claimant dead after marker_timeout) — the commit did NOT "
+            "land (table state unchanged by it); retry under the next "
+            "free version"
         )
     raise RuntimeError(
-        f"marker {n} already exists in {root} — a published "
-        "marker is never replaced; this path is documented "
-        "single-writer (use the *_exclusive commits for "
-        "multi-writer tables)"
+        f"commit protocol violation: marker {n} already exists in "
+        f"{root} — a published marker is never replaced"
     )
 
 
@@ -849,24 +861,6 @@ def _read_occupant(root: str, n: int, timeout: float) -> Optional[dict]:
             if time.time() >= deadline:
                 return None
             time.sleep(0.05)
-
-
-def _marker_json(
-    n: int, payload: Optional[dict], writer_nonce: Optional[str] = None
-) -> str:
-    """The marker document — single source for BOTH publish paths
-    (single-writer ``_write_marker``, OCC ``_publish_exclusive``), so a
-    schema addition like ``committed_at`` can never again land in one
-    path only.  ``writer_nonce`` (OCC publishes) is the per-call id
-    that lets a publisher recognise its OWN marker after a lost-ack /
-    duplicated conditional put (round 14) — distinct from any
-    caller-supplied ``meta`` key."""
-    import time
-
-    doc = {"version": n, "committed_at": time.time(), **(payload or {})}
-    if writer_nonce is not None:
-        doc["writer_nonce"] = writer_nonce
-    return json.dumps(doc)
 
 
 def _shape_for_write(
@@ -1420,7 +1414,7 @@ def vacuum(root: str, keep: int = 1) -> "list[int]":
                 if not _is_fence_marker(root, k):
                     # fence BEFORE the rmtree (round-14 review): the
                     # marker slot is empty here, so a stalled
-                    # claimant's late _publish_exclusive could still
+                    # claimant's late _write_marker could still
                     # land between this delete and the claim sweep's
                     # fence below (or after a vacuum crash between the
                     # two) — a marker pointing at data this very
@@ -1474,7 +1468,7 @@ def vacuum(root: str, keep: int = 1) -> "list[int]":
                     continue
                 # FENCE before removing a dead writer's claim (round-14
                 # review): with the claim gone and the marker slot
-                # EMPTY, the stalled claimant's late _publish_exclusive
+                # EMPTY, the stalled claimant's late _write_marker
                 # put would SUCCEED — landing a version the chain
                 # skipped, the exact silent late-publish the fence
                 # mechanism closes.  A lost fence race means the
@@ -1744,34 +1738,6 @@ def _rename_snapshot(tmp: str, snap: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.isdir(snap):
             raise
-
-
-def _clear_uncommitted_snapshot(root: str, n: int) -> None:
-    """Remove an orphan ``v<n>`` left by a crashed single-writer step
-    (dir present, marker absent) so the caller writes FRESH data for
-    its own marker.  The data-deriving commit paths (bucketed MERGE,
-    compaction, MoR deletes) must never attach a new marker to a stale
-    dir: the dir may hold a DIFFERENT call's output — a different
-    predicate's delete keys, a different max_files compaction — which
-    is the round-10 'marker over another call's data' silent-wrong-data
-    class, and for bucketed MERGE the stray-bucket guard would
-    otherwise reject the stale dir FOREVER (vacuum can't sweep an
-    orphan at a never-superseded version number), wedging the table
-    (round-11 review).  A marker-less dir is invisible to every reader
-    and these paths are documented single-writer, so removal is safe."""
-    snap = os.path.join(root, f"v{n}")
-    if os.path.isdir(snap) and not _marker_exists(root, n):
-        shutil.rmtree(snap, ignore_errors=True)
-        if os.path.isdir(snap):
-            # A partially-failed removal must not fall through: the
-            # caller's `if not os.path.isdir(snap)` would skip ITS write
-            # and attach a fresh marker to this stale orphan — the exact
-            # silent-wrong-data class this helper exists to prevent
-            # (round-12 ADVICE).
-            raise OSError(
-                f"could not clear stale uncommitted snapshot {snap} — "
-                "refusing to risk committing a marker over foreign data"
-            )
 
 
 def commit_bucketed(
@@ -2182,12 +2148,16 @@ def merge_into_bucketed(
     meta: Optional[dict] = None,
     strict_source_keys: bool = False,
     matched_delete: Optional[str] = None,
+    max_retries: int = 5,
+    marker_timeout: float = 30.0,
 ) -> int:
-    """Bucket-scoped copy-on-write MERGE (round 11): run ``merge_into``
-    against ONLY the buckets the source touches, publish the result as
-    the next version, and carry every untouched bucket into the new
-    version's manifest BY REFERENCE (same physical files — zero bytes
-    rewritten, zero bytes read).
+    """Bucket-scoped copy-on-write MERGE (round 11) with OCC write-set
+    conflict detection (round 12): run ``merge_into`` against ONLY the
+    buckets the source touches, publish the result as the next version,
+    and carry every untouched bucket into the new version's manifest BY
+    REFERENCE (same physical files — zero bytes rewritten, zero bytes
+    read).  The one bucketed MERGE: single callers and concurrent
+    writers, merges and maintenance commits all share a table safely.
 
     Correctness: the bucket function is applied to the MERGE key, so a
     source row's output — matched update or insert — lands by
@@ -2197,11 +2167,56 @@ def merge_into_bucketed(
     metadata (a caller cannot merge on a non-bucket key and silently
     break the layout invariant).
 
-    Scale: this is the write-amplification fix the table-granularity
-    path documents — a MERGE whose change set hits k of B buckets reads
-    and rewrites k/B of the table instead of all of it.  The touched-
-    bucket set is computed with one map-side-combined distinct over the
-    source's derived bucket id (≤ B tiny rows to the driver).
+    Protocol, per attempt:
+
+    1. read ``base = latest_version`` and compute the merge against
+       base's touched buckets, writing the rewritten buckets to a
+       writer-private temp dir (a source that touches no bucket writes
+       nothing: the empty temp dir becomes the no-op version);
+    2. claim the next version with an if-absent ``_claims/<n>`` put on
+       the CommitStore (round 14 — conditional put, object-store
+       ready); the claim winner then materializes ``v<n>`` from the
+       temp, uncontended;
+    3. on claim loss at ``n``, read the INTERVENING commit's marker
+       (awaiting it up to ``marker_timeout`` if the rival is
+       mid-publish; a claimant silent past it is fenced and skipped)
+       and compare write-sets: its recorded ``touched_buckets``
+       (merges) / ``compacted_buckets`` (compactions) against ours —
+
+       * DISJOINT and same bucket spec → REBASE: our rewritten buckets
+         are still valid (the rival provably did not modify them — its
+         manifest carries them by reference, immutable files), so
+         adopt the rival's manifest as the new base manifest, advance
+         ``n``, and retry the claim.  Zero recompute, zero rewrite —
+         for bucketed tables the rebase is a manifest union;
+       * OVERLAPPING (or a write-set-less commit kind, or a changed
+         bucket spec: conservative) → ABORT-AND-RETRY: discard the
+         temp and re-run the whole merge from the new latest version,
+         up to ``max_retries`` times, then raise ``MergeConflictError``
+         (the table is never corrupted — no marker was published);
+
+    4. publish the marker if-absent (``_write_marker``), recording
+       ``read_base`` (the version the merge was computed from),
+       ``base_version`` (the version it chains after) and
+       ``touched_buckets`` (this writer's write-set, which is what
+       future rivals check against).
+
+    This is Delta/Iceberg OCC reduced to its essence: optimistic
+    execution, conflict detection on logical write-sets at commit time,
+    cheap rebase when the physical work is still valid.  Both writers'
+    changes are present in the final latest version whenever commits
+    succeed — the "no lost update" claim at TABLE semantics level,
+    tested with genuinely concurrent writers in
+    tests/test_mergetable.py.
+
+    Scale: a MERGE whose change set hits k of B buckets reads and
+    rewrites k/B of the table instead of all of it; the touched-bucket
+    set is one map-side-combined distinct over the source's derived
+    bucket id (≤ B tiny rows to the driver).  A rebase costs one marker
+    read + one rename retry (no data touched) — so N concurrent merges
+    over disjoint bucket sets serialize with N-1 rebases and exactly N
+    bucket rewrites total.  Recompute is paid only on true overlap,
+    where it is the price of correctness.
 
     ``matched_delete`` is supported (a matched row's bucket is touched
     by construction, so the delete lands inside the rewrite set);
@@ -2212,54 +2227,67 @@ def merge_into_bucketed(
     ``commit_bucketed`` path, which prices the full rewrite honestly.
 
     Returns the committed version number."""
-    base = latest_version(root)
-    if base is None:
-        raise FileNotFoundError(f"no committed version under {root}")
-    bmeta = commit_meta(root, base)
-    man, spec = bmeta.get("manifest"), bmeta.get("bucket")
-    if not man or not spec:
-        raise ValueError(
-            f"version {base} of {root} is not bucketed — use merge_into + "
-            "commit_snapshot"
-        )
-    keys, expr = list(spec["on"]), spec["expr"]
-    source, sample = _cast_source_to_table(spark, root, man, keys, source)
-    touched_set = _touched_buckets(source, expr, keys)
-    n_new = base + 1
-    while _is_fence_marker(root, n_new):
-        # fenced dead-claimant slots above the latest commit (a fencer
-        # that crashed before publishing its own commit) are
-        # permanently retired — skip them exactly like the OCC claim
-        # loop does (round-13 review: writing here would attach a
-        # marker to the dead claimant's orphan data)
-        n_new += 1
-    # a marker-less orphan at n_new (crashed merge OR crashed
-    # compaction) may hold foreign buckets — reusing it would trip the
-    # stray-bucket guard forever and wedge the table (round-11 review);
-    # clear it and write this merge's own output
-    _clear_uncommitted_snapshot(root, n_new)
-    snap = os.path.join(root, f"v{n_new}")
-    tgt_paths = [
-        os.path.join(root, man[b]) for b in sorted(touched_set & set(man))
-    ]
-    if tgt_paths:
-        tgt = spark.read.parquet(*tgt_paths)
-    else:
-        # no touched bucket has target data: all-insert merge against an
-        # empty target with the table's schema (footer-only read)
-        tgt = sample.limit(0)
-    if touched_set:
-        merged = merge_into(
-            tgt,
-            source,
-            on=keys if len(keys) > 1 else keys[0],
-            matched_update=matched_update,
-            not_matched_insert=not_matched_insert,
-            strict_source_keys=strict_source_keys,
-            matched_delete=matched_delete,
-        )
-        if not os.path.isdir(snap):
-            tmp = f"{snap}.tmp{os.getpid()}"
+    import uuid
+
+    # one temp name per call: a merge started inside another merge's
+    # claim window (same pid, thread and base) must not share its dir
+    call = uuid.uuid4().hex
+    attempts = 0
+    checked_keys: "Optional[List[Tuple[str, str]]]" = None
+    while True:
+        base = latest_version(root)
+        if base is None:
+            raise FileNotFoundError(f"no committed version under {root}")
+        bmeta = commit_meta(root, base)
+        man, spec = bmeta.get("manifest"), bmeta.get("bucket")
+        if not man or not spec:
+            raise ValueError(
+                f"version {base} of {root} is not bucketed — use "
+                "merge_into + commit_snapshot_exclusive"
+            )
+        keys, expr = list(spec["on"]), spec["expr"]
+        src, sample = _cast_source_to_table(spark, root, man, keys, source)
+        # memo on (name, CAST TYPE), not names alone (round-14 review):
+        # a conflict retry re-casts the source to the NEW base's key
+        # types, and a retyped key (e.g. DOUBLE -> BIGINT) can collapse
+        # distinct source keys into duplicates — re-validate whenever
+        # the cast changes, skip only true repeats.
+        src_key_sig = [
+            (f.name, f.dataType.simpleString())
+            for f in src.schema.fields
+            if f.name in keys
+        ]
+        if strict_source_keys and checked_keys != src_key_sig:
+            # once per (MERGE call, key cast), not per conflict retry
+            # (round 14): the source never changes across retries, so
+            # re-running the dup guard was a pure extra scan of the
+            # change set — at 100 TB change sets, the one the r13
+            # sweep priced
+            _assert_unique_source_keys(src, keys)
+            checked_keys = src_key_sig
+        touched_set = _touched_buckets(src, expr, keys)
+        tmp = os.path.join(root, f".tmpm{os.getpid()}-{call}-{attempts}")
+        if touched_set:
+            tgt_paths = [
+                os.path.join(root, man[b])
+                for b in sorted(touched_set & set(man))
+            ]
+            # no touched bucket with target data: all-insert merge
+            # against an empty target with the table's schema
+            tgt = (
+                spark.read.parquet(*tgt_paths)
+                if tgt_paths
+                else sample.limit(0)
+            )
+            merged = merge_into(
+                tgt,
+                src,
+                on=keys if len(keys) > 1 else keys[0],
+                matched_update=matched_update,
+                not_matched_insert=not_matched_insert,
+                strict_source_keys=False,  # hoisted above the retry loop
+                matched_delete=matched_delete,
+            )
             # rewritten buckets keep the table's recorded sort layout
             # (stats-key sort or within-bucket Z-order) so refreshed
             # stats stay as tight as the original commit's
@@ -2269,39 +2297,74 @@ def merge_into_bucketed(
             shaped.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(
                 tmp
             )
-            _rename_snapshot(tmp, snap)
-    else:
-        os.makedirs(snap, exist_ok=True)  # empty change set: no-op version
-    written = _manifest_from_snapshot(root, n_new)
-    stray = sorted(set(written) - touched_set)
-    if stray:
-        # belt-and-braces for the invariant above: a merged row landing
-        # outside the touched set would shadow a by-reference bucket
-        # with a partial rewrite — refuse to commit (marker unwritten,
-        # snapshot invisible) rather than lose data silently
-        raise ValueError(
-            f"bucketed MERGE produced rows in untouched bucket(s) "
-            f"{stray} — bucket function/type drift; commit aborted "
-            "before the marker"
+        else:
+            os.makedirs(tmp)  # empty change set: no-op version, no job
+        written_names = {
+            x.split("=", 1)[1]
+            for x in os.listdir(tmp)
+            if x.startswith(f"{_BUCKET_COL}=")
+        }
+        stray = sorted(written_names - touched_set)
+        if stray:
+            # belt-and-braces for the invariant above: a merged row
+            # landing outside the touched set would shadow a
+            # by-reference bucket with a partial rewrite — refuse to
+            # commit rather than lose data silently
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise ValueError(
+                f"bucketed MERGE produced rows in untouched bucket(s) "
+                f"{stray} — bucket function/type drift; commit aborted "
+                "before the claim"
+            )
+        try:
+            claimed = _claim_merge_version(
+                root, base, bmeta, touched_set, spec, tmp, marker_timeout
+            )
+        except BaseException:
+            # every deliberate exit path removes tmp itself; this belt
+            # covers unexpected raises so a full bucket rewrite never
+            # leaks to disk (vacuum deliberately ignores non-v<n> dirs)
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if claimed is None:
+            attempts += 1
+            if attempts > max_retries:
+                raise MergeConflictError(
+                    f"concurrent MERGE on {root} aborted after "
+                    f"{max_retries} retries: every attempt found an "
+                    "intervening commit whose write-set overlaps "
+                    f"{sorted(touched_set)}"
+                )
+            continue
+        n, newest_meta = claimed
+        base_man = newest_meta["manifest"]
+        written = _manifest_from_snapshot(root, n)
+        new_man = {
+            b: rel for b, rel in base_man.items() if b not in touched_set
+        }
+        new_man.update(written)
+        payload = {
+            "manifest": new_man,
+            "bucket": spec,
+            # the newest COMMITTED version this commit chains after —
+            # NOT n-1, which may be a skipped dead-claimant orphan
+            # (round-12 review)
+            "base_version": newest_meta.get("version", base),
+            "read_base": base,
+            "touched_buckets": sorted(touched_set),
+            **(meta or {}),
+        }
+        # carry every recorded stats family forward (round 11 / round
+        # 13): fresh footer min/max for rewritten buckets, recorded
+        # entries for by-reference ones — so key_range= AND ranges=
+        # reads keep working across merges, as the commit_bucketed
+        # docstring promises
+        _apply_carried_stats(
+            payload, root, newest_meta, new_man,
+            sorted(written.values()), spec,
         )
-    new_man = {b: rel for b, rel in man.items() if b not in touched_set}
-    new_man.update(written)
-    payload = {
-        "manifest": new_man,
-        "bucket": spec,
-        "base_version": base,
-        "touched_buckets": sorted(touched_set),
-        **(meta or {}),
-    }
-    # carry every recorded stats family forward (round 11 / round 13):
-    # fresh footer min/max for rewritten buckets, recorded entries for
-    # by-reference ones — so key_range= AND ranges= reads keep working
-    # across merges, as the commit_bucketed docstring promises
-    _apply_carried_stats(
-        payload, root, bmeta, new_man, sorted(written.values()), spec
-    )
-    _write_marker(root, n_new, payload)
-    return n_new
+        _write_marker(root, n, payload, exc=MergeConflictError)
+        return n
 
 
 def commit_mor_delete(
@@ -2391,7 +2454,7 @@ def commit_mor_delete(
                 )
             continue
         n, _ = claimed
-        _publish_exclusive(
+        _write_marker(
             root,
             n,
             {
@@ -2462,7 +2525,7 @@ def compact_mor(
                 )
             continue
         n, _ = claimed
-        _publish_exclusive(
+        _write_marker(
             root,
             n,
             _stats_payload(
@@ -2564,7 +2627,7 @@ def optimize_zorder(
                 )
             continue
         n, _ = claimed
-        _publish_exclusive(
+        _write_marker(
             root,
             n,
             _stats_payload(
@@ -2851,7 +2914,7 @@ def compact_buckets(
     carried forward for referenced ones.
 
     CONCURRENT-SAFE (round 13, r12 VERDICT item 1): compaction commits
-    through the same OCC protocol as ``merge_into_bucketed_exclusive``
+    through the same OCC protocol as ``merge_into_bucketed``
     — private temp write, atomic rename claim, if-absent marker link —
     with ``compacted_buckets`` as its write-set.  Racing a live OCC
     merge, a compaction either REBASES (the merge touched other
@@ -2964,7 +3027,7 @@ def compact_buckets(
             payload, root, newest_meta, new_man,
             sorted(written.values()), spec,
         )
-        _publish_exclusive(root, n, payload, exc=MergeConflictError)
+        _write_marker(root, n, payload, exc=MergeConflictError)
         return n
 
 
@@ -3091,7 +3154,7 @@ def commit_snapshot_exclusive(
     past ``marker_timeout``.  Only the claim winner materializes
     ``v<n>`` and publishes marker ``n`` via the store's conditional
     put; a lost publish is disambiguated by writer nonce and never
-    swallowed (see ``_publish_exclusive``).
+    swallowed (see ``_write_marker``).
 
     Two writers racing the same next version therefore both land, as
     ``v_n`` and ``v_{n+1}``, each marker describing its own writer's
@@ -3101,7 +3164,7 @@ def commit_snapshot_exclusive(
     snapshot without seeing ``v_n``'s changes, so a reader of the
     latest version sees only the later writer's view.  Writers whose
     snapshots are DERIVED from the table (MERGE) and need lost-update
-    prevention must use ``merge_into_bucketed_exclusive``, which adds
+    prevention must use ``merge_into_bucketed``, which adds
     OCC write-set conflict detection on top of this claim loop.  Crash
     windows are the same as
     ``commit_snapshot``: before the rename, an invisible temp; between
@@ -3140,7 +3203,7 @@ def commit_snapshot_exclusive(
         root, max(taken, default=-1), {}, tmp, marker_timeout,
         lambda m_meta: True,
     )
-    _publish_exclusive(
+    _write_marker(
         root, n, _stats_payload(root, n, stats_key, meta, stats_cols)
     )
     return n
@@ -3257,7 +3320,7 @@ def restore_table(
         payload["file_stats"] = tmeta["file_stats"]
     if tmeta.get("file_stats_cols"):
         payload["file_stats_cols"] = tmeta["file_stats_cols"]
-    _publish_exclusive(root, n, payload)
+    _write_marker(root, n, payload)
     return n
 
 
@@ -3359,7 +3422,7 @@ def clone_shallow(
 
 
 # ---------------------------------------------------------------------------
-# OCC concurrent MERGE (round 12, r11 VERDICT item 1)
+# the OCC claim loop: version-slot claims, fences, write-set policy
 # ---------------------------------------------------------------------------
 
 
@@ -3413,245 +3476,6 @@ def _publish_fence(root: str, n: int) -> bool:
             {"fenced": True, "version": n, "fenced_at": time.time()}
         ).encode(),
     )
-
-
-def _publish_exclusive(
-    root: str, n: int, payload: dict, exc: type = RuntimeError
-) -> None:
-    """Publish version ``n``'s marker with atomic IF-ABSENT semantics
-    (the CommitStore put — the one publish primitive every OCC commit
-    kind shares; round 13 brought the maintenance commits onto it too,
-    so NO code path can replace a published marker).
-
-    A lost put is never swallowed blindly — but on a conditional-put
-    store it is AMBIGUOUS (round 14): "someone else occupies the slot"
-    and "my own put landed but the ack was lost/duplicated by a
-    transport retry" report identically.  The marker therefore carries
-    a per-call ``writer_nonce``; on a lost put the occupant is read
-    back (polling briefly — visibility may lag the put on an
-    eventually-consistent store) and classified: OUR nonce → the
-    publish succeeded, return; a fence tombstone → this writer was
-    declared dead mid-publish (raised as ``exc`` — the commit did NOT
-    land; the caller may retry); any other occupant means a foreign
-    marker points at OUR claimed snapshot, which is protocol
-    corruption."""
-    import uuid
-
-    nonce = uuid.uuid4().hex
-    st = commit_store_for(root)
-    if st.put_if_absent(
-        f"_commits/{n}", _marker_json(n, payload, writer_nonce=nonce).encode()
-    ):
-        _maybe_checkpoint(root, n)
-        return
-    # put reported "occupied": the occupant MUST become readable
-    # (possibly our own put, under visibility lag) — one shared poll
-    # helper with _write_marker, so the dance cannot drift
-    occ = _read_occupant(root, n, 5.0)
-    if occ is None:
-        raise RuntimeError(
-            f"commit protocol violation: marker slot {n} of "
-            f"{root} reported occupied but no occupant became "
-            "readable"
-        )
-    if occ.get("writer_nonce") == nonce:
-        _maybe_checkpoint(root, n)
-        return  # our own earlier put landed; only the ack was lost
-    if occ.get("fenced"):
-        raise exc(
-            f"fenced out: this writer stalled longer than a rival "
-            f"OCC writer's marker_timeout between claiming v{n} "
-            "and publishing its marker, and was declared dead — "
-            "the commit did NOT land (table state unchanged by "
-            "it); retry"
-        )
-    raise RuntimeError(
-        f"commit protocol violation: marker {n} appeared under a "
-        f"snapshot owned by this writer in {root}"
-    )
-
-
-def merge_into_bucketed_exclusive(
-    spark: SparkSession,
-    root: str,
-    source: SDF,
-    matched_update: Dict[str, str],
-    not_matched_insert: Dict[str, str],
-    meta: Optional[dict] = None,
-    strict_source_keys: bool = False,
-    matched_delete: Optional[str] = None,
-    max_retries: int = 5,
-    marker_timeout: float = 30.0,
-) -> int:
-    """MULTI-WRITER bucket-scoped MERGE with OCC write-set conflict
-    detection (round 12, r11 VERDICT item 1) — the lost-update fix for
-    concurrent MERGEs that ``commit_snapshot_exclusive`` alone cannot
-    provide (it sequences snapshots durably, but a merge that lost the
-    claim still derived its state from a stale base).
-
-    Protocol, per attempt:
-
-    1. read ``base = latest_version`` and compute the merge against
-       base's touched buckets, writing the rewritten buckets to a
-       writer-private temp dir (clauses and layout identical to
-       ``merge_into_bucketed``);
-    2. claim the next version with an if-absent ``_claims/<n>`` put on
-       the CommitStore (round 14 — conditional put, object-store
-       ready); the claim winner then materializes ``v<n>`` from the
-       temp, uncontended;
-    3. on claim loss at ``n``, read the INTERVENING commit's marker
-       (awaiting it briefly if the rival is mid-publish) and compare
-       write-sets: its recorded ``touched_buckets`` (merges) /
-       ``compacted_buckets`` (compactions) against ours —
-
-       * DISJOINT and same bucket spec → REBASE: our rewritten buckets
-         are still valid (the rival provably did not modify them — its
-         manifest carries them by reference, immutable files), so
-         adopt the rival's manifest as the new base manifest, advance
-         ``n``, and retry the claim.  Zero recompute, zero rewrite —
-         for bucketed tables the rebase is a manifest union;
-       * OVERLAPPING (or a write-set-less commit kind, or a changed
-         bucket spec: conservative) → ABORT-AND-RETRY: discard the
-         temp and re-run the whole merge from the new latest version,
-         up to ``max_retries`` times, then raise ``MergeConflictError``
-         (the table is never corrupted — no marker was published);
-
-    4. publish the marker if-absent (the CommitStore put), recording
-       ``read_base`` (the version the merge was computed from),
-       ``base_version`` (the version it chains after) and
-       ``touched_buckets`` (this writer's write-set, which is what
-       future rivals check against).
-
-    This is Delta/Iceberg OCC reduced to its essence: optimistic
-    execution, conflict detection on logical write-sets at commit time,
-    cheap rebase when the physical work is still valid.  Both writers'
-    changes are present in the final latest version whenever commits
-    succeed — the "no lost update" claim at TABLE semantics level,
-    tested with genuinely concurrent writers in
-    tests/test_mergetable.py.
-
-    Scale: a rebase costs one marker read + one rename retry (no data
-    touched) — so N concurrent merges over disjoint bucket sets, the
-    common case for partitioned ingest, serialize with N-1 rebases and
-    exactly N bucket rewrites total.  Recompute is paid only on true
-    overlap, where it is the price of correctness.
-
-    Returns the committed version number."""
-    import threading
-
-    attempts = 0
-    checked_keys: "Optional[List[Tuple[str, str]]]" = None
-    while True:
-        base = latest_version(root)
-        if base is None:
-            raise FileNotFoundError(f"no committed version under {root}")
-        bmeta = commit_meta(root, base)
-        man, spec = bmeta.get("manifest"), bmeta.get("bucket")
-        if not man or not spec:
-            raise ValueError(
-                f"version {base} of {root} is not bucketed — use "
-                "merge_into + commit_snapshot_exclusive"
-            )
-        keys, expr = list(spec["on"]), spec["expr"]
-        src, sample = _cast_source_to_table(spark, root, man, keys, source)
-        # memo on (name, CAST TYPE), not names alone (round-14 review):
-        # a conflict retry re-casts the source to the NEW base's key
-        # types, and a retyped key (e.g. DOUBLE -> BIGINT) can collapse
-        # distinct source keys into duplicates — re-validate whenever
-        # the cast changes, skip only true repeats.
-        src_key_sig = [
-            (f.name, f.dataType.simpleString())
-            for f in src.schema.fields
-            if f.name in keys
-        ]
-        if strict_source_keys and checked_keys != src_key_sig:
-            # once per (MERGE call, key cast), not per conflict retry
-            # (round 14): the source never changes across retries, so
-            # re-running the dup guard was a pure extra scan of the
-            # change set — at 100 TB change sets, the one the r13
-            # sweep priced
-            _assert_unique_source_keys(src, keys)
-            checked_keys = src_key_sig
-        touched_set = _touched_buckets(src, expr, keys)
-        tgt_paths = [
-            os.path.join(root, man[b])
-            for b in sorted(touched_set & set(man))
-        ]
-        tgt = spark.read.parquet(*tgt_paths) if tgt_paths else sample.limit(0)
-        merged = merge_into(
-            tgt,
-            src,
-            on=keys if len(keys) > 1 else keys[0],
-            matched_update=matched_update,
-            not_matched_insert=not_matched_insert,
-            strict_source_keys=False,  # hoisted above the retry loop
-            matched_delete=matched_delete,
-        )
-        tmp = os.path.join(
-            root,
-            f".tmpm{os.getpid()}-{threading.get_ident()}-{base}-{attempts}",
-        )
-        shaped = _shape_bucket_rewrite(
-            merged.withColumn(_BUCKET_COL, F.expr(expr)), spec
-        )
-        shaped.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
-        written_names = {
-            x.split("=", 1)[1]
-            for x in os.listdir(tmp)
-            if x.startswith(f"{_BUCKET_COL}=")
-        }
-        stray = sorted(written_names - touched_set)
-        if stray:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(
-                f"bucketed MERGE produced rows in untouched bucket(s) "
-                f"{stray} — bucket function/type drift; commit aborted "
-                "before the claim"
-            )
-        try:
-            claimed = _claim_merge_version(
-                root, base, bmeta, touched_set, spec, tmp, marker_timeout
-            )
-        except BaseException:
-            # every deliberate exit path removes tmp itself; this belt
-            # covers unexpected raises so a full bucket rewrite never
-            # leaks to disk (vacuum deliberately ignores non-v<n> dirs)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if claimed is None:
-            attempts += 1
-            if attempts > max_retries:
-                raise MergeConflictError(
-                    f"concurrent MERGE on {root} aborted after "
-                    f"{max_retries} retries: every attempt found an "
-                    "intervening commit whose write-set overlaps "
-                    f"{sorted(touched_set)}"
-                )
-            continue
-        n, newest_meta = claimed
-        base_man = newest_meta["manifest"]
-        written = _manifest_from_snapshot(root, n)
-        new_man = {
-            b: rel for b, rel in base_man.items() if b not in touched_set
-        }
-        new_man.update(written)
-        payload = {
-            "manifest": new_man,
-            "bucket": spec,
-            # the newest COMMITTED version this commit chains after —
-            # NOT n-1, which may be a skipped dead-claimant orphan
-            # (round-12 review)
-            "base_version": newest_meta.get("version", base),
-            "read_base": base,
-            "touched_buckets": sorted(touched_set),
-            **(meta or {}),
-        }
-        _apply_carried_stats(
-            payload, root, newest_meta, new_man,
-            sorted(written.values()), spec,
-        )
-        _publish_exclusive(root, n, payload, exc=MergeConflictError)
-        return n
 
 
 def _claim_exists(root: str, n: int) -> bool:
@@ -3721,8 +3545,11 @@ def _claim_slot(
     past ``marker_timeout`` gets a fence tombstone so its late publish
     fails loudly instead of silently landing below this commit.  A
     bare ``v<n>`` dir without claim or marker is treated as a claimed
-    slot too (a pre-round-14 orphan, or a single-writer path's dir):
-    await → fence → skip, same as before.
+    slot too — a crashed writer's orphan, or the dir of a
+    ``commit_snapshot`` / ``commit_bucketed`` call, which picks its own
+    version number without a claim: await → fence → skip.  Writers
+    never delete such a dir (it may be a live rival's unpublished
+    snapshot); vacuum sweeps it once superseded.
 
     Returns ``(n, newest_meta)`` on a successful claim (``newest_meta``
     is ``bmeta`` when nothing intervened), or ``None`` on conflict
@@ -3754,8 +3581,8 @@ def _claim_slot(
                         shutil.rmtree(tmp, ignore_errors=True)
                         raise
                     # v<n> appeared between the isdir probe and the
-                    # rename: a SINGLE-WRITER commit (caller-chosen n,
-                    # no claim) landed in the window.  Mixed usage is a
+                    # rename: a caller-numbered commit (commit_snapshot
+                    # / commit_bucketed, no claim) landed in the window.  Mixed usage is a
                     # documented protocol violation, but the
                     # pre-round-14 loop degraded gracefully (lost race,
                     # retry at n+1) and aborting here would regress

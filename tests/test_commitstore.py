@@ -163,7 +163,7 @@ def laggy_store():
 
 def test_single_writer_commits_survive_total_ack_loss(spark, tmp_path):
     """With EVERY put's ack lost, commit_snapshot / commit_bucketed /
-    single-writer merge still commit exactly once: _write_marker reads
+    bucketed merge still commit exactly once: _write_marker reads
     the occupant back and recognises its own writer_nonce."""
     import dataframe_expressions_spark.sources.mergetable as mt
 
@@ -213,7 +213,7 @@ def test_occ_merge_survives_total_ack_loss(spark, tmp_path):
     tm._mk_occ_base(spark, root)  # built on the clean store
     _install(dict(ack_loss_every=1))
     try:
-        n = mt.merge_into_bucketed_exclusive(
+        n = mt.merge_into_bucketed(
             spark, root, tm._occ_chg(spark, [0, 8], 5.0), **tm._OCC_CLAUSES
         )
         assert n == 1
@@ -245,7 +245,7 @@ def test_occ_merge_under_cross_client_lag(spark, tmp_path, laggy_store):
         try:
             chg = tm._occ_chg(spark, keys, amt)
             barrier.wait(timeout=120)
-            results[tag] = mt.merge_into_bucketed_exclusive(
+            results[tag] = mt.merge_into_bucketed(
                 spark, root, chg, meta={"writer": tag}, **tm._OCC_CLAUSES
             )
         except Exception as e:  # noqa: BLE001 - surfaced via the assert

@@ -1482,7 +1482,7 @@ def test_write_verbs_delegate_to_mergetable(spark, tmp_path):
     # direct path
     root_a = str(tmp_path / "direct")
     mt.commit_bucketed(v0, root_a, 0, on="k", n_buckets=4, hashed=False)
-    mt.merge_into_bucketed_exclusive(spark, root_a, chg, **clauses)
+    mt.merge_into_bucketed(spark, root_a, chg, **clauses)
 
     # DSL path — lowering IS the action boundary
     root_b = str(tmp_path / "dsl")

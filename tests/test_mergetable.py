@@ -1559,9 +1559,10 @@ def test_feed_since_caught_up_returns_empty_frame(spark, tmp_path):
 def test_crashed_compaction_orphan_does_not_wedge_merges(spark, tmp_path):
     """A compact_buckets crash between snapshot rename and marker write
     leaves a marker-less orphan at the NEXT version number; a subsequent
-    bucketed MERGE must clear it and commit its own data (round-11
-    review: the stray-bucket guard would otherwise reject the stale dir
-    forever, wedging the table)."""
+    bucketed MERGE must fence it after marker_timeout and commit its own
+    data past it, never adopting the orphan's buckets (round-11 review:
+    the stray-bucket guard would otherwise reject the stale dir forever,
+    wedging the table)."""
     from dataframe_expressions_spark.sources.mergetable import (
         commit_bucketed,
         merge_into_bucketed,
@@ -1589,10 +1590,12 @@ def test_crashed_compaction_orphan_does_not_wedge_merges(spark, tmp_path):
         spark, root, src,
         matched_update={"bal": "t.bal + s.delta"},
         not_matched_insert={"bal": "s.delta"},
+        marker_timeout=0.3,
     )
-    assert n == 1
-    got = {r.k: r.bal for r in read_bucketed(spark, root, 1).collect()}
+    assert n == 2
+    got = {r.k: r.bal for r in read_bucketed(spark, root, 2).collect()}
     assert got[0] == 100.0 and len(got) == 16
+    assert [got[k] for k in (2, 3, 7)] == [2.0, 3.0, 7.0]  # orphan unseen
 
 
 def test_feed_column_collisions_raise(spark, tmp_path):
@@ -1726,7 +1729,7 @@ def test_occ_merge_rebase_on_disjoint_intervening(spark, tmp_path,
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
 
     monkeypatch.setattr(mt, "_claim_merge_version", hooked)
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
     assert n == 2 and fired["n"] == 1
@@ -1763,7 +1766,7 @@ def test_occ_merge_recompute_on_overlap(spark, tmp_path, monkeypatch):
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
 
     monkeypatch.setattr(mt, "_claim_merge_version", hooked)
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
     assert n == 2 and fired["n"] == 1
@@ -1795,15 +1798,24 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
     _mk_occ_base(spark, root)
     orig = mt._claim_merge_version
 
+    in_rival = []
+
     def always_rival(root_, base, bmeta, touched, spec, tmp, timeout):
-        mt.merge_into_bucketed(
-            spark, root_, _occ_chg(spark, [0], 1.0), **_OCC_CLAUSES
-        )
+        # the rival's own merge claims through this hook too: let it
+        # claim unhooked instead of spawning a rival of its own
+        if not in_rival:
+            in_rival.append(True)
+            try:
+                mt.merge_into_bucketed(
+                    spark, root_, _occ_chg(spark, [0], 1.0), **_OCC_CLAUSES
+                )
+            finally:
+                in_rival.pop()
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
 
     monkeypatch.setattr(mt, "_claim_merge_version", always_rival)
     with pytest.raises(MergeConflictError):
-        mt.merge_into_bucketed_exclusive(
+        mt.merge_into_bucketed(
             spark,
             root,
             _occ_chg(spark, [0, 8], 5.0),
@@ -1834,7 +1846,7 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
 
     monkeypatch.setattr(mt, "_claim_merge_version", full_rewrite_rival)
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
     assert n == v_after + 2 and fired["n"] == 1
@@ -1868,7 +1880,7 @@ def test_occ_merge_rejects_rebucketed_rival(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(mt, "_claim_merge_version", rebucket_rival)
     with pytest.raises(ValueError, match="bucket spec"):
-        mt.merge_into_bucketed_exclusive(
+        mt.merge_into_bucketed(
             spark, root, _occ_chg(spark, [0], 5.0), **_OCC_CLAUSES
         )
     assert not [x for x in os.listdir(root) if x.startswith(".tmpm")]
@@ -1892,7 +1904,7 @@ def test_occ_merge_genuinely_concurrent_writers(spark, tmp_path):
         try:
             chg = _occ_chg(spark, keys, amt)
             barrier.wait(timeout=120)
-            results[tag] = mt.merge_into_bucketed_exclusive(
+            results[tag] = mt.merge_into_bucketed(
                 spark, root, chg, meta={"writer": tag}, **_OCC_CLAUSES
             )
         except Exception as e:  # noqa: BLE001 - surfaced via the assert
@@ -1970,7 +1982,7 @@ def test_occ_restore_racing_merge_both_land(spark, tmp_path):
         try:
             chg = _occ_chg(spark, [0, 8], 5.0)
             barrier.wait(timeout=120)
-            results["merge"] = mt.merge_into_bucketed_exclusive(
+            results["merge"] = mt.merge_into_bucketed(
                 spark, root, chg, meta={"writer": "merge"}, **_OCC_CLAUSES
             )
         except Exception as e:  # noqa: BLE001 - surfaced via the assert
@@ -2058,7 +2070,7 @@ def test_occ_compact_racing_merge_both_land(spark, tmp_path):
         try:
             chg = _occ_chg(spark, [0, 8], 5.0)
             barrier.wait(timeout=120)
-            results["merge"] = mt.merge_into_bucketed_exclusive(
+            results["merge"] = mt.merge_into_bucketed(
                 spark, root, chg, meta={"writer": "merge"}, **_OCC_CLAUSES
             )
         except Exception as e:  # noqa: BLE001 - surfaced via the assert
@@ -2442,7 +2454,7 @@ def test_occ_merge_skips_dead_claimant_orphan(spark, tmp_path):
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root)
     os.makedirs(os.path.join(root, "v1"))  # dead claimant's orphan
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0], 5.0),
         marker_timeout=0.3, **_OCC_CLAUSES,
     )
@@ -2505,6 +2517,82 @@ def test_occ_merge_skips_dead_claimant_orphan(spark, tmp_path):
     os.unlink(late2)
     # and the fenced slot stays invisible to every reader
     assert mt.committed_versions(root) == [0, 2]
+
+
+def test_merge_never_clears_a_live_rivals_unpublished_snapshot(
+    spark, tmp_path, monkeypatch
+):
+    """A rival that has claimed v1 and written its snapshot but not yet
+    published its marker is alive, not crashed: a bucketed MERGE
+    arriving in that window must await the rival's marker, then rebase
+    past it (disjoint write-sets) — never delete the rival's v1 data.
+    The rival's commit survives and both changes are in the latest
+    version."""
+    import threading
+
+    import dataframe_expressions_spark.sources.mergetable as mt
+    from pyspark.sql import functions as F  # noqa: N812
+
+    root = str(tmp_path / "tbl")
+    _mk_occ_base(spark, root)
+    base = mt.commit_meta(root, 0)
+    # the live rival: claim v1, write its rewrite of bucket 1 (keys 1
+    # and 9 += 7), marker not yet published
+    assert mt._try_claim(root, 1)
+    spark.createDataFrame(
+        [(k, 7.0 if k in (1, 9) else 0.0) for k in range(1, 40, 8)],
+        "k long, val double",
+    ).withColumn("_mt_bucket", F.expr("pmod(k, 8)")).write.partitionBy(
+        "_mt_bucket"
+    ).parquet(os.path.join(root, "v1"))
+    awaiting = threading.Event()
+    real_await = mt._await_commit_meta
+
+    def await_spy(root_, m, timeout):
+        if m == 1:
+            awaiting.set()
+        return real_await(root_, m, timeout)
+
+    monkeypatch.setattr(mt, "_await_commit_meta", await_spy)
+    results, errors = {}, []
+
+    def merge():
+        try:
+            results["n"] = mt.merge_into_bucketed(
+                spark, root, _occ_chg(spark, [0, 8], 5.0),
+                marker_timeout=120.0, **_OCC_CLAUSES,
+            )
+        except Exception as e:  # noqa: BLE001 - surfaced via the assert
+            errors.append(repr(e))
+
+    t = threading.Thread(target=merge)
+    t.start()
+    awaiting.wait(timeout=120)
+    # the rival publishes while the merge awaits its marker
+    mt._write_marker(root, 1, {
+        "manifest": {**base["manifest"], "1": "v1/_mt_bucket=1"},
+        "bucket": base["bucket"],
+        "base_version": 0,
+        "read_base": 0,
+        "touched_buckets": ["1"],
+    })
+    t.join(timeout=300)
+    assert not errors, errors
+    assert results == {"n": 2}
+    assert mt.committed_versions(root) == [0, 1, 2]
+    assert mt.commit_meta(root, 2)["base_version"] == 1
+    rival = {
+        r.k: r.val
+        for r in mt.read_bucketed(spark, root, 1).collect()
+        if r.val != 0.0
+    }
+    assert rival == {1: 7.0, 9: 7.0}  # the rival's v1 data survived
+    got = {
+        r.k: r.val
+        for r in mt.read_bucketed(spark, root).collect()
+        if r.val != 0.0
+    }
+    assert got == {0: 5.0, 8: 5.0, 1: 7.0, 9: 7.0}  # no lost update
 
 
 def test_feed_since_spans_version_gaps(spark, tmp_path):
@@ -2714,7 +2802,7 @@ def test_fence_race_lost_reads_rival_like_normal(spark, tmp_path,
         return got
 
     monkeypatch.setattr(mt, "_await_commit_meta", timeout_then_publish)
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0], 5.0),
         marker_timeout=0.2, **_OCC_CLAUSES,
     )
@@ -2825,8 +2913,7 @@ def test_single_writer_paths_respect_fences(spark, tmp_path):
     commit_bucketed raise on a fenced slot instead of silently reading
     the fence as 'already committed' (the caller's data would never
     land), _write_marker refuses to replace a fence outright, and
-    merge_into_bucketed skips fenced slots above latest exactly like
-    the OCC claim loop."""
+    merge_into_bucketed's claim loop skips fenced slots above latest."""
     import dataframe_expressions_spark.sources.mergetable as mt
 
     # plain table: fence at slot 1 (a fencer that crashed before its
@@ -2995,7 +3082,7 @@ def test_occ_three_way_maintenance_race(spark, tmp_path):
             errors.append((tag, "error", repr(e)))
 
     ops = [
-        ("merge", lambda: mt.merge_into_bucketed_exclusive(
+        ("merge", lambda: mt.merge_into_bucketed(
             spark, root, _occ_chg(spark, [0, 8], 5.0),
             meta={"writer": "merge"}, **_OCC_CLAUSES)),
         ("compact", lambda: mt.compact_buckets(
@@ -3166,7 +3253,7 @@ def test_stream_dual_writers_replay_and_rebase_compose(spark, tmp_path):
             [(k, int(n)) for k, n in counts.items()],
             "user_id long, bn long",
         )
-        mt.merge_into_bucketed_exclusive(
+        mt.merge_into_bucketed(
             spark, root, chg,
             matched_update={"n_events": "t.n_events + s.bn"},
             not_matched_insert={"n_events": "s.bn"},
@@ -3287,7 +3374,7 @@ def test_occ_merge_strict_check_runs_once_across_retries(
         return orig(root_, base, bmeta, touched, spec, tmp, timeout)
 
     monkeypatch.setattr(mt, "_claim_merge_version", hooked)
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0),
         strict_source_keys=True, **_OCC_CLAUSES,
     )
@@ -3305,7 +3392,7 @@ def test_occ_merge_strict_check_runs_once_across_retries(
         [(0, 1.0), (0, 2.0)], "k long, amt double"
     )
     with pytest.raises(ValueError, match="duplicate join key"):
-        mt.merge_into_bucketed_exclusive(
+        mt.merge_into_bucketed(
             spark, root, dup, strict_source_keys=True, **_OCC_CLAUSES
         )
 
@@ -3349,7 +3436,7 @@ def test_vacuum_fences_dead_claim_before_sweeping_it(spark, tmp_path):
     assert mt._is_fence_marker(root, 2)
     # the stalled claimant's late publish fails loudly, never lands
     with pytest.raises(RuntimeError, match="fenced"):
-        mt._publish_exclusive(root, 2, {"late": True})
+        mt._write_marker(root, 2, {"late": True})
     assert mt.committed_versions(root) == [0, 1, 3]
 
 
@@ -3411,7 +3498,7 @@ def test_vacuum_fences_orphan_dir_slot_before_rmtree(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "_claims", "2"))
     # the stalled claimant's late publish fails loudly, never lands
     with pytest.raises(RuntimeError, match="fenced"):
-        mt._publish_exclusive(root, 2, {"late": True})
+        mt._write_marker(root, 2, {"late": True})
     assert mt.committed_versions(root) == [0, 1, 3]
 
 

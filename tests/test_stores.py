@@ -143,3 +143,39 @@ def test_run_to_memory_leaves_no_sink_view(spark):
     # the frame still filters and aggregates after its view is gone
     assert df.where("value > 75").count() == int((pdf.value > 75).sum())
     assert df.groupBy().count().first()[0] == len(pdf)
+
+
+def test_scan_xml_round_trips_under_store_root(spark, tmp_path, monkeypatch):
+    from dataframe_expressions_spark.operators.registry import load_all
+
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    before = set(glob.glob("/tmp/spark_graft_xml_*"))
+    assert load_all()["scan_xml"].fn(spark, SF_SMOKE).count() > 0
+    assert [p.name for p in tmp_path.glob("spark_graft_xml_*")] == [
+        f"spark_graft_xml_{os.path.basename(SF_SMOKE.rstrip('/'))}"
+    ]
+    assert set(glob.glob("/tmp/spark_graft_xml_*")) <= before
+
+
+def test_stream_writers_stage_six_files_per_writer(spark, tmp_path,
+                                                   monkeypatch):
+    """Each writer's staged events are 6 parquet files, so with
+    maxFilesPerTrigger=2 it commits 3 batches (batch ids 0-2)."""
+    from dataframe_expressions_spark.operators.registry import load_all
+    from dataframe_expressions_spark.sources.mergetable import (
+        commit_meta,
+        committed_versions,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    assert load_all()["stream_writers_concurrent"].fn(
+        spark, SF_SMOKE).count() > 0
+    for tag in ("even", "odd"):
+        (stage,) = tmp_path.glob(f"spark_graft_dualstage_v1_{tag}_*")
+        parts = [p for p in os.listdir(stage) if p.startswith("part-")]
+        assert len(parts) == 6, parts
+    (root,) = tmp_path.glob("spark_graft_table_streamdual_v1_*")
+    metas = [commit_meta(str(root), n) for n in committed_versions(str(root))]
+    batches = sorted((m["writer"], m["batch_id"]) for m in metas
+                     if "writer" in m)
+    assert batches == [(w, b) for w in ("even", "odd") for b in range(3)]

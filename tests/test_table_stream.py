@@ -301,7 +301,7 @@ def test_stream_source_spans_version_gaps(spark, tmp_path):
     root = str(tmp_path / "tbl")
     _mk_table(spark, root, n=10)
     os.makedirs(os.path.join(root, "v1"))  # dead claimant's orphan
-    n = mt.merge_into_bucketed_exclusive(
+    n = mt.merge_into_bucketed(
         spark,
         root,
         spark.createDataFrame([(0, 3.0)], "k long, amt double"),
