@@ -392,7 +392,12 @@ def minhash_pairs_cached(
     (threshold, n_hashes) and a version tag, the fingerprint covers
     documents.parquet.  Contents are deterministic (the whole pipeline
     is), so any caller may build."""
-    from ..sources.tables import load_table, publish_store, store_path
+    from ..sources.tables import (
+        load_table,
+        publish_store,
+        read_parquet,
+        store_path,
+    )
 
     def write(tmp: str) -> None:
         # the pair table is tiny (thousands of rows at sf0.1) — 4 files
@@ -405,7 +410,7 @@ def minhash_pairs_cached(
 
     tt = repr(threshold).replace(".", "p")
     out = store_path(sf_dir, f"mhpairs_t{tt}_h{n_hashes}_v1", ("documents",))
-    return spark.read.parquet(publish_store(out, write))
+    return read_parquet(spark, publish_store(out, write))
 
 
 # Portable token hash: rolling polynomial hash of the token's characters

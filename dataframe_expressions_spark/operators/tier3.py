@@ -16,7 +16,7 @@ from ..functions import dedup as D
 from ..functions import multimodal as MM
 from ..functions import similarity as S
 from ..functions import text as TX
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_parquet
 from ..streaming.windows import run_to_memory, stream_events
 from .registry import query
 
@@ -1226,7 +1226,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> SDF:
         .start()
     )
     q.awaitTermination()
-    landed = spark.read.parquet(out)
+    landed = read_parquet(spark, out)
     result = landed.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("sum_value"),

@@ -19,7 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table, orders_nested
+from ..sources.tables import load_table, orders_nested, read_parquet
 from ..functions.dedup import spread
 from .registry import query
 from .tier2 import _DEC, _dsum
@@ -388,7 +388,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> SDF:
         _dsum("o_totalprice").alias("revenue"),
     )
     agg.write.mode("overwrite").partitionBy("o_year").parquet(out)
-    back = spark.read.parquet(out)
+    back = read_parquet(spark, out)
     return back.select(F.col("o_year").cast("long"), "n_orders", "revenue")
 
 

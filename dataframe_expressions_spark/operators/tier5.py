@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions import dedup as D
 from ..functions import text as TX
-from ..sources.tables import epoch_us, load_table
+from ..sources.tables import epoch_us, load_table, read_parquet
 from .registry import query
 from .tier3 import _TOKS
 
@@ -1161,13 +1161,13 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> SDF:
     )
     frag = write_once_parquet(ev, _maint_dir(sf_dir, "frag"), n_files=64)
     shutil.rmtree(compact, ignore_errors=True)
-    small = spark.read.parquet(frag)
+    small = read_parquet(spark, frag)
     n_bytes = sum(
         f.stat().st_size for f in os.scandir(frag) if f.name.endswith(".parquet")
     )
     target = max(1, math.ceil(n_bytes / (128 * 1024 * 1024)))
     small.coalesce(target).write.mode("overwrite").parquet(compact)
-    back = spark.read.parquet(compact)
+    back = read_parquet(spark, compact)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.countDistinct("user_id").cast("long").alias("n_users"),
@@ -1210,7 +1210,7 @@ def sink_sorted_skipping(spark: SparkSession, sf_dir: str) -> SDF:
         )
 
     out = publish_store(_maint_dir(sf_dir, "sorted"), write)
-    back = spark.read.parquet(out).where(
+    back = read_parquet(spark, out).where(
         (F.col("l_shipdate") >= F.lit("1997-06-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-07-01").cast("timestamp"))
     )
@@ -1594,7 +1594,7 @@ def sink_zorder(spark: SparkSession, sf_dir: str) -> SDF:
         )
 
     out = publish_store(_maint_dir(sf_dir, "zorder"), write)
-    back = spark.read.parquet(out).where(
+    back = read_parquet(spark, out).where(
         F.col("o_custkey").between(40, 119)
         & (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-01-01").cast("timestamp"))

@@ -36,6 +36,7 @@ from ..functions import dedup as D
 from ..functions import text as TX
 from ..sources.tables import (
     load_table,
+    read_parquet,
     source_fingerprint,
     sweep_dead_pid_dirs as _sweep_dead_pid_dirs,
 )
@@ -718,7 +719,7 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> SDF:
         shutil.rmtree(d, ignore_errors=True)
     os.makedirs(src)
 
-    schema = spark.read.parquet(os.path.dirname(files[0])).schema
+    schema = read_parquet(spark, os.path.dirname(files[0])).schema
 
     def drain() -> None:
         q = (
@@ -754,7 +755,7 @@ def stream_restart_recovery(spark: SparkSession, sf_dir: str) -> SDF:
             for p in _glob.glob(os.path.join(ckpt, "offsets", "*"))
             if os.path.basename(p).isdigit()
         )
-        back = spark.read.parquet(landing)
+        back = read_parquet(spark, landing)
         # Materialize the (event_type-sized) aggregate off the landing
         # files NOW so the tmpfs dirs can be removed before returning —
         # a lazy return would read the landing after the finally ran.
@@ -852,9 +853,9 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> SDF:
     import os
 
     base = _month_partitioned_orders(spark, sf_dir)
-    fact = spark.read.parquet(os.path.join(base, "fact"))
+    fact = read_parquet(spark, os.path.join(base, "fact"))
     dim = (
-        spark.read.parquet(os.path.join(base, "dim"))
+        read_parquet(spark, os.path.join(base, "dim"))
         .where(F.col("rk") <= 2)
         .select("o_ym")
     )
@@ -3173,10 +3174,10 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> SDF:
     16x2 banding left ~1% at the edge).  DuckDB mirrors with blocked
     exact all-pairs batch x corpus."""
     store = _incremental_sig_store(spark, sf_dir)
-    corp_bands = spark.read.parquet(f"{store}/bands").withColumnRenamed(
+    corp_bands = read_parquet(spark, f"{store}/bands").withColumnRenamed(
         "id", "c"
     )
-    corp_sh = spark.read.parquet(f"{store}/sh").select(
+    corp_sh = read_parquet(spark, f"{store}/sh").select(
         F.col("id").alias("c"), F.col("sh").alias("csh")
     )
 

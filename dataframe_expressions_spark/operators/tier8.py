@@ -30,7 +30,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..sources.tables import epoch_us, load_table
+from ..sources.tables import epoch_us, load_table, read_parquet
 from .registry import query
 
 # ---------------------------------------------------------------------------
@@ -1991,8 +1991,8 @@ def _cn_scored_store(spark: SparkSession, sf_dir: str) -> SDF:
         )
         sc.repartition(8).write.mode("overwrite").parquet(tmp)
 
-    return spark.read.parquet(
-        publish_store(store_path(sf_dir, "cnsc_v1", ("orders",)), write)
+    return read_parquet(
+        spark, publish_store(store_path(sf_dir, "cnsc_v1", ("orders",)), write)
     )
 
 

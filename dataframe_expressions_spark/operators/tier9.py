@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame as SDF
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import load_table, read_parquet
 from .registry import query
 
 # Store prefixes for the streaming CDC loop, shared with the tests so a
@@ -1375,13 +1375,13 @@ def table_checkpoint_resolve(spark: SparkSession, sf_dir: str) -> SDF:
 
     root = _table_root(sf_dir, "custckpt_v1")
     base = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet")
+        load_table(spark, sf_dir, "customer")
         .select(
             "c_custkey",
             F.col("c_acctbal").cast("decimal(38,6)").alias("acctbal"),
         )
     )
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
 
     def _state(n: int) -> SDF:
         rev = (
@@ -1711,7 +1711,7 @@ def stream_table_source(spark: SparkSession, sf_dir: str) -> SDF:
         )
         q.processAllAvailable()
         q.stop()
-        feed = spark.read.parquet(landing)
+        feed = read_parquet(spark, landing)
         sign = F.when(
             F.col("change_type").isin("insert", "update_postimage"),
             F.lit(1),
@@ -1738,7 +1738,7 @@ def stream_table_source(spark: SparkSession, sf_dir: str) -> SDF:
         )
         final.coalesce(1).write.mode("overwrite").parquet(final_dir)
         write_done_marker(done)
-    return spark.read.parquet(final_dir)
+    return read_parquet(spark, final_dir)
 
 
 # ---------------------------------------------------------------------------

@@ -139,8 +139,10 @@ from typing import Dict, List, Optional, Sequence, Union
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType
 
 from .commitstore import CommitStoreMissing, commit_store_for
+from .tables import read_parquet
 
 __all__ = [
     "MergeConflictError",
@@ -665,8 +667,8 @@ def read_version(
         base = read_version(
             spark, root, meta["mor_base"], key_range, ranges=ranges
         ).alias("b")
-        dels = spark.read.parquet(
-            os.path.join(root, meta["delete_rel"])
+        dels = read_parquet(
+            spark, os.path.join(root, meta["delete_rel"])
         ).alias("d")
         cond = reduce(
             lambda a, b: a & b,
@@ -714,13 +716,13 @@ def read_version(
             if ok:
                 keep.append(os.path.join(root, rel))
         if not keep:
-            return spark.read.parquet(snap).limit(0)
-        df = spark.read.parquet(*keep)
+            return read_parquet(spark, snap).limit(0)
+        df = read_parquet(spark, *keep)
         for c, (lo, hi) in ranges.items():
             df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
         return df
     if key_range is None:
-        return spark.read.parquet(snap)
+        return read_parquet(spark, snap)
     stats = meta.get("file_stats")
     if not stats:
         raise ValueError(
@@ -737,8 +739,8 @@ def read_version(
     ]
     if not keep:
         # no file can match: exact empty answer, footer-only planning
-        return spark.read.parquet(snap).limit(0)
-    return spark.read.parquet(*keep).where(
+        return read_parquet(spark, snap).limit(0)
+    return read_parquet(spark, *keep).where(
         F.col(key).between(F.lit(lo), F.lit(hi))
     )
 
@@ -1669,6 +1671,34 @@ def merge_into(
 _BUCKET_COL = "_mt_bucket"
 
 
+def _nullable(dt):
+    """``dt`` with every field, element and value nullable — the schema
+    Spark's file reader reports for parquet it wrote from ``dt``."""
+    if isinstance(dt, StructType):
+        return StructType([
+            StructField(f.name, _nullable(f.dataType), True, f.metadata)
+            for f in dt.fields
+        ])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _bucket_schema(spark: SparkSession, root: str, meta: dict) -> StructType:
+    """The bucketed table's schema at the version ``meta`` describes:
+    the one its bucket spec records, or — for a marker written before
+    specs recorded it — Spark's inference over every bucket dir of the
+    manifest (memoized by ``read_parquet``)."""
+    rec = (meta.get("bucket") or {}).get("schema")
+    if rec is not None:
+        return StructType.fromJson(rec)
+    return read_parquet(
+        spark, *[os.path.join(root, rel) for rel in meta["manifest"].values()]
+    ).schema
+
+
 def _assert_unique_source_keys(source: SDF, keys: List[str]) -> None:
     """The strict_source_keys runtime guard — ONE aggregate over the
     SOURCE (the small, already-folded side) raising before any merge
@@ -1761,6 +1791,13 @@ def commit_bucketed(
     the rest.  Commit protocol (tmp-write + rename, then marker) and
     crash behavior are identical to ``commit_snapshot``.
 
+    The spec also records the table's ``schema`` (StructType JSON of
+    ``df.schema`` with every field nullable — what Spark's parquet
+    reader returns for the written files; taking it fires no job).
+    Every later commit carries the spec, so every read of the table
+    passes the schema and infers nothing, and a MERGE casts its output
+    back to it.
+
     ``stats_key=<col>`` composes range skipping WITH the bucketed
     layout (round 11): the write range-partitions on (bucket,
     stats_key) and sorts within partitions, so each bucket's files hold
@@ -1843,6 +1880,7 @@ def commit_bucketed(
             "stats_key": stats_key,
             "stats_cols": list(stats_cols) if stats_cols else None,
             "zorder_by": list(zorder_by) if zorder_by else None,
+            "schema": _nullable(df.schema).jsonValue(),
         },
         **(meta or {}),
     }
@@ -1979,7 +2017,7 @@ def read_bucketed(
         )
     if not man:
         raise ValueError(f"bucketed version in {root} has an empty manifest")
-    sample = spark.read.parquet(os.path.join(root, next(iter(man.values()))))
+    schema = _bucket_schema(spark, root, meta)
     man_sel = man
     residuals = []
     if key_equals is not None:
@@ -1989,7 +2027,7 @@ def read_bucketed(
                 f"key_equals must supply exactly the bucket key "
                 f"{spec.get('on')} (got {sorted(key_equals)})"
             )
-        dtypes = {f.name: f.dataType for f in sample.schema.fields}
+        dtypes = {f.name: f.dataType for f in schema.fields}
         lits = [
             F.lit(v).cast(dtypes[c]).alias(c) for c, v in key_equals.items()
         ]
@@ -2001,7 +2039,7 @@ def read_bucketed(
             .b
         )
         if str(b) not in man:
-            return sample.limit(0)  # bucket holds no data: exact empty
+            return _empty(spark, root, man, schema)  # bucket holds no data
         man_sel = {str(b): man[str(b)]}
         residuals = [
             F.col(c).eqNullSafe(F.lit(v).cast(dtypes[c]))
@@ -2048,8 +2086,8 @@ def read_bucketed(
             if ok:
                 keep.append(os.path.join(root, rel))
         if not keep:
-            return sample.limit(0)
-        df = spark.read.parquet(*keep)
+            return _empty(spark, root, man, schema)
+        df = read_parquet(spark, *keep, schema=schema)
         for c, (lo, hi) in ranges.items():
             df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
         for r in residuals:
@@ -2060,7 +2098,7 @@ def read_bucketed(
             os.path.join(root, man_sel[b])
             for b in sorted(man_sel, key=lambda x: int(x))
         ]
-        df = spark.read.parquet(*paths)
+        df = read_parquet(spark, *paths, schema=schema)
         for r in residuals:
             df = df.where(r)
         return df
@@ -2085,8 +2123,8 @@ def read_bucketed(
         and (mm is None or not (mm[1] < lo or mm[0] > hi))
     ]
     if not keep:
-        return sample.limit(0)
-    df = spark.read.parquet(*keep).where(
+        return _empty(spark, root, man, schema)
+    df = read_parquet(spark, *keep, schema=schema).where(
         F.col(key).between(F.lit(lo), F.lit(hi))
     )
     for r in residuals:
@@ -2094,26 +2132,30 @@ def read_bucketed(
     return df
 
 
+def _empty(
+    spark: SparkSession, root: str, man: Dict[str, str], schema: StructType
+) -> SDF:
+    """An exact empty answer with the table's schema (a scan of one
+    bucket dir under ``limit(0)``: planning only, no job)."""
+    first = os.path.join(root, next(iter(man.values())))
+    return read_parquet(spark, first, schema=schema).limit(0)
+
+
 def _cast_source_to_table(
-    spark: SparkSession,
-    root: str,
-    man: Dict[str, str],
-    keys: List[str],
-    source: SDF,
-) -> "tuple[SDF, SDF]":
-    """Cast the source's join-key columns to the TABLE's own schema and
-    return ``(cast source, sample frame)``.  The whole bucketed-layout
-    invariant rests on "bucket(source key) == bucket(table key)" — but
+    schema: StructType, keys: List[str], source: SDF
+) -> SDF:
+    """Cast the source's join-key columns to the TABLE's own ``schema``.
+    The whole bucketed-layout invariant rests on "bucket(source key) ==
+    bucket(table key)" — but
     Spark's murmur3 is PHYSICAL-type sensitive (hash(42 INT) !=
     hash(42 BIGINT)), so a source whose key arrived as a narrower type
     would compute the wrong touched set and then route merged rows into
     buckets the manifest still references by-path, silently losing them
     (round-11 review)."""
-    sample = spark.read.parquet(os.path.join(root, next(iter(man.values()))))
-    tdtypes = {f.name: f.dataType for f in sample.schema.fields}
+    tdtypes = {f.name: f.dataType for f in schema.fields}
     for k in keys:
         source = source.withColumn(k, F.col(k).cast(tdtypes[k]))
-    return source, sample
+    return source
 
 
 def _touched_buckets(source: SDF, expr: str, keys: List[str]) -> "set[str]":
@@ -2246,7 +2288,8 @@ def merge_into_bucketed(
                 "merge_into + commit_snapshot_exclusive"
             )
         keys, expr = list(spec["on"]), spec["expr"]
-        src, sample = _cast_source_to_table(spark, root, man, keys, source)
+        schema = _bucket_schema(spark, root, bmeta)
+        src = _cast_source_to_table(schema, keys, source)
         # memo on (name, CAST TYPE), not names alone (round-14 review):
         # a conflict retry re-casts the source to the NEW base's key
         # types, and a retyped key (e.g. DOUBLE -> BIGINT) can collapse
@@ -2275,9 +2318,9 @@ def merge_into_bucketed(
             # no touched bucket with target data: all-insert merge
             # against an empty target with the table's schema
             tgt = (
-                spark.read.parquet(*tgt_paths)
+                read_parquet(spark, *tgt_paths, schema=schema)
                 if tgt_paths
-                else sample.limit(0)
+                else _empty(spark, root, man, schema)
             )
             merged = merge_into(
                 tgt,
@@ -2287,6 +2330,15 @@ def merge_into_bucketed(
                 not_matched_insert=not_matched_insert,
                 strict_source_keys=False,  # hoisted above the retry loop
                 matched_delete=matched_delete,
+            )
+            # back to the table's types: a SET expression's type (e.g.
+            # DECIMAL(12,2) + DECIMAL(12,2) is DECIMAL(13,2)) must not
+            # widen the rewritten buckets past the by-reference ones.
+            # An overflow raises under ANSI mode (Spark's default); a
+            # same-type cast is a no-op the optimizer removes.
+            merged = merged.select(
+                *[F.col(f.name).cast(f.dataType).alias(f.name)
+                  for f in schema.fields]
             )
             # rewritten buckets keep the table's recorded sort layout
             # (stats-key sort or within-bucket Z-order) so refreshed
@@ -2699,8 +2751,8 @@ def table_changes(
         diff_b = {b for b in set(fman) ^ set(tman)} | {
             b for b in set(fman) & set(tman) if fman[b] != tman[b]
         }
-        f = _read_manifest_subset(spark, root, fman, diff_b)
-        t = _read_manifest_subset(spark, root, tman, diff_b)
+        f = _read_manifest_subset(spark, root, fmeta, diff_b)
+        t = _read_manifest_subset(spark, root, tmeta, diff_b)
     else:
         f = (
             read_bucketed(spark, root, from_v)
@@ -2716,17 +2768,18 @@ def table_changes(
 
 
 def _read_manifest_subset(
-    spark: SparkSession, root: str, man: Dict[str, str], buckets: "set[str]"
+    spark: SparkSession, root: str, meta: dict, buckets: "set[str]"
 ) -> SDF:
-    """The union of the given buckets' directories (empty frame with the
-    table's schema when the subset is empty on this side)."""
+    """The union of the given buckets' directories at the version
+    ``meta`` describes (empty frame with the table's schema when the
+    subset is empty on this side)."""
+    man, schema = meta["manifest"], _bucket_schema(spark, root, meta)
     paths = [
         os.path.join(root, man[b]) for b in sorted(buckets) if b in man
     ]
     if paths:
-        return spark.read.parquet(*paths)
-    sample = spark.read.parquet(os.path.join(root, next(iter(man.values()))))
-    return sample.limit(0)
+        return read_parquet(spark, *paths, schema=schema)
+    return _empty(spark, root, man, schema)
 
 
 def _diff_changes(f: SDF, t: SDF, keys: List[str]) -> SDF:
@@ -2960,8 +3013,10 @@ def compact_buckets(
         frag = {b: rel for b, rel in man.items() if _nfiles(rel) > max_files}
         if not frag:
             return base
-        df = spark.read.parquet(
-            *[os.path.join(root, rel) for rel in frag.values()]
+        df = read_parquet(
+            spark,
+            *[os.path.join(root, rel) for rel in frag.values()],
+            schema=_bucket_schema(spark, root, bmeta),
         )
         # bucket dirs are hive-partition leaves: the bucket id is not a
         # data column, so re-derive it from the table's own expression

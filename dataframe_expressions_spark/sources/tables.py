@@ -16,19 +16,27 @@ Scale notes (100 TB thinking):
   ``l_orderkey``, and all nested queries become shuffle-free scans.
 * ``sort_array`` on structs with ``l_linenumber`` leading gives
   deterministic element order without a per-group sort-within-shuffle.
-* Loads go through ``spark.read.parquet`` → Catalyst prunes columns and
-  pushes filters into the scan for every downstream query.
+* Loads go through ``read_parquet`` → Catalyst prunes columns and
+  pushes filters into the scan for every downstream query, and the
+  read itself runs nothing: the schema is passed in (bucketed tables
+  record theirs in the commit marker) or taken from a per-process memo
+  of Spark's own inference, keyed on the files' identity, so no query
+  fires the footer-reading ``parquet at <unknown>:0`` job twice for the
+  same bytes.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from typing import Dict
+import threading
+from collections import OrderedDict
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame as SDF
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = [
     "TABLE_NAMES",
@@ -37,6 +45,7 @@ __all__ = [
     "store_root",
     "store_path",
     "publish_store",
+    "read_parquet",
     "load_table",
     "load_tables",
     "orders_nested",
@@ -134,9 +143,76 @@ def epoch_us(col: str = "ts"):
     )
 
 
+# Session confs that change what Spark infers from the same parquet bytes.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_SIZE = 256
+_schema_memo: "OrderedDict[tuple, StructType]" = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _files_identity(paths) -> Optional[tuple]:
+    """Sorted ``(path, size, mtime_ns, inode)`` of every leaf file under
+    ``paths`` — None when a path is not on the local file system (a
+    remote URI, or missing: Spark then raises its own error) or a file
+    vanished while being listed."""
+    out = []
+    for p in paths:
+        if not os.path.exists(p):
+            return None
+        files = [p] if os.path.isfile(p) else [
+            os.path.join(d, f) for d, _, names in os.walk(p) for f in names
+        ]
+        for fp in files:
+            try:
+                st = os.stat(fp)
+            except FileNotFoundError:
+                return None
+            out.append((fp, st.st_size, st.st_mtime_ns, st.st_ino))
+    return tuple(sorted(out))
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: Optional[StructType] = None
+) -> SDF:
+    """``spark.read.parquet(*paths)`` that runs no job to find the schema.
+
+    A ``schema`` passed in is used as is.  Otherwise the schema is what
+    Spark infers from the files — one footer-reading job — memoized per
+    process on the identity of every leaf file (path, size, mtime,
+    inode) plus the session confs that change inference
+    (``_SCHEMA_CONFS``).  A rewritten file changes its identity, so an
+    entry never goes stale; it only stops being hit.  The memo holds
+    the ``_SCHEMA_MEMO_SIZE`` most recently used file sets.  Paths that
+    are not local files are inferred on every call, as Spark does."""
+    if schema is None:
+        files = _files_identity(paths)
+        key = None
+        if files is not None:
+            key = (files, tuple(spark.conf.get(k) for k in _SCHEMA_CONFS))
+            with _schema_lock:
+                schema = _schema_memo.get(key)
+                if schema is not None:
+                    _schema_memo.move_to_end(key)
+        if schema is None:
+            schema = spark.read.parquet(*paths).schema
+            if key is not None:
+                with _schema_lock:
+                    _schema_memo[key] = schema
+                    while len(_schema_memo) > _SCHEMA_MEMO_SIZE:
+                        _schema_memo.popitem(last=False)
+    return spark.read.schema(schema).parquet(*paths)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> SDF:
     ensure_nanos_conf(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df
@@ -254,7 +330,7 @@ def _materialize(
         store_path(sf_dir, f"view_{name}_v1", tables),
         lambda tmp: build().repartition(8).write.mode("overwrite").parquet(tmp),
     )
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 def write_once_parquet(df: SDF, path: str, n_files: int = 8) -> str:
@@ -292,7 +368,7 @@ def drain_staged_stream(
     across RE-INVOCATIONS is the caller's marker/batch_id guard, not
     the checkpoint's).  Shared by every streaming-CDC query so the two
     exactly-once protocols cannot drift apart (round-11 review)."""
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     q = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)

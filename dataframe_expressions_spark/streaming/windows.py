@@ -47,11 +47,15 @@ def stream_events(spark: SparkSession, sf_dir: str) -> SDF:
     rejects TIMESTAMP_NTZ (`EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE`).  The
     session timezone is pinned UTC (session.py), so the LTZ instant
     equals the normalized naive-UTC wall clock bit-for-bit."""
-    from ..sources.tables import ensure_nanos_conf, normalize_event_ts
+    from ..sources.tables import (
+        ensure_nanos_conf,
+        normalize_event_ts,
+        read_parquet,
+    )
 
     ensure_nanos_conf(spark)
     src = _staged_dir(sf_dir)
-    schema = spark.read.parquet(src).schema  # whatever vintage is staged
+    schema = read_parquet(spark, src).schema  # whatever vintage is staged
     sdf = spark.readStream.schema(schema).parquet(src)
     return normalize_event_ts(sdf).withColumn("ts", F.col("ts").cast("timestamp"))
 

@@ -1537,8 +1537,62 @@ def test_mor_delete_null_keys_and_orphan_dirs(spark, tmp_path):
     spark.createDataFrame([(1,)], "k long").write.parquet(
         os.path.join(stale, "_deletes")
     )
-    commit_mor_delete(spark, root, "bal > 100", on="k")  # matches nothing
+    commit_mor_delete(
+        spark, root, "bal > 100", on="k", marker_timeout=0.3
+    )  # matches nothing
     assert sorted(r.k for r in read_version(spark, root).collect()) == [1]
+
+
+def test_bucketed_merge_keeps_the_table_column_types(spark, tmp_path):
+    """A SET expression's type must not leak into the rewritten buckets:
+    ``t.x + s.d`` over two DECIMAL(12,2) columns is DECIMAL(13,2), and
+    written as such the merged buckets disagree with the by-reference
+    ones — the table's reads then fail with
+    PARQUET_COLUMN_DATA_TYPE_MISMATCH, and the type widens with every
+    merge.  The merge casts back to the table's types; an overflow of
+    them raises and commits nothing."""
+    import glob
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dataframe_expressions_spark.sources.mergetable import (
+        commit_bucketed,
+        merge_into_bucketed,
+        read_bucketed,
+    )
+
+    root = str(tmp_path / "dec")
+    commit_bucketed(
+        spark.range(40).selectExpr(
+            "id AS k", "cast(id AS decimal(12,2)) AS x"
+        ),
+        root, 0, on="k", n_buckets=4, hashed=False,
+    )
+
+    def batch(k, d):
+        return spark.createDataFrame([(k, d)], "k long, d string").selectExpr(
+            "k", "cast(d AS decimal(12,2)) AS d"
+        )
+
+    for i in range(11):  # v10 sorts before v2: the path order flips
+        merge_into_bucketed(
+            spark, root, batch(i % 2, "0.50"), {"x": "t.x + s.d"}, {}
+        )
+    got = {r.k: r.x for r in read_bucketed(spark, root).collect()}
+    assert got[0] == Decimal("3.00") and got[1] == Decimal("3.50")
+    assert got[39] == Decimal("39.00") and len(got) == 40
+    files = glob.glob(os.path.join(root, "v*", "*", "*.parquet"))
+    assert {pq.read_schema(f).field("x").type for f in files} == {
+        pa.decimal128(12, 2)
+    }
+
+    with pytest.raises(Exception, match="NUMERIC_VALUE_OUT_OF_RANGE"):
+        merge_into_bucketed(
+            spark, root, batch(2, "9999999999.99"), {"x": "t.x + s.d"}, {}
+        )
+    assert latest_version(root) == 11
 
 
 def test_feed_since_caught_up_returns_empty_frame(spark, tmp_path):
