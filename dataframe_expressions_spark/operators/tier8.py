@@ -3388,10 +3388,11 @@ def table_read_skipping(spark: SparkSession, sf_dir: str) -> SDF:
     ``stats_key='c_custkey'`` — range-partitioned + sorted on the key so
     per-file ranges are disjoint, with each file's footer min/max
     recorded in the commit marker — and this query reads committed v1
-    through ``read_version(key_range=(100, 1100))``: the marker stats
-    prune every file whose [min,max] cannot intersect the predicate
-    BEFORE Spark lists a single file, then the residual BETWEEN is
-    pushed into the surviving files' row groups.  The oracle is the full
+    through ``read_version(ranges={"c_custkey": (100, 1100)})``: the
+    marker stats prune every file whose [min,max] cannot intersect the
+    predicate BEFORE Spark lists a single file, then the residual
+    BETWEEN is pushed into the surviving files' row groups.  The
+    oracle is the full
     merge result filtered to the same range, so a pruning bug that drops
     a matching file (or leaks a non-matching row) hash-mismatches.
 
@@ -3407,7 +3408,7 @@ def table_read_skipping(spark: SparkSession, sf_dir: str) -> SDF:
     from ..sources.mergetable import read_version
 
     root = _ensure_merge_table(spark, sf_dir)
-    return read_version(spark, root, 1, key_range=(100, 1100))
+    return read_version(spark, root, 1, ranges={"c_custkey": (100, 1100)})
 
 
 @query(

@@ -1475,9 +1475,13 @@ class Lowerer:
         frame CREATES a bucketed table (v0 via ``commit_bucketed`` —
         the layout later ``.merge_into()`` calls rewrite k/B of);
         without it the frame lands as the next version through the
-        multi-writer ``commit_snapshot_exclusive`` claim loop.  Returns
-        the committed version's READ-BACK frame, so the pipeline can
-        keep composing over what was actually durably written."""
+        multi-writer ``commit_snapshot_exclusive`` claim loop.
+        ``stats_key=`` sorts the written files on that column and
+        records their footer min/max, key first, in the marker's one
+        file-statistics record, which ``read_version`` /
+        ``read_bucketed`` ``ranges=`` reads prune by.  Returns the
+        committed version's READ-BACK frame, so the pipeline can keep
+        composing over what was actually durably written."""
         if not isinstance(parent, LFrame):
             raise LoweringError(".write_table() applies to event frames")
         root = args[0] if args else kwargs.pop("root", None)

@@ -116,6 +116,17 @@ priced by its scale trade:
   rewrites only buckets over the file threshold, references the rest,
   refreshes/carries file statistics; cost proportional to the
   fragmented fraction, never the table.
+* **File statistics** — one record per commit: a commit with
+  ``stats_key`` and/or ``stats_cols`` stores each data file's footer
+  min/max in the marker's ``file_stats_cols`` as ``{"cols": [...],
+  "files": {rel: {col: [lo, hi] | None}}}``.  ``stats_key=k`` is a
+  layout (files range-partitioned and sorted on ``k``) whose key is
+  recorded first among the columns and as the record's ``"key"``,
+  which restore reads to rebuild the sort.  ``ranges={col: (lo,
+  hi)}`` on ``read_version`` / ``read_bucketed`` is the one pruning
+  read.  Markers written before the two statistics families were
+  folded into this record also carry a one-column ``file_stats``;
+  ``_file_stats`` reads either form as the one record.
 
 Crash rule for the data-deriving commits (bucketed MERGE, compaction,
 MoR deletes, Z-order, restore): a marker-less orphan ``v<n>`` is never
@@ -433,14 +444,13 @@ def _slim_info(root: str, n: int, doc: dict) -> dict:
     for k in ("mor_base", "op", "batch_id"):
         if k in doc:
             slim[k] = doc[k]
-    for field, tag in (
-        ("manifest", "manifest_sha256"),
-        ("file_stats", "stats_sha256"),
-        ("file_stats_cols", "stats_cols_sha256"),
+    for tag, value in (
+        ("manifest_sha256", doc.get("manifest")),
+        ("stats_sha256", _file_stats(doc)),
     ):
-        if doc.get(field) is not None:
+        if value is not None:
             slim[tag] = hashlib.sha256(
-                json.dumps(doc[field], sort_keys=True).encode()
+                json.dumps(value, sort_keys=True).encode()
             ).hexdigest()
     return slim
 
@@ -604,7 +614,6 @@ def read_version(
     spark: SparkSession,
     root: str,
     n: Optional[int] = None,
-    key_range: Optional["tuple"] = None,
     as_of=None,
     ranges: Optional[dict] = None,
 ) -> SDF:
@@ -614,31 +623,19 @@ def read_version(
     (``version_as_of`` — Delta's ``timestampAsOf``); passing both is a
     contradiction and raises.
 
-    ``key_range=(lo, hi)`` (inclusive) enables DATA SKIPPING (round 11,
-    r10 VERDICT item 3): when the version was committed with
-    ``stats_key`` file statistics, the per-file min/max recorded in the
-    commit marker prune non-overlapping files BEFORE Spark ever lists
-    them — the scan's file set is decided from one driver-side JSON
+    ``ranges={col: (lo, hi), ...}`` (inclusive) enables DATA SKIPPING:
+    when the version was committed with file statistics (``stats_key``
+    and/or ``stats_cols``), the per-file min/max recorded in the commit
+    marker prune files BEFORE Spark ever lists them — a file survives
+    only if EVERY constrained column's recorded [min, max] overlaps its
+    range, so the scan's file set is decided from one driver-side JSON
     read, the metadata-level skipping Delta/Iceberg do with their stats.
-    The key predicate is ALSO applied as a normal filter (and pushed to
-    the parquet row groups of the surviving files), so results are exact
-    whether or not stats exist; files with NULL-only or missing stats
-    are conservatively kept.
-
-    ``ranges={col: (lo, hi), ...}`` (round 12) is the MULTI-COLUMN
-    generalization: when the version was committed with ``stats_cols``,
-    files are pruned on the CONJUNCTION of the inclusive range
-    predicates — a file survives only if EVERY constrained column's
-    recorded [min, max] overlaps its range — and each predicate is also
-    applied as a residual pushed filter.  With a ``zorder_by`` write
-    layout both dimensions prune selectively (inputFiles
-    proper-subset-per-dimension is asserted in tests).  ``ranges`` and
-    ``key_range`` are alternative stats families; passing both
-    raises."""
-    if ranges and key_range:
-        raise ValueError(
-            "read_version takes ranges= or key_range=, not both"
-        )
+    Each predicate is ALSO applied as a residual filter (pushed to the
+    parquet row groups of the surviving files), so results are exact;
+    files with NULL-only or unusable stats are conservatively kept.  A
+    ``stats_key`` layout makes its key's ranges disjoint per file; a
+    ``zorder_by`` layout keeps both of its columns selective
+    (inputFiles proper-subset-per-dimension is asserted in tests)."""
     if as_of is not None:
         if n is not None:
             raise ValueError(
@@ -651,21 +648,20 @@ def read_version(
         raise FileNotFoundError(f"no committed version under {root}")
     if not _marker_exists(root, n):
         _raise_missing_version(root, n)
-    snap = os.path.join(root, f"v{n}")
     meta = commit_meta(root, n)
     if "mor_base" in meta:
         # MERGE-ON-READ delete version (round 11): v<n> holds only the
         # equality-delete key file; the data is the BASE version with
         # the deleted keys anti-joined away.  Chains resolve recursively
         # (each delete commit stacks one more broadcast anti-join); a
-        # key_range read prunes the base's files first, then applies the
+        # ranges read prunes the base's files first, then applies the
         # same anti-join — both pushdowns compose.  The anti-join is
         # NULL-SAFE (round-11 review: a plain equi-join never matches
         # NULL = NULL, so a NULL-key row selected by DELETE WHERE would
         # silently survive — merge_into pairs keys null-safely and this
         # path must too).
         base = read_version(
-            spark, root, meta["mor_base"], key_range, ranges=ranges
+            spark, root, meta["mor_base"], ranges=ranges
         ).alias("b")
         dels = read_parquet(
             spark, os.path.join(root, meta["delete_rel"])
@@ -679,87 +675,102 @@ def read_version(
         )
         return base.join(F.broadcast(dels), cond, "left_anti")
     if ranges:
-        stats_c = meta.get("file_stats_cols")
-        if not stats_c:
-            raise ValueError(
-                f"version {n} of {root} has no multi-column file "
-                "statistics — commit with stats_cols= to enable ranges "
-                "reads"
-            )
-        unknown = sorted(set(ranges) - set(stats_c["cols"]))
-        if unknown:
-            raise ValueError(
-                f"ranges constrain column(s) {unknown} with no recorded "
-                f"statistics (recorded: {stats_c['cols']})"
-            )
-        for c, (lo, hi) in ranges.items():
-            first = next(
-                (
-                    per.get(c)
-                    for per in stats_c["files"].values()
-                    if per and per.get(c) is not None
-                ),
-                None,
-            )
-            if first is not None:
-                _check_range_types(
-                    {"key": c, "files": {"_": first}}, lo, hi, (lo, hi)
-                )
-        keep = []
-        for rel, per_col in stats_c["files"].items():
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                mm = (per_col or {}).get(c)
-                if mm is not None and (mm[1] < lo or mm[0] > hi):
-                    ok = False
-                    break
-            if ok:
-                keep.append(os.path.join(root, rel))
-        if not keep:
-            return read_parquet(spark, snap).limit(0)
-        df = read_parquet(spark, *keep)
-        for c, (lo, hi) in ranges.items():
-            df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
-        return df
-    if key_range is None:
-        return read_parquet(spark, snap)
-    stats = meta.get("file_stats")
+        return _read_ranges(spark, root, meta, ranges, [f"v{n}"])
+    return read_parquet(spark, os.path.join(root, f"v{n}"))
+
+
+def _file_stats(meta: dict) -> Optional[dict]:
+    """The version's one file-statistics record, ``{"cols": [...],
+    "files": {rel: {col: [lo, hi] | None}}}`` plus ``"key"`` for a
+    ``stats_key`` layout, or ``None`` when it recorded none.  Markers
+    written before the fold may hold a one-column ``file_stats``
+    ``{key, files: {rel: [lo, hi] | None}}``, alone or next to
+    ``file_stats_cols``; it is merged in, its key first.  A file one
+    form lacks has no entry for that form's columns, which pruning
+    reads as unknown and keeps."""
+    rec = meta.get("file_stats_cols")
+    old = meta.get("file_stats")
+    if not old:
+        return rec
+    key = old["key"]
+    files = {rel: {key: mm} for rel, mm in old["files"].items()}
+    cols = [key]
+    if rec:
+        cols += [c for c in rec["cols"] if c != key]
+        for rel, per in rec["files"].items():
+            files[rel] = {**files.get(rel, {}), **(per or {})}
+    return {"cols": cols, "files": files, "key": key}
+
+
+def _read_ranges(
+    spark: SparkSession,
+    root: str,
+    meta: dict,
+    ranges: dict,
+    rel_dirs: Sequence[str],
+    schema: Optional[StructType] = None,
+) -> SDF:
+    """The one pruning read behind ``ranges=``: the files under
+    ``rel_dirs`` (a plain snapshot's ``v<n>``, or a bucketed read's
+    selected bucket dirs) whose recorded [min, max] overlaps every
+    constrained column's range, each range also applied as a residual
+    filter.  No surviving file gives the exact empty answer (a
+    ``limit(0)`` scan of the first dir).  Refuses a version without statistics, a column
+    without recorded statistics, and bounds whose type differs from the
+    recorded one — a str-vs-numeric comparison would either raise
+    mid-prune or, worse, order lexicographically (round-11 review)."""
+    stats = _file_stats(meta)
     if not stats:
         raise ValueError(
-            f"version {n} of {root} has no file statistics — commit with "
-            "stats_key= to enable key_range reads"
+            f"version {meta.get('version')} of {root} has no file "
+            "statistics — commit with stats_key= or stats_cols= to "
+            "enable ranges reads"
         )
-    key = stats["key"]
-    lo, hi = key_range
-    _check_range_types(stats, lo, hi, key_range)
+    unknown = sorted(set(ranges) - set(stats["cols"]))
+    if unknown:
+        raise ValueError(
+            f"ranges constrain column(s) {unknown} with no recorded "
+            f"statistics (recorded: {stats['cols']})"
+        )
+    files = stats["files"]
+    for c, (lo, hi) in ranges.items():
+        first = next(
+            (
+                per[c]
+                for per in files.values()
+                if per and per.get(c) is not None
+            ),
+            None,
+        )
+        if first is not None and (
+            isinstance(first[0], str) != isinstance(lo, str)
+            or isinstance(first[0], str) != isinstance(hi, str)
+        ):
+            raise ValueError(
+                f"ranges bounds {(lo, hi)!r} do not match the recorded "
+                f"stats type for {c!r} (e.g. {first!r})"
+            )
+
+    def overlaps(per: Optional[dict]) -> bool:
+        for c, (lo, hi) in ranges.items():
+            mm = (per or {}).get(c)
+            if mm is not None and (mm[1] < lo or mm[0] > hi):
+                return False
+        return True
+
+    dirs = set(rel_dirs)
     keep = [
         os.path.join(root, rel)
-        for rel, mm in stats["files"].items()
-        if mm is None or not (mm[1] < lo or mm[0] > hi)
+        for rel, per in files.items()
+        if rel.rsplit("/", 1)[0] in dirs and overlaps(per)
     ]
     if not keep:
-        # no file can match: exact empty answer, footer-only planning
-        return read_parquet(spark, snap).limit(0)
-    return read_parquet(spark, *keep).where(
-        F.col(key).between(F.lit(lo), F.lit(hi))
-    )
-
-
-def _check_range_types(stats: dict, lo, hi, key_range) -> None:
-    """A str-vs-numeric comparison against recorded stats would either
-    raise mid-prune or, worse, order lexicographically — refuse loudly
-    (round-11 review)."""
-    first = next(
-        (mm for mm in stats["files"].values() if mm is not None), None
-    )
-    if first is not None and (
-        isinstance(first[0], str) != isinstance(lo, str)
-        or isinstance(first[0], str) != isinstance(hi, str)
-    ):
-        raise ValueError(
-            f"key_range bounds {key_range!r} do not match the recorded "
-            f"stats type for {stats['key']!r} (e.g. {first!r})"
-        )
+        first_dir = os.path.join(root, next(iter(rel_dirs)))
+        return read_parquet(spark, first_dir, schema=schema).limit(0)
+    df = read_parquet(spark, *keep, schema=schema)
+    for c, (lo, hi) in ranges.items():
+        df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
+    return df
 
 
 def commit_meta(root: str, n: Optional[int] = None) -> dict:
@@ -925,29 +936,45 @@ def _stats_payload(
     meta: Optional[dict],
     stats_cols: Optional[Sequence[str]] = None,
 ) -> dict:
-    """Marker payload = caller metadata plus (when requested) the
-    per-file footer statistics — shared by both commit paths.
-    ``stats_cols`` records MULTI-column per-file min/max (round 12,
-    r11 VERDICT item 4) under ``file_stats_cols``; one footer pass
-    collects every requested column."""
+    """Marker payload of a plain snapshot commit = caller metadata plus
+    (when requested) the file-statistics record of its ``v<n>``."""
     payload = dict(meta or {})
-    if stats_key:
-        payload["file_stats"] = {
-            "key": stats_key,
-            "files": _collect_file_stats(root, n, stats_key),
-        }
-    if stats_cols:
-        cols = list(stats_cols)
-        snap = os.path.join(root, f"v{n}")
-        files = {
-            f"v{n}/{fname}": _file_minmax_multi(
-                os.path.join(snap, fname), cols
-            )
-            for fname in sorted(os.listdir(snap))
-            if fname.endswith(".parquet")
-        }
-        payload["file_stats_cols"] = {"cols": cols, "files": files}
+    rec = _stats_record(root, [f"v{n}"], stats_key, stats_cols)
+    if rec:
+        payload["file_stats_cols"] = rec
     return payload
+
+
+def _stats_record(
+    root: str,
+    rel_dirs: Sequence[str],
+    stats_key: Optional[str],
+    stats_cols: Optional[Sequence[str]],
+    carried: Optional[dict] = None,
+) -> Optional[dict]:
+    """The one file-statistics record (see ``_file_stats``) for the
+    parquet files under ``rel_dirs`` (relative paths), after the
+    ``carried`` per-file entries: footer min/max of ``stats_key``
+    (first) and every ``stats_cols`` column, read from the FOOTERS (no
+    data page touched) — the ``sink_sorted_skipping`` discipline at
+    commit time, so readers prune from one driver-side JSON read.
+    ``None`` when no column is requested."""
+    cols = [stats_key] if stats_key else []
+    cols += [c for c in stats_cols or () if c not in cols]
+    if not cols:
+        return None
+    files = dict(carried or {})
+    for rel in rel_dirs:
+        d = os.path.join(root, rel)
+        for fname in sorted(os.listdir(d)):
+            if fname.endswith(".parquet"):
+                files[f"{rel}/{fname}"] = _file_minmax(
+                    os.path.join(d, fname), cols
+                )
+    rec: dict = {"cols": cols, "files": files}
+    if stats_key:
+        rec["key"] = stats_key
+    return rec
 
 
 def _jsonable(v):
@@ -969,60 +996,13 @@ def _jsonable(v):
     return None
 
 
-def _collect_file_stats(root: str, n: int, key: str) -> Dict[str, list]:
-    """Per-file ``[min, max]`` of ``key`` for version ``n``'s parquet
-    files, read from the parquet FOOTERS (no data pages touched) — the
-    ``sink_sorted_skipping`` discipline applied at commit time so the
-    stats ride in the commit marker and readers prune files from one
-    driver-side JSON read.  A file whose footer lacks usable min/max for
-    the key maps to ``None`` (readers keep it conservatively)."""
-    snap = os.path.join(root, f"v{n}")
-    out: Dict[str, list] = {}
-    for fname in sorted(os.listdir(snap)):
-        if not fname.endswith(".parquet"):
-            continue
-        out[f"v{n}/{fname}"] = _file_minmax(
-            os.path.join(snap, fname), key
-        )
-    return out
-
-
-def _file_minmax(path: str, key: str) -> "Optional[list]":
-    """Footer ``[min, max]`` of ``key`` for one parquet file, or ``None``
-    when unusable (missing column stats, or a logical type with no
-    order-preserving JSON form / no pyarrow extraction — e.g. Decimal
-    raises ArrowNotImplementedError): readers keep such files
+def _file_minmax(path: str, cols: Sequence[str]) -> dict:
+    """Per-column footer ``[min, max]`` for one parquet file — one
+    metadata read collecting every requested column.  A column maps to
+    ``None`` when unusable (missing column stats, or a logical type
+    with no order-preserving JSON form / no pyarrow extraction — e.g.
+    Decimal raises ArrowNotImplementedError): readers keep such files
     conservatively."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    mins, maxs = [], []
-    for rg in range(md.num_row_groups):
-        grp = md.row_group(rg)
-        st = None
-        for ci in range(grp.num_columns):
-            col = grp.column(ci)
-            if col.path_in_schema == key:
-                st = col.statistics
-                break
-        if st is None or not st.has_min_max:
-            return None
-        try:
-            mins.append(st.min)
-            maxs.append(st.max)
-        except Exception:  # noqa: BLE001 — unextractable stats
-            return None
-    if not mins:
-        return None
-    lo, hi = _jsonable(min(mins)), _jsonable(max(maxs))
-    return [lo, hi] if lo is not None and hi is not None else None
-
-
-def _file_minmax_multi(path: str, cols: Sequence[str]) -> dict:
-    """Per-column footer ``[min, max]`` for one parquet file over a
-    column LIST — one metadata read collecting every requested column
-    (``_file_minmax``'s contract per column: ``None`` for unusable
-    stats, kept conservatively by readers)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
@@ -1056,43 +1036,6 @@ def _file_minmax_multi(path: str, cols: Sequence[str]) -> dict:
     return out
 
 
-def _collect_bucket_file_stats(
-    root: str, rel_dirs: "Sequence[str]", key: str
-) -> Dict[str, list]:
-    """Per-file ``[min, max]`` of ``key`` for every parquet file under
-    the given bucket directories (relative paths) — the bucketed-layout
-    counterpart of ``_collect_file_stats``, so range skipping composes
-    with bucket pruning."""
-    out: Dict[str, list] = {}
-    for rel in rel_dirs:
-        d = os.path.join(root, rel)
-        for fname in sorted(os.listdir(d)):
-            if fname.endswith(".parquet"):
-                out[f"{rel}/{fname}"] = _file_minmax(
-                    os.path.join(d, fname), key
-                )
-    return out
-
-
-def _collect_bucket_file_stats_multi(
-    root: str, rel_dirs: "Sequence[str]", cols: "List[str]"
-) -> Dict[str, dict]:
-    """Per-file per-column footer ``[min, max]`` over a column LIST for
-    every parquet file under the given bucket directories — the
-    bucketed-layout counterpart of the ``stats_cols`` collection, so
-    multi-column conjunction skipping composes with bucket pruning
-    (round 13)."""
-    out: Dict[str, dict] = {}
-    for rel in rel_dirs:
-        d = os.path.join(root, rel)
-        for fname in sorted(os.listdir(d)):
-            if fname.endswith(".parquet"):
-                out[f"{rel}/{fname}"] = _file_minmax_multi(
-                    os.path.join(d, fname), cols
-                )
-    return out
-
-
 def commit_snapshot(df: SDF, root: str, n: int, meta: Optional[dict] = None,
                     n_files: int = 8,
                     stats_key: Optional[str] = None,
@@ -1103,25 +1046,23 @@ def commit_snapshot(df: SDF, root: str, n: int, meta: Optional[dict] = None,
     safety: a marker never points at a missing snapshot).  Loser of a
     concurrent rename race discards its temp and trusts the winner.
 
-    ``stats_key=<col>`` (round 11, r10 VERDICT item 3) range-partitions
-    and sorts the snapshot on that column — so per-file key ranges are
-    disjoint, the layout that makes min/max stats selective — and
-    records each file's footer min/max in the commit marker.
-    ``read_version(key_range=...)`` then prunes files before the scan.
-    At 100 TB this is the difference between listing/scanning the whole
-    snapshot and touching only the k files a key predicate can match;
-    the stats collection itself reads footers only.
+    File statistics: the marker's one ``file_stats_cols`` record holds
+    each file's footer min/max for ``stats_key`` (recorded first, and as
+    the record's ``"key"``) and every ``stats_cols`` column, and
+    ``read_version(ranges={c: (lo, hi), ...})`` prunes files on the
+    CONJUNCTION of range predicates before the scan.  At 100 TB this is
+    the difference between listing/scanning the whole snapshot and
+    touching only the k files a predicate can match; the stats
+    collection itself reads footers only.
 
-    MULTI-COLUMN statistics (round 12, r11 VERDICT item 4):
-    ``stats_cols=[c1, c2, ...]`` records per-file footer min/max for
-    EVERY listed column under the marker's ``file_stats_cols``, and
-    ``read_version(ranges={c: (lo, hi), ...})`` prunes on the
-    CONJUNCTION of range predicates.  ``zorder_by=(a, b)`` lays the
-    snapshot out by the Morton interleave of the pair (the sink_zorder
-    layout), which is what keeps BOTH dimensions' per-file ranges tight
-    — a single-key sort records exact stats for the second column too,
-    but every file spans its whole domain, so only the Z-order layout
-    makes 2-d pruning selective."""
+    ``stats_key=<col>`` is also a layout: it range-partitions and sorts
+    the snapshot on that column — so per-file key ranges are disjoint,
+    the layout that makes min/max stats selective.  ``zorder_by=(a, b)``
+    lays the snapshot out by the Morton interleave of the pair (the
+    sink_zorder layout), which is what keeps BOTH dimensions' per-file
+    ranges tight — a single-key sort records exact stats for the second
+    column too, but every file spans its whole domain, so only the
+    Z-order layout makes 2-d pruning selective."""
     os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
     snap = os.path.join(root, f"v{n}")
     if _is_fence_marker(root, n):
@@ -1798,14 +1739,19 @@ def commit_bucketed(
     passes the schema and infers nothing, and a MERGE casts its output
     back to it.
 
-    ``stats_key=<col>`` composes range skipping WITH the bucketed
-    layout (round 11): the write range-partitions on (bucket,
-    stats_key) and sorts within partitions, so each bucket's files hold
-    disjoint stats-key ranges, and every file's footer min/max rides in
-    the marker.  ``read_bucketed(key_range=...)`` then prunes files
-    across all bucket dirs — and a later ``merge_into_bucketed``
-    carries the spec forward, refreshing stats for rewritten buckets
-    and keeping the recorded entries for by-reference ones.  This is
+    File statistics compose WITH the bucketed layout: the marker's one
+    ``file_stats_cols`` record holds every file's footer min/max for
+    ``stats_key`` (recorded first, and as the record's ``"key"``) and
+    every ``stats_cols`` column, across all bucket dirs, and
+    ``read_bucketed(ranges={c: (lo, hi)})`` prunes files on the
+    CONJUNCTION — composing with bucket pruning.  The spec rides in
+    the bucket metadata, so a later ``merge_into_bucketed`` or
+    ``compact_buckets`` refreshes the stats of rewritten buckets and
+    keeps the recorded entries of by-reference ones.
+
+    ``stats_key=<col>`` is also a layout (round 11): the write
+    range-partitions on (bucket, stats_key) and sorts within
+    partitions, so each bucket's files hold disjoint stats-key ranges —
     the Delta/Iceberg "partition by bucket, order by sort key" layout
     reduced to its essence.
 
@@ -1817,17 +1763,12 @@ def commit_bucketed(
     Hashed mode tolerates NULLs (murmur3 of NULL is a constant seed,
     an ordinary bucket).
 
-    MULTI-COLUMN statistics + Z-ORDER (round 13, r12 VERDICT item 2):
-    ``stats_cols=[c1, c2, ...]`` records per-file footer min/max for
-    EVERY listed column across all bucket dirs under the marker's
-    ``file_stats_cols``, and ``read_bucketed(ranges={c: (lo, hi)})``
-    prunes files on the CONJUNCTION — composing with bucket pruning.
-    ``zorder_by=(a, b)`` lays each bucket out by the Morton
-    interleave of the pair (within-bucket Z-order), which is what
-    keeps BOTH dimensions' per-file ranges tight; the spec rides in
-    the bucket metadata so merges and compactions preserve the layout
-    and refresh/carry the stats.  ``zorder_by`` and ``stats_key`` are
-    exclusive layouts, exactly as on plain snapshots.
+    Z-ORDER (round 13, r12 VERDICT item 2): ``zorder_by=(a, b)`` lays
+    each bucket out by the Morton interleave of the pair
+    (within-bucket Z-order), which is what keeps BOTH dimensions'
+    per-file ranges tight; merges and compactions preserve the layout.
+    ``zorder_by`` and ``stats_key`` are exclusive layouts, exactly as
+    on plain snapshots.
 
     Scale: the write shuffles once on the bucket id (plus the stats-key
     range dimension when given — ``n_files`` bounds total write tasks);
@@ -1884,20 +1825,9 @@ def commit_bucketed(
         },
         **(meta or {}),
     }
-    if stats_key:
-        payload["file_stats"] = {
-            "key": stats_key,
-            "files": _collect_bucket_file_stats(
-                root, sorted(man.values()), stats_key
-            ),
-        }
-    if stats_cols:
-        payload["file_stats_cols"] = {
-            "cols": list(stats_cols),
-            "files": _collect_bucket_file_stats_multi(
-                root, sorted(man.values()), list(stats_cols)
-            ),
-        }
+    rec = _stats_record(root, sorted(man.values()), stats_key, stats_cols)
+    if rec:
+        payload["file_stats_cols"] = rec
     _write_marker(root, n, payload)
 
 
@@ -1960,7 +1890,6 @@ def read_bucketed(
     root: str,
     n: Optional[int] = None,
     key_equals: Optional[dict] = None,
-    key_range: Optional["tuple"] = None,
     as_of=None,
     ranges: Optional[dict] = None,
 ) -> SDF:
@@ -1973,14 +1902,6 @@ def read_bucketed(
     parquet scan semantics: column pruning and predicate pushdown reach
     every referenced file.
 
-    ``key_range=(lo, hi)`` prunes FILES via the marker's per-file
-    min/max of the table's ``stats_key`` (recorded when the table was
-    committed with one; merges refresh rewritten buckets and carry
-    by-reference entries forward) — and COMPOSES with ``key_equals``:
-    bucket pruning first, then range skipping inside the surviving
-    bucket.  The residual predicates are always applied, so results are
-    exact regardless of how much the metadata could prune.
-
     ``key_equals={col: value, ...}`` (round 11) is the POINT-LOOKUP
     path: the bucket function is evaluated over the literal key
     driver-side (typed to the table's own schema — Spark's murmur3 is
@@ -1989,21 +1910,19 @@ def read_bucketed(
     directory is scanned, with the equality applied as a residual
     pushed filter.  This is bucket pruning for the table format: a key
     lookup on a B-bucket table reads 1/B of it no matter which physical
-    version dirs the manifest references — the complement of
-    ``read_version``'s min/max file skipping for range predicates.
-    The key set must be exactly the table's bucket key (a subset cannot
-    determine the bucket).
+    version dirs the manifest references — the complement of min/max
+    file skipping for range predicates.  The key set must be exactly
+    the table's bucket key (a subset cannot determine the bucket).
 
-    ``ranges={col: (lo, hi), ...}`` (round 13) is the MULTI-COLUMN
-    conjunction skip for BUCKETED tables: when the table was committed
-    with ``stats_cols`` (ideally with the within-bucket ``zorder_by``
-    layout that makes both dimensions selective), files are pruned on
-    the conjunction of inclusive range predicates — composing with
-    ``key_equals`` bucket pruning, residuals always applied.
-    ``ranges`` and ``key_range`` are alternative stats families;
-    passing both raises."""
-    if ranges and key_range:
-        raise ValueError("read_bucketed takes ranges= or key_range=, not both")
+    ``ranges={col: (lo, hi), ...}`` prunes FILES via the marker's
+    per-file min/max (recorded when the table was committed with
+    ``stats_key`` and/or ``stats_cols``; merges and compactions refresh
+    rewritten buckets and carry by-reference entries forward) on the
+    conjunction of inclusive range predicates — the ``read_version``
+    pruning read, COMPOSED with ``key_equals``: bucket pruning first,
+    then range skipping inside the surviving bucket.  The residual
+    predicates are always applied, so results are exact regardless of
+    how much the metadata could prune."""
     if as_of is not None:
         if n is not None:
             raise ValueError("read_bucketed takes n= or as_of=, not both")
@@ -2046,87 +1965,21 @@ def read_bucketed(
             for c, v in key_equals.items()
         ]
     if ranges:
-        stats_c = meta.get("file_stats_cols")
-        if not stats_c:
-            raise ValueError(
-                f"bucketed version of {root} has no multi-column file "
-                "statistics — commit with stats_cols= to enable ranges "
-                "reads"
-            )
-        unknown = sorted(set(ranges) - set(stats_c["cols"]))
-        if unknown:
-            raise ValueError(
-                f"ranges constrain column(s) {unknown} with no recorded "
-                f"statistics (recorded: {stats_c['cols']})"
-            )
-        for c, (lo, hi) in ranges.items():
-            first = next(
-                (
-                    per.get(c)
-                    for per in stats_c["files"].values()
-                    if per and per.get(c) is not None
-                ),
-                None,
-            )
-            if first is not None:
-                _check_range_types(
-                    {"key": c, "files": {"_": first}}, lo, hi, (lo, hi)
-                )
-        sel_dirs = tuple(man_sel.values())
-        keep = []
-        for rel, per_col in stats_c["files"].items():
-            if rel.rsplit("/", 1)[0] not in sel_dirs:
-                continue
-            ok = True
-            for c, (lo, hi) in ranges.items():
-                mm = (per_col or {}).get(c)
-                if mm is not None and (mm[1] < lo or mm[0] > hi):
-                    ok = False
-                    break
-            if ok:
-                keep.append(os.path.join(root, rel))
-        if not keep:
-            return _empty(spark, root, man, schema)
-        df = read_parquet(spark, *keep, schema=schema)
-        for c, (lo, hi) in ranges.items():
-            df = df.where(F.col(c).between(F.lit(lo), F.lit(hi)))
-        for r in residuals:
-            df = df.where(r)
-        return df
-    if key_range is None:
-        paths = [
-            os.path.join(root, man_sel[b])
-            for b in sorted(man_sel, key=lambda x: int(x))
-        ]
-        df = read_parquet(spark, *paths, schema=schema)
-        for r in residuals:
-            df = df.where(r)
-        return df
-    # range skipping over the (possibly bucket-pruned) file set: the
-    # marker's per-file stats cover by-reference files too (merges
-    # carry recorded entries forward), so one driver-side JSON read
-    # decides the scan set across every physical version dir
-    stats = meta.get("file_stats")
-    if not stats:
-        raise ValueError(
-            f"bucketed version of {root} has no file statistics — commit "
-            "with stats_key= to enable key_range reads"
+        # the marker's per-file stats cover by-reference files too, so
+        # one driver-side JSON read decides the scan set across every
+        # physical version dir
+        df = _read_ranges(
+            spark, root, meta, ranges, list(man_sel.values()), schema
         )
-    key = stats["key"]
-    lo, hi = key_range
-    _check_range_types(stats, lo, hi, key_range)
-    sel_dirs = tuple(man_sel.values())
-    keep = [
-        os.path.join(root, rel)
-        for rel, mm in stats["files"].items()
-        if rel.rsplit("/", 1)[0] in sel_dirs
-        and (mm is None or not (mm[1] < lo or mm[0] > hi))
-    ]
-    if not keep:
-        return _empty(spark, root, man, schema)
-    df = read_parquet(spark, *keep, schema=schema).where(
-        F.col(key).between(F.lit(lo), F.lit(hi))
-    )
+    else:
+        df = read_parquet(
+            spark,
+            *[
+                os.path.join(root, man_sel[b])
+                for b in sorted(man_sel, key=lambda x: int(x))
+            ],
+            schema=schema,
+        )
     for r in residuals:
         df = df.where(r)
     return df
@@ -2406,12 +2259,11 @@ def merge_into_bucketed(
             "touched_buckets": sorted(touched_set),
             **(meta or {}),
         }
-        # carry every recorded stats family forward (round 11 / round
-        # 13): fresh footer min/max for rewritten buckets, recorded
-        # entries for by-reference ones — so key_range= AND ranges=
-        # reads keep working across merges, as the commit_bucketed
-        # docstring promises
-        _apply_carried_stats(
+        # carry the file statistics forward: fresh footer min/max for
+        # rewritten buckets, recorded entries for by-reference ones —
+        # so ranges= reads keep working across merges, as the
+        # commit_bucketed docstring promises
+        _carry_stats(
             payload, root, newest_meta, new_man,
             sorted(written.values()), spec,
         )
@@ -2817,9 +2669,18 @@ def _diff_changes(f: SDF, t: SDF, keys: List[str]) -> SDF:
     ins = F.col(f"f.{fflag}").isNull()
     dele = F.col(f"t.{tflag}").isNull()
     nonkey = [c for c in tcols if c not in keys]
+
+    def comparable(side: str, c: str):
+        col = F.col(f"{side}.{c}")
+        if isinstance(tdtypes[c], MapType):
+            # a MAP has no ordering (<=> refuses it at analysis): compare
+            # its entries sorted, so entry order is not a change
+            return F.array_sort(F.map_entries(col))
+        return col
+
     same = reduce(
         lambda a, b: a & b,
-        [F.col(f"f.{c}").eqNullSafe(F.col(f"t.{c}")) for c in nonkey],
+        [comparable("f", c).eqNullSafe(comparable("t", c)) for c in nonkey],
         F.lit(True),
     )
     pre = F.struct(*[F.col(f"f.{c}").alias(c) for c in tcols])
@@ -3078,7 +2939,7 @@ def compact_buckets(
             "compacted_buckets": sorted(frag),
             **(meta or {}),
         }
-        _apply_carried_stats(
+        _carry_stats(
             payload, root, newest_meta, new_man,
             sorted(written.values()), spec,
         )
@@ -3086,81 +2947,7 @@ def compact_buckets(
         return n
 
 
-def _carried_bucket_stats(
-    root: str,
-    base_meta: dict,
-    new_man: Dict[str, str],
-    rewritten_rel_dirs: "Sequence[str]",
-    stats_key: str,
-) -> dict:
-    """File statistics for a bucketed commit that rewrote SOME buckets:
-    fresh footer min/max for the rewritten directories, base-marker
-    entries carried forward for by-reference ones (their files are
-    immutable, so the recorded stats stay exact)."""
-    old = (base_meta.get("file_stats") or {}).get("files", {})
-    kept_dirs = set(new_man.values()) - set(rewritten_rel_dirs)
-    files = {
-        rel: mm
-        for rel, mm in old.items()
-        if rel.rsplit("/", 1)[0] in kept_dirs
-    }
-    files.update(
-        _collect_bucket_file_stats(root, rewritten_rel_dirs, stats_key)
-    )
-    # Every manifest dir must be covered: key_range reads prune by
-    # iterating stats['files'] ONLY, so a base marker with incomplete
-    # file_stats (e.g. a merge committed by code predating the stats
-    # carry) would yield range reads that silently drop rows from
-    # uncovered buckets — fail the commit loudly instead (round-12
-    # ADVICE).
-    covered = {rel.rsplit("/", 1)[0] for rel in files}
-    gap = sorted(set(new_man.values()) - covered)
-    if gap:
-        raise ValueError(
-            f"carried file statistics cover no files in manifest dir(s) "
-            f"{gap} — the base marker's file_stats are incomplete; "
-            "recommit the base with stats (e.g. compact_mor/compact_"
-            "buckets with stats_key) before stats-carrying commits"
-        )
-    return {"key": stats_key, "files": files}
-
-
-def _carried_bucket_stats_cols(
-    root: str,
-    base_meta: dict,
-    new_man: Dict[str, str],
-    rewritten_rel_dirs: "Sequence[str]",
-    cols: "List[str]",
-) -> dict:
-    """``file_stats_cols`` carry for a bucketed commit that rewrote
-    SOME buckets (round 13): fresh multi-column footer min/max for the
-    rewritten directories, base-marker entries carried forward for
-    by-reference ones — the multi-column twin of
-    ``_carried_bucket_stats``, with the same every-dir-covered
-    invariant (conjunction pruning iterates the stats map only)."""
-    old = (base_meta.get("file_stats_cols") or {}).get("files", {})
-    kept_dirs = set(new_man.values()) - set(rewritten_rel_dirs)
-    files = {
-        rel: mm
-        for rel, mm in old.items()
-        if rel.rsplit("/", 1)[0] in kept_dirs
-    }
-    files.update(
-        _collect_bucket_file_stats_multi(root, rewritten_rel_dirs, cols)
-    )
-    covered = {rel.rsplit("/", 1)[0] for rel in files}
-    gap = sorted(set(new_man.values()) - covered)
-    if gap:
-        raise ValueError(
-            f"carried multi-column statistics cover no files in "
-            f"manifest dir(s) {gap} — the base marker's "
-            "file_stats_cols are incomplete; recommit the base with "
-            "stats_cols before stats-carrying commits"
-        )
-    return {"cols": list(cols), "files": files}
-
-
-def _apply_carried_stats(
+def _carry_stats(
     payload: dict,
     root: str,
     base_meta: dict,
@@ -3168,21 +2955,41 @@ def _apply_carried_stats(
     rewritten_rel_dirs: "Sequence[str]",
     spec: dict,
 ) -> None:
-    """Attach whichever file-statistics families the table's bucket
-    spec records (``stats_key`` → ``file_stats``, ``stats_cols`` →
-    ``file_stats_cols``) to a bucket-scoped commit's payload — ONE
-    call site per commit kind so a new stats family can never again
-    land in some rewrite paths only."""
-    if spec.get("stats_key"):
-        payload["file_stats"] = _carried_bucket_stats(
-            root, base_meta, new_man, rewritten_rel_dirs,
-            spec["stats_key"],
+    """Attach the file-statistics record to a bucket-scoped commit that
+    rewrote SOME buckets, when the table's bucket spec records a
+    ``stats_key`` or ``stats_cols``: fresh footer min/max for the
+    rewritten directories, base-marker entries carried forward for
+    by-reference ones (their files are immutable, so the recorded
+    stats stay exact)."""
+    kept_dirs = set(new_man.values()) - set(rewritten_rel_dirs)
+    old = (_file_stats(base_meta) or {}).get("files", {})
+    rec = _stats_record(
+        root, rewritten_rel_dirs, spec.get("stats_key"),
+        spec.get("stats_cols"),
+        carried={
+            rel: per
+            for rel, per in old.items()
+            if rel.rsplit("/", 1)[0] in kept_dirs
+        },
+    )
+    if rec is None:
+        return
+    # Every manifest dir must be covered: ranges reads prune by
+    # iterating the record's files ONLY, so a base marker with
+    # incomplete statistics (e.g. a merge committed by code predating
+    # the stats carry) would yield range reads that silently drop rows
+    # from uncovered buckets — fail the commit loudly instead (round-12
+    # ADVICE).
+    covered = {rel.rsplit("/", 1)[0] for rel in rec["files"]}
+    gap = sorted(set(new_man.values()) - covered)
+    if gap:
+        raise ValueError(
+            f"carried file statistics cover no files in manifest dir(s) "
+            f"{gap} — the base marker's statistics are incomplete; "
+            "recommit the base with stats (e.g. compact_mor/compact_"
+            "buckets with stats_key) before stats-carrying commits"
         )
-    if spec.get("stats_cols"):
-        payload["file_stats_cols"] = _carried_bucket_stats_cols(
-            root, base_meta, new_man, rewritten_rel_dirs,
-            list(spec["stats_cols"]),
-        )
+    payload["file_stats_cols"] = rec
 
 
 def commit_snapshot_exclusive(
@@ -3324,22 +3131,21 @@ def restore_table(
         # restore as an honest re-snapshot of the RESOLVED content
         # (read_version stacks the MoR anti-join chain) — the copy is
         # the documented cost of restoring without manifest
-        # indirection.  The target's statistics specs carry over so
-        # skipping SURVIVES the restore (round-12 review: dropping
-        # them silently broke key_range/ranges reads on the new
-        # latest); a Z-ORDER layout is not reconstructed — stats_cols
-        # are re-recorded on the restored files, with the weaker
-        # selectivity of the stats_key (or unordered) layout.  The
+        # indirection.  The target's statistics carry over so skipping
+        # SURVIVES the restore (round-12 review: dropping them silently
+        # broke ranges reads on the new latest): the record's ``key``
+        # rebuilds the stats_key sort layout and its columns are
+        # re-recorded on the restored files; a Z-ORDER layout is not
+        # reconstructed (weaker selectivity, same answers).  The
         # restored content is derived from ``to_version`` alone —
         # independent of the race base — so the claim never needs a
         # conflict check: any rival simply lands below the restore.
-        fs = tmeta.get("file_stats") or {}
-        fsc = tmeta.get("file_stats_cols") or {}
+        stats = _file_stats(tmeta) or {}
         return commit_snapshot_exclusive(
             read_version(spark, root, to_version), root,
             meta=payload_meta,
-            stats_key=fs.get("key"),
-            stats_cols=fsc.get("cols"),
+            stats_key=stats.get("key"),
+            stats_cols=stats.get("cols"),
         )
     # bucketed: zero data movement — claim a slot whose dir holds only
     # a placeholder (the non-empty dir makes the rename claim
@@ -3371,10 +3177,9 @@ def restore_table(
         "base_version": newest_meta.get("version", base),
         **payload_meta,
     }
-    if tmeta.get("file_stats"):
-        payload["file_stats"] = tmeta["file_stats"]
-    if tmeta.get("file_stats_cols"):
-        payload["file_stats_cols"] = tmeta["file_stats_cols"]
+    stats = _file_stats(tmeta)
+    if stats:
+        payload["file_stats_cols"] = stats
     _write_marker(root, n, payload)
     return n
 
@@ -3448,22 +3253,13 @@ def clone_shallow(
         },
         **(meta or {}),
     }
-    stats = smeta.get("file_stats")
+    stats = _file_stats(smeta)
     if stats:
-        payload["file_stats"] = {
-            "key": stats["key"],
-            "files": {
-                os.path.normpath(os.path.join(rel_src, rel)): mm
-                for rel, mm in stats["files"].items()
-            },
-        }
-    stats_c = smeta.get("file_stats_cols")
-    if stats_c:
         payload["file_stats_cols"] = {
-            "cols": stats_c["cols"],
+            **stats,
             "files": {
-                os.path.normpath(os.path.join(rel_src, rel)): mm
-                for rel, mm in stats_c["files"].items()
+                os.path.normpath(os.path.join(rel_src, rel)): per
+                for rel, per in stats["files"].items()
             },
         }
     # register BEFORE the marker (round 13): a crash between the two

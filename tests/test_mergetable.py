@@ -700,10 +700,10 @@ def test_table_merge_bucketed_query_by_reference_and_write_once(spark):
 def test_commit_stats_and_key_range_skipping(spark, tmp_path):
     """stats_key commits record per-file footer min/max in the marker
     (disjoint ranges — the snapshot is range-partitioned + sorted), and
-    a key_range read plans ONLY the overlapping files (inputFiles is a
-    proper subset), returns exactly the predicate rows, returns empty
-    for an out-of-range predicate without scanning, and raises loudly
-    on a version committed without stats."""
+    a ranges read on the key plans ONLY the overlapping files
+    (inputFiles is a proper subset), returns exactly the predicate
+    rows, returns empty for an out-of-range predicate without scanning,
+    and raises loudly on a version committed without stats."""
     from dataframe_expressions_spark.sources.mergetable import commit_meta
 
     root = str(tmp_path / "tbl")
@@ -711,9 +711,9 @@ def test_commit_stats_and_key_range_skipping(spark, tmp_path):
         [(k, float(k) * 2) for k in range(1000)], "k long, val double"
     )
     commit_snapshot(df, root, 0, n_files=8, stats_key="k")
-    stats = commit_meta(root, 0)["file_stats"]
-    assert stats["key"] == "k"
-    files = stats["files"]
+    stats = commit_meta(root, 0)["file_stats_cols"]
+    assert stats["key"] == "k" and stats["cols"] == ["k"]
+    files = {rel: per["k"] for rel, per in stats["files"].items()}
     assert len(files) == 8 and all(mm is not None for mm in files.values())
     # disjoint, covering ranges (range partition + sort within)
     spans = sorted(files.values())
@@ -721,7 +721,7 @@ def test_commit_stats_and_key_range_skipping(spark, tmp_path):
     for a, b in zip(spans, spans[1:]):
         assert a[1] < b[0]
 
-    pruned = read_version(spark, root, 0, key_range=(100, 260))
+    pruned = read_version(spark, root, 0, ranges={"k": (100, 260)})
     got = sorted((r.k, r.val) for r in pruned.collect())
     assert got == [(k, float(k) * 2) for k in range(100, 261)]
     touched = set(pruned.inputFiles())
@@ -734,12 +734,14 @@ def test_commit_stats_and_key_range_skipping(spark, tmp_path):
     assert {f.rsplit("/", 1)[1] for f in touched} == expect
 
     # out-of-range: exact empty, no matching files planned
-    assert read_version(spark, root, 0, key_range=(5000, 6000)).count() == 0
+    assert read_version(
+        spark, root, 0, ranges={"k": (5000, 6000)}
+    ).count() == 0
 
-    # versions without stats reject key_range loudly
+    # versions without stats reject ranges loudly
     commit_snapshot(df, root, 1)
     with pytest.raises(ValueError, match="no file statistics"):
-        read_version(spark, root, 1, key_range=(0, 10))
+        read_version(spark, root, 1, ranges={"k": (0, 10)})
 
 
 def test_table_read_skipping_query_prunes_files(spark):
@@ -834,9 +836,10 @@ def test_exclusive_commit_skips_orphans_and_supports_stats(spark, tmp_path):
     df = spark.createDataFrame([(k,) for k in range(100)], "k long")
     n = commit_snapshot_exclusive(df, root, n_files=4, stats_key="k")
     assert n == 2  # orphan v1 skipped, never overwritten
-    stats = commit_meta(root, 2)["file_stats"]
+    stats = commit_meta(root, 2)["file_stats_cols"]
     assert stats["key"] == "k" and len(stats["files"]) == 4
-    pruned = read_version(spark, root, 2, key_range=(10, 20))
+    assert all(per["k"] is not None for per in stats["files"].values())
+    pruned = read_version(spark, root, 2, ranges={"k": (10, 20)})
     assert pruned.count() == 11
     assert len(pruned.inputFiles()) < 4
 
@@ -968,8 +971,8 @@ def test_bucketed_null_keys_reject_loudly(spark, tmp_path):
 def test_stats_unorderable_types_kept_conservatively(spark, tmp_path):
     """Decimal footer stats have no order-preserving JSON form —
     str(Decimal) compares lexicographically and could PRUNE a matching
-    file — so such files record None stats and every key_range read
-    keeps them; mismatched key_range types reject loudly instead of
+    file — so such files record None stats and every ranges read
+    keeps them; mismatched range bound types reject loudly instead of
     comparing str against numbers."""
     from decimal import Decimal
 
@@ -981,10 +984,13 @@ def test_stats_unorderable_types_kept_conservatively(spark, tmp_path):
         "price decimal(10,2)",
     )
     commit_snapshot(df, root, 0, n_files=4, stats_key="price")
-    files = commit_meta(root, 0)["file_stats"]["files"]
-    assert len(files) == 4 and all(mm is None for mm in files.values())
+    files = commit_meta(root, 0)["file_stats_cols"]["files"]
+    assert len(files) == 4
+    assert all(per == {"price": None} for per in files.values())
     # conservative: all files read, result exact anyway
-    got = read_version(spark, root, 0, key_range=(Decimal("900"), Decimal("1050")))
+    got = read_version(
+        spark, root, 0, ranges={"price": (Decimal("900"), Decimal("1050"))}
+    )
     assert got.count() == 15  # 900.50 .. 1040.50 by 10
     assert len(got.inputFiles()) == 4  # nothing pruned — nothing LOST
 
@@ -994,10 +1000,10 @@ def test_stats_unorderable_types_kept_conservatively(spark, tmp_path):
     )
     commit_snapshot(sdf, root, 1, n_files=2, stats_key="name")
     assert read_version(
-        spark, root, 1, key_range=("k0010", "k0020")
+        spark, root, 1, ranges={"name": ("k0010", "k0020")}
     ).count() == 11  # str stats prune validly (lexicographic == natural)
     with pytest.raises(ValueError, match="do not match the recorded"):
-        read_version(spark, root, 1, key_range=(10, 20))
+        read_version(spark, root, 1, ranges={"name": (10, 20)})
 
 
 def test_merge_clause_key_assignment_rejected(spark):
@@ -1251,16 +1257,17 @@ def test_bucketed_merge_carries_file_stats_forward(spark, tmp_path):
         not_matched_insert={"bal": "s.delta"},
     )
     m1 = commit_meta(root, 1)
-    stats = m1["file_stats"]
-    assert stats["key"] == "k"
+    stats = m1["file_stats_cols"]
+    assert stats["key"] == "k" and stats["cols"] == ["k"]
     rels = set(stats["files"])
+    assert all(set(per) == {"k"} for per in stats["files"].values())
     # carried entries point at v0 (by-reference), refreshed at v1
     assert any(r.startswith("v0/") for r in rels)
     assert any(r.startswith("v1/") for r in rels)
     # every manifest dir is covered by the stats
     covered = {r.rsplit("/", 1)[0] for r in rels}
     assert covered == set(m1["manifest"].values())
-    got = read_bucketed(spark, root, 1, key_range=(0, 3))
+    got = read_bucketed(spark, root, 1, ranges={"k": (0, 3)})
     assert {r.k: r.bal for r in got.collect()} == {
         0: 0.0, 1: 101.0, 2: 2.0, 3: 3.0
     }
@@ -1309,8 +1316,8 @@ def test_compact_buckets_rewrites_only_fragmented(spark, tmp_path):
     got = sorted(tuple(r) for r in read_bucketed(spark, root, 1).collect())
     assert got == sorted(tuple(r) for r in tgt.collect())
     # stats survived the compaction and still prune
-    assert set(m1["file_stats"]["files"]) and read_bucketed(
-        spark, root, 1, key_range=(10, 12)
+    assert set(m1["file_stats_cols"]["files"]) and read_bucketed(
+        spark, root, 1, ranges={"k": (10, 12)}
     ).count() == 3
     # idempotent threshold: nothing fragmented now -> no new version
     assert compact_buckets(spark, root, max_files=1) == 1
@@ -2182,8 +2189,8 @@ def test_occ_compact_racing_merge_both_land(spark, tmp_path):
         for r in mt.feed_since(spark, root, 0).collect()
     }
     assert changed == {0, 8}
-    # key_range skipping still works over the final mixed manifest
-    sel = mt.read_bucketed(spark, root, key_range=(0, 4)).collect()
+    # range skipping still works over the final mixed manifest
+    sel = mt.read_bucketed(spark, root, ranges={"k": (0, 4)}).collect()
     assert {r.k for r in sel} == {0, 1, 2, 3, 4}
 
 
@@ -2355,7 +2362,7 @@ def test_multicol_stats_prune_per_dimension(spark, tmp_path):
 
 def test_multicol_stats_guardrails(spark, tmp_path):
     """ranges= refuses: tables without stats_cols, unknown columns,
-    ranges+key_range together, and type-mismatched bounds."""
+    and type-mismatched bounds."""
     from dataframe_expressions_spark.sources.mergetable import (
         commit_snapshot,
         read_version,
@@ -2368,10 +2375,6 @@ def test_multicol_stats_guardrails(spark, tmp_path):
     commit_snapshot(df, root, 0, n_files=4, stats_cols=["x"])
     with pytest.raises(ValueError, match="no recorded"):
         read_version(spark, root, 0, ranges={"y": (0, 5)})
-    with pytest.raises(ValueError, match="not both"):
-        read_version(
-            spark, root, 0, ranges={"x": (0, 5)}, key_range=(0, 5)
-        )
     with pytest.raises(ValueError, match="stats type"):
         read_version(spark, root, 0, ranges={"x": ("a", "b")}).collect()
 
@@ -2475,10 +2478,6 @@ def test_bucketed_multicol_zorder_prune_and_carry(spark, tmp_path):
     assert {r.k for r in cv.collect() if r.val == 1.0} == {1, 5, 9}
 
     # guardrails mirror the plain-table surface
-    with pytest.raises(ValueError, match="not both"):
-        mt.read_bucketed(
-            spark, root, ranges={"x": (0, 5)}, key_range=(0, 5)
-        )
     with pytest.raises(ValueError, match="exactly two"):
         mt.commit_bucketed(
             df, str(tmp_path / "t5"), 0, on="k", n_buckets=4,
@@ -2758,7 +2757,7 @@ def test_restore_plain_table_copies_and_mor_raises(spark, tmp_path):
         spark.createDataFrame([(1, 1)], "k long, y long"), roots, 1,
     )
     n2 = mt.restore_table(spark, roots, 0)
-    pruned = mt.read_version(spark, roots, n2, key_range=(10, 20))
+    pruned = mt.read_version(spark, roots, n2, ranges={"k": (10, 20)})
     assert pruned.count() == 11 and len(pruned.inputFiles()) < 4
     assert mt.read_version(
         spark, roots, n2, ranges={"y": (0, 10)}
@@ -3177,7 +3176,7 @@ def test_occ_three_way_maintenance_race(spark, tmp_path):
         assert mt.read_bucketed(spark, root, n).count() == 40
     # range skipping still works over whatever manifest mix landed
     sel = {r.k for r in mt.read_bucketed(
-        spark, root, key_range=(0, 4)).collect()}
+        spark, root, ranges={"k": (0, 4)}).collect()}
     assert sel == {0, 1, 2, 3, 4}
 
 
@@ -3687,3 +3686,227 @@ def test_claim_slot_degrades_on_claimless_rival_dir(spark, tmp_path,
     assert newest.get("rival") is True
     assert os.path.isdir(os.path.join(root, "v2"))
     assert not os.path.exists(tmp)
+
+
+# ---------------------------------------------------------------------------
+# one file-statistics record: every commit kind, legacy markers, MAP feeds
+# ---------------------------------------------------------------------------
+
+
+def _version_files(root, meta):
+    """Every parquet file of the version ``meta`` describes, as paths
+    relative to ``root`` (the keys a statistics record uses)."""
+    n = meta["version"]
+    dirs = meta["manifest"].values() if "manifest" in meta else [f"v{n}"]
+    return {
+        f"{d}/{f}"
+        for d in dirs
+        for f in os.listdir(os.path.join(root, d))
+        if f.endswith(".parquet")
+    }
+
+
+def test_every_commit_kind_writes_the_one_stats_record(spark, tmp_path):
+    """Every commit kind that records file statistics writes the one
+    ``file_stats_cols`` record and no ``file_stats``; a ``stats_key``
+    is the first recorded column (once, even when ``stats_cols`` lists
+    it too) and the record's ``key``; the record covers exactly the
+    version's files."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    df = spark.createDataFrame(
+        [(k, k % 7, float(k)) for k in range(64)],
+        "k long, y long, val double",
+    )
+    src = spark.createDataFrame([(1, 1.0), (100, 2.0)], "k long, d double")
+    plain, bk = str(tmp_path / "plain"), str(tmp_path / "bk")
+    made = {}  # kind -> (root, version, expected cols, expected key)
+    mt.commit_snapshot(
+        df, plain, 0, n_files=4, stats_key="k", stats_cols=["y", "k"]
+    )
+    made["commit_snapshot"] = (plain, 0, ["k", "y"], "k")
+    made["commit_snapshot_exclusive"] = (
+        plain,
+        mt.commit_snapshot_exclusive(
+            df, plain, n_files=4, stats_key="k", stats_cols=["y"]
+        ),
+        ["k", "y"], "k",
+    )
+    mt.commit_mor_delete(spark, plain, "k = 3", on="k")
+    made["compact_mor"] = (
+        plain, mt.compact_mor(spark, plain, n_files=4, stats_key="k"),
+        ["k"], "k",
+    )
+    made["restore_table (plain)"] = (
+        plain, mt.restore_table(spark, plain, 0), ["k", "y"], "k",
+    )
+    made["optimize_zorder"] = (
+        plain, mt.optimize_zorder(spark, plain, ("k", "y"), n_files=4),
+        ["k", "y"], None,
+    )
+    mt.commit_bucketed(
+        df, bk, 0, on="k", n_buckets=4, hashed=False, n_files=16,
+        stats_key="k", stats_cols=["y"],
+    )
+    made["commit_bucketed"] = (bk, 0, ["k", "y"], "k")
+    m = mt.merge_into_bucketed(
+        spark, bk, src, {"val": "t.val + s.d"}, {"val": "s.d"}
+    )
+    made["merge_into_bucketed"] = (bk, m, ["k", "y"], "k")
+    c = mt.compact_buckets(spark, bk, max_files=1)
+    assert c == m + 1  # buckets 2 and 3 were still fragmented
+    made["compact_buckets"] = (bk, c, ["k", "y"], "k")
+    made["restore_table (bucketed)"] = (
+        bk, mt.restore_table(spark, bk, 0), ["k", "y"], "k",
+    )
+    clone = str(tmp_path / "clone")
+    made["clone_shallow"] = (clone, mt.clone_shallow(bk, clone),
+                             ["k", "y"], "k")
+    for kind, (root, n, cols, key) in made.items():
+        meta = mt.commit_meta(root, n)
+        assert "file_stats" not in meta, kind
+        rec = meta["file_stats_cols"]
+        assert rec["cols"] == cols and rec.get("key") == key, (kind, rec)
+        assert set(rec["files"]) == _version_files(root, meta), kind
+        assert all(set(per) == set(cols) for per in rec["files"].values())
+
+
+def _to_legacy_marker(root, n, with_cols):
+    """Rewrite marker ``n`` in the form markers had before the two
+    statistics families were folded: a one-column ``file_stats`` for
+    the stats key and, ``with_cols``, a ``file_stats_cols`` over the
+    other columns only."""
+    import json
+
+    path = os.path.join(root, "_commits", str(n))
+    with open(path) as fh:
+        doc = json.load(fh)
+    rec = doc.pop("file_stats_cols")
+    key = rec["key"]
+    doc["file_stats"] = {
+        "key": key,
+        "files": {rel: per[key] for rel, per in rec["files"].items()},
+    }
+    rest = [c for c in rec["cols"] if c != key]
+    if with_cols:
+        doc["file_stats_cols"] = {
+            "cols": rest,
+            "files": {
+                rel: {c: per[c] for c in rest}
+                for rel, per in rec["files"].items()
+            },
+        }
+    with open(path, "w") as fh:
+        json.dump(doc, fh)
+
+
+@pytest.mark.parametrize("with_cols", [False, True])
+def test_legacy_stats_markers_prune_and_carry(spark, tmp_path, with_cols):
+    """A marker in the old two-field form (``file_stats`` alone, or
+    next to ``file_stats_cols``) prunes the same files through
+    ``ranges=`` as the one record, and merge, compaction and restore
+    carry its statistics forward as the one record."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    cols = ["y"] if with_cols else None
+    want = ["k", "y"] if with_cols else ["k"]
+    df = spark.createDataFrame(
+        [(k, k % 7, float(k)) for k in range(256)],
+        "k long, y long, val double",
+    )
+    plain = str(tmp_path / "plain")
+    mt.commit_snapshot(
+        df, plain, 0, n_files=8, stats_key="k", stats_cols=cols
+    )
+    rng = {"k": (10, 40)}
+    files = set(mt.read_version(spark, plain, 0, ranges=rng).inputFiles())
+    _to_legacy_marker(plain, 0, with_cols)
+    legacy = mt.read_version(spark, plain, 0, ranges=rng)
+    assert set(legacy.inputFiles()) == files and len(files) < 8
+    assert sorted(r.k for r in legacy.collect()) == list(range(10, 41))
+    if with_cols:
+        both = mt.read_version(
+            spark, plain, 0, ranges={"k": (10, 40), "y": (0, 1)}
+        )
+        assert sorted(r.k for r in both.collect()) == [
+            k for k in range(10, 41) if k % 7 <= 1
+        ]
+    # a plain restore rebuilds the key's sort layout from the record
+    n = mt.restore_table(spark, plain, 0)
+    meta = mt.commit_meta(plain, n)
+    assert "file_stats" not in meta
+    assert meta["file_stats_cols"]["key"] == "k"
+    assert meta["file_stats_cols"]["cols"] == want
+    restored = mt.read_version(spark, plain, n, ranges=rng)
+    assert restored.count() == 31 and len(restored.inputFiles()) < 8
+
+    bk = str(tmp_path / "bk")
+    mt.commit_bucketed(
+        df, bk, 0, on="k", n_buckets=4, hashed=False, n_files=16,
+        stats_key="k", stats_cols=cols,
+    )
+    files = set(mt.read_bucketed(spark, bk, 0, ranges=rng).inputFiles())
+    _to_legacy_marker(bk, 0, with_cols)
+    assert set(
+        mt.read_bucketed(spark, bk, 0, ranges=rng).inputFiles()
+    ) == files
+    src = spark.createDataFrame([(1, 1.0), (300, 2.0)], "k long, d double")
+    m = mt.merge_into_bucketed(
+        spark, bk, src, {"val": "t.val + s.d"}, {"val": "s.d"}
+    )
+    _to_legacy_marker(bk, m, with_cols)  # compaction carries from it
+    c = mt.compact_buckets(spark, bk, max_files=1)
+    assert c == m + 1
+    r = mt.restore_table(spark, bk, 0)
+    # after the compaction every bucket is one file spanning its keys:
+    # only bucket 0's file reaches the inserted key 300; the restored
+    # v0 layout keeps its sorted per-bucket files
+    for v, rng, want_rows in (
+        (c, {"k": (280, 400)}, {300: 2.0}),
+        (r, {"k": (0, 3)}, {k: float(k) for k in range(4)}),
+    ):
+        meta = mt.commit_meta(bk, v)
+        assert "file_stats" not in meta
+        rec = meta["file_stats_cols"]
+        assert rec["key"] == "k" and rec["cols"] == want
+        assert set(rec["files"]) == _version_files(bk, meta)
+        got = mt.read_bucketed(spark, bk, v, ranges=rng)
+        assert {x.k: x.val for x in got.collect()} == want_rows
+        assert set(got.inputFiles()) < set(
+            mt.read_bucketed(spark, bk, v).inputFiles()
+        )
+    assert {
+        x.k: x.val
+        for x in mt.read_bucketed(spark, bk, c, ranges={"k": (0, 3)})
+        .collect()
+    } == {0: 0.0, 1: 2.0, 2: 2.0, 3: 3.0}
+
+
+def test_table_changes_compares_map_columns_by_entries(spark, tmp_path):
+    """A MAP column cannot be compared with <=>; the change feed
+    compares its sorted entries, so reordered entries are no change and
+    a changed value is an update."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    root = str(tmp_path / "tbl")
+    v0 = spark.sql(
+        "SELECT 1L AS k, map('a', 1L, 'b', 2L) AS m "
+        "UNION ALL SELECT 2L, map('a', 1L, 'b', 2L)"
+    )
+    v1 = spark.sql(
+        "SELECT 1L AS k, map('b', 2L, 'a', 1L) AS m "
+        "UNION ALL SELECT 2L, map('a', 1L, 'b', 3L)"
+    )
+    mt.commit_snapshot(v0, root, 0, n_files=1)
+    mt.commit_snapshot(v1, root, 1, n_files=1)
+    order = {
+        n: {r.k: r.ks for r in mt.read_version(spark, root, n)
+            .selectExpr("k", "map_keys(m) AS ks").collect()}
+        for n in (0, 1)
+    }
+    assert order[0][1] == ["a", "b"] and order[1][1] == ["b", "a"]
+    got = sorted(
+        (r.k, r.change_type, r.m["b"])
+        for r in mt.table_changes(spark, root, 0, 1, on="k").collect()
+    )
+    assert got == [(2, "update_postimage", 3), (2, "update_preimage", 2)]

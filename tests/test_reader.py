@@ -157,7 +157,7 @@ def _table(spark, root, *extra):
 
 def test_bucketed_ops_fire_no_schema_job(spark, tmp_path):
     root = str(tmp_path / "tbl")
-    _table(spark, root)
+    _table(spark, root, "map('m', id) AS mp")
     src = spark.createDataFrame([(1, 1.0), (100, 2.0)], "k long, d double")
     src = src.selectExpr("k", "cast(d AS decimal(12,2)) AS d")
     with jobs(spark) as merge:
