@@ -23,47 +23,62 @@ commit-protocol essence):
                           cache (vacuum retires stale ones)
       v<n>/            -- immutable parquet snapshot for version n
 
-Commit protocol (crash-safe, concurrent-safe):
+Commit protocol (crash-safe, concurrent-safe).  The commit point is
+the marker ``_commits/<n>``, published with the CommitStore's if-absent
+put (``_write_marker``) only after the snapshot dir ``v<n>`` is written
+in full, so a marker never points at missing data.  There are two ways
+to a marker:
 
-1. write the snapshot under a pid-suffixed temp dir, ``os.rename`` it to
-   ``v<n>`` (atomic on POSIX);
-2. write the commit marker ``_commits/<n>`` the same way (tmp + rename).
+1. caller-numbered (``commit_snapshot`` / ``commit_bucketed``, which
+   store builds use for their idempotent fixed versions): write
+   ``v<n>.tmp<pid>``, ``os.rename`` it to ``v<n>`` (the rename loser
+   deletes its temp and trusts the winner — the same discipline as
+   sources/tables._materialize), then publish marker ``n``;
+2. the one OCC loop (``_occ_commit``) every other commit kind runs —
+   the bucketed MERGE, bucket compaction, MoR delete, MoR compaction,
+   Z-order, ``commit_snapshot_exclusive`` and the bucketed restore.
+   Per attempt: write a writer-private temp ``.tmp<pid>-<uuid>-<try>``,
+   claim the first free version slot above the base with an if-absent
+   ``_claims/<n>`` put, consult the kind's rival policy for every
+   commit that landed in between (rebase past it, or retry the whole
+   attempt from the new latest version), rename the temp to ``v<n>``
+   (uncontended — the claim already won the slot) and publish marker
+   ``n``.  The temp is removed on every exit that does not commit;
+   after ``max_retries`` conflicting attempts the call raises
+   ``MergeConflictError``.
 
 Readers resolve the table to ``max(n with marker AND snapshot dir)`` —
-a crashed writer leaves at worst an orphaned ``v<n>``/temp dir with no
-marker, which is INVISIBLE to every reader and swept later.  Two racing
-writers of the same version: the rename loser deletes its temp and reads
-the winner's snapshot (same discipline as sources/tables._materialize).
+a crashed writer leaves at worst a temp dir or an orphaned ``v<n>``
+with no marker, which is INVISIBLE to every reader (vacuum sweeps the
+orphan once superseded).
 
 Atomic-swap caveat (the store_root() caveat, sharpened for tables):
-object stores have NO atomic directory rename, so there step 1 becomes
-"write the snapshot files to their final path" and the MARKER alone is
-the commit — a single-key PUT, atomic on S3/GCS/ABFS.  The reader logic
-(marker = truth) already implements that; the POSIX rename is just free
-extra tidiness.  Multi-writer version-number races need if-absent
-commit semantics — ``commit_snapshot_exclusive`` provides them (round
-11; round 14 moved BOTH primitives onto the 3-op CommitStore in
-sources/commitstore.py): the version slot is claimed with an if-absent
-``_claims/<n>`` put, the marker is published with an if-absent
-``_commits/<n>`` put (each a single conditional PUT on an object
-store: S3 If-None-Match / GCS generation-match 0 / ABFS ETag; tmp +
-``os.link`` on the local backend), and losers retry
-with the next number, so concurrent writers land as consecutive
-versions with no lost COMMIT — both snapshots are durable and
-addressable.  That alone is NOT serializability: a MERGE that lost the
-claim still committed a state derived from a stale base, silently
-omitting the winner's changes from ``latest_version`` — the lost-update
-anomaly.  ``merge_into_bucketed`` (the one bucketed MERGE) closes it
-with OCC write-set conflict detection: every merge marker records its
-``read_base`` and ``touched_buckets`` write-set; on claim loss the
-writer inspects the intervening commits and either REBASES (write-sets
-disjoint — the merged buckets are still valid, so the new manifest is
-the manifest union: latest manifest overlaid with this writer's
-rewritten buckets; zero recompute) or RE-RUNS the merge from the new
-base (write-sets overlap), aborting with ``MergeConflictError`` only
-after bounded retries.  On an object store the same loop runs
-with the marker PUT carrying the if-absent flag (S3 If-None-Match /
-GCS generation-match 0 / ABFS ETag) — the problem Delta's LogStore /
+object stores have NO atomic directory rename, so there the snapshot
+write becomes "write the snapshot files to their final path" and the
+MARKER alone is the commit — a single-key PUT, atomic on S3/GCS/ABFS.
+The reader logic (marker = truth) already implements that; the POSIX
+rename is just free extra tidiness.  Multi-writer version-number races
+need if-absent commit semantics, which the OCC loop provides (round 14
+moved BOTH primitives onto the 3-op CommitStore in
+sources/commitstore.py): the claim and the marker are each a single
+conditional PUT on an object store (S3 If-None-Match / GCS
+generation-match 0 / ABFS ETag; tmp + ``os.link`` on the local
+backend), and losers move on to the next number, so concurrent writers
+land as consecutive versions with no lost COMMIT — both snapshots are
+durable and addressable.  That alone is NOT serializability: a MERGE
+that lost the claim would still commit a state derived from a stale
+base, silently omitting the winner's changes from ``latest_version`` —
+the lost-update anomaly.  The rival policy closes it for the kinds that
+derive their snapshot from the table: every bucket-scoped marker
+(``merge_into_bucketed``, ``compact_buckets``) records its ``read_base``
+and its bucket write-set, and a rival with a DISJOINT write-set is
+rebased past (the rewritten buckets are still valid, so the new
+manifest is the manifest union: latest manifest overlaid with this
+writer's rewritten buckets; zero recompute) while an overlapping one
+RE-RUNS the attempt from the new base; the plain-table kinds (MoR
+delete, MoR compaction, Z-order) conflict with ANY rival; the kinds
+whose content ignores the base (snapshot replace, restore) rebase past
+every rival.  This is the problem Delta's LogStore /
 commit-coordinator solves, reduced to its retry-loop essence.
 
 Time travel: every committed version stays readable (``read_version``);
@@ -797,9 +812,7 @@ def commit_meta(root: str, n: Optional[int] = None) -> dict:
     return meta
 
 
-def _write_marker(
-    root: str, n: int, payload: Optional[dict], exc: type = RuntimeError
-) -> None:
+def _write_marker(root: str, n: int, payload: Optional[dict]) -> None:
     """Publish version ``n``'s commit marker — the commit point — with
     the CommitStore's if-absent put: the one marker publish every
     commit kind shares, so NO code path can replace a published
@@ -817,9 +830,9 @@ def _write_marker(
     publish succeeded, return; a fence tombstone → the slot is
     permanently retired (a rival declared this writer dead mid-publish,
     or the slot was fenced before it) and the commit did NOT land,
-    raised as ``exc`` so an OCC caller may retry; any other occupant
-    means a foreign marker holds the slot, which is protocol
-    corruption (RuntimeError)."""
+    raised as ``MergeConflictError`` (a ``RuntimeError``) so the
+    caller may retry; any other occupant means a foreign marker holds
+    the slot, which is protocol corruption (RuntimeError)."""
     import time
     import uuid
 
@@ -846,7 +859,7 @@ def _write_marker(
         _maybe_checkpoint(root, n)
         return  # our own earlier put landed; only the ack was lost
     if occ.get("fenced"):
-        raise exc(
+        raise MergeConflictError(
             f"version {n} of {root} is fenced: its number is "
             "permanently retired (a rival OCC writer declared its "
             "claimant dead after marker_timeout) — the commit did NOT "
@@ -1042,7 +1055,7 @@ def commit_snapshot(df: SDF, root: str, n: int, meta: Optional[dict] = None,
                     stats_cols: Optional[Sequence[str]] = None,
                     zorder_by: Optional[Sequence[str]] = None) -> None:
     """Publish ``df`` as version ``n``: temp-write + rename the snapshot,
-    THEN temp-write + rename the marker (the ordering is the crash
+    THEN publish the marker if-absent (the ordering is the crash
     safety: a marker never points at a missing snapshot).  Loser of a
     concurrent rename race discards its temp and trusts the winner.
 
@@ -1317,10 +1330,32 @@ def vacuum(root: str, keep: int = 1) -> "list[int]":
     # marker-mtime fallback, inf when a racing vacuum took the marker)
     now = time.time()
     kept = {f"v{n}" for n in committed if n not in drop}
+
+    def retire_dead_slot(k: int) -> bool:
+        """The one dead-slot rule both sweeps share: slot ``k``'s writer
+        is dead once a KEPT version above ``k`` committed over an hour
+        ago (its number was superseded long ago), and the slot is then
+        retired by a fence — published BEFORE anything of the slot is
+        deleted (round-14 review): with the marker slot empty, a
+        stalled claimant's late ``_write_marker`` could otherwise land
+        a marker pointing at data the caller is about to remove, the
+        silent lost update the fence mechanism exists to prevent.  A
+        LOST fence race means the claimant published after all: False,
+        keep everything (it is now a committed version this vacuum's
+        committed-set snapshot predates)."""
+        superseded_age = max(
+            (now - _marker_committed_at(root, m) for m in kept_versions
+             if m > k),
+            default=0.0,
+        )
+        return superseded_age > 3600 and (
+            _is_fence_marker(root, k) or _publish_fence(root, k)
+        )
+
     for name in os.listdir(root):
-        # pure `v<n>` orphans only — a `.tmp<pid>` dir may belong to a
-        # LIVE concurrent commit_snapshot (its own except-path cleans up
-        # on failure; the rename loser removes it on success).  An
+        # pure `v<n>` orphans only — a temp dir (``v<n>.tmp<pid>`` or
+        # the OCC loop's ``.tmp<pid>-<uuid>-<try>``) may belong to a
+        # LIVE concurrent commit, which removes its own on failure.  An
         # orphan is swept only when a LATER version's commit is over an
         # hour old (see docstring): a marker-less v<n> whose number is
         # not yet superseded-and-aged may be a concurrent commit caught
@@ -1343,42 +1378,18 @@ def vacuum(root: str, keep: int = 1) -> "list[int]":
             and not any(
                 r == name or r.startswith(name + "/") for r in referenced
             )
+            and retire_dead_slot(int(name[1:]))
         ):
-            k = int(name[1:])
-            superseded_age = max(
-                (
-                    now - _marker_committed_at(root, m)
-                    for m in kept_versions
-                    if m > k
-                ),
-                default=0.0,
-            )
-            if superseded_age > 3600:
-                if not _is_fence_marker(root, k):
-                    # fence BEFORE the rmtree (round-14 review): the
-                    # marker slot is empty here, so a stalled
-                    # claimant's late _write_marker could still
-                    # land between this delete and the claim sweep's
-                    # fence below (or after a vacuum crash between the
-                    # two) — a marker pointing at data this very
-                    # rmtree removed, the silent lost update the fence
-                    # mechanism exists to prevent.  Fence-first closes
-                    # the window; a LOST fence race means the claimant
-                    # published after all — keep the dir (it is now a
-                    # committed version this vacuum's committed-set
-                    # snapshot predates).
-                    if not _publish_fence(root, k):
-                        continue
-                # the fence MARKER is kept PERMANENTLY (round-13, r12
-                # ADVICE): unlinking it would re-open the slot for a
-                # claimant stalled past the horizon — its if-absent
-                # marker link would then succeed for a version the
-                # chain already skipped, whose data this very rmtree
-                # deletes an instant later: exactly the silent lost
-                # update the fence exists to prevent.  A fence is one
-                # tiny JSON file and version numbers never reuse the
-                # slot, so keeping it forever costs nothing.
-                shutil.rmtree(path, ignore_errors=True)
+            # the fence MARKER is kept PERMANENTLY (round-13, r12
+            # ADVICE): unlinking it would re-open the slot for a
+            # claimant stalled past the horizon — its if-absent marker
+            # link would then succeed for a version the chain already
+            # skipped, whose data this very rmtree deletes an instant
+            # later: exactly the silent lost update the fence exists to
+            # prevent.  A fence is one tiny JSON file and version
+            # numbers never reuse the slot, so keeping it forever costs
+            # nothing.
+            shutil.rmtree(path, ignore_errors=True)
     # claim-object sweep (round 14): a _claims/<k> is garbage once its
     # slot can never be honestly claimed again — FENCED (the permanent
     # fence marker blocks the slot; the claim is redundant) or
@@ -1391,35 +1402,9 @@ def vacuum(root: str, keep: int = 1) -> "list[int]":
             if not name.isdigit():
                 continue
             k = int(name)
-            if _is_fence_marker(root, k):
-                removable = True
-            elif _marker_exists(root, k):
-                continue
-            else:
-                dead = (
-                    max(
-                        (
-                            now - _marker_committed_at(root, m)
-                            for m in kept_versions
-                            if m > k
-                        ),
-                        default=0.0,
-                    )
-                    > 3600
-                )
-                if not dead:
-                    continue
-                # FENCE before removing a dead writer's claim (round-14
-                # review): with the claim gone and the marker slot
-                # EMPTY, the stalled claimant's late _write_marker
-                # put would SUCCEED — landing a version the chain
-                # skipped, the exact silent late-publish the fence
-                # mechanism closes.  A lost fence race means the
-                # claimant published after all: keep everything.
-                if not _publish_fence(root, k):
-                    continue
-                removable = True
-            if removable:
+            if _is_fence_marker(root, k) or (
+                not _marker_exists(root, k) and retire_dead_slot(k)
+            ):
                 _store_delete(root, f"_claims/{name}")
     # checkpoint maintenance (round 15): checkpoints are an advisory
     # cache, so this is pure housekeeping — (a) when versions were
@@ -2108,7 +2093,7 @@ def merge_into_bucketed(
     rewrites k/B of the table instead of all of it; the touched-bucket
     set is one map-side-combined distinct over the source's derived
     bucket id (≤ B tiny rows to the driver).  A rebase costs one marker
-    read + one rename retry (no data touched) — so N concurrent merges
+    read + one claim retry (no data touched) — so N concurrent merges
     over disjoint bucket sets serialize with N-1 rebases and exactly N
     bucket rewrites total.  Recompute is paid only on true overlap,
     where it is the price of correctness.
@@ -2122,14 +2107,10 @@ def merge_into_bucketed(
     ``commit_bucketed`` path, which prices the full rewrite honestly.
 
     Returns the committed version number."""
-    import uuid
-
-    # one temp name per call: a merge started inside another merge's
-    # claim window (same pid, thread and base) must not share its dir
-    call = uuid.uuid4().hex
-    attempts = 0
     checked_keys: "Optional[List[Tuple[str, str]]]" = None
-    while True:
+
+    def attempt(tmp: str):
+        nonlocal checked_keys
         base = latest_version(root)
         if base is None:
             raise FileNotFoundError(f"no committed version under {root}")
@@ -2162,7 +2143,6 @@ def merge_into_bucketed(
             _assert_unique_source_keys(src, keys)
             checked_keys = src_key_sig
         touched_set = _touched_buckets(src, expr, keys)
-        tmp = os.path.join(root, f".tmpm{os.getpid()}-{call}-{attempts}")
         if touched_set:
             tgt_paths = [
                 os.path.join(root, man[b])
@@ -2204,71 +2184,11 @@ def merge_into_bucketed(
             )
         else:
             os.makedirs(tmp)  # empty change set: no-op version, no job
-        written_names = {
-            x.split("=", 1)[1]
-            for x in os.listdir(tmp)
-            if x.startswith(f"{_BUCKET_COL}=")
-        }
-        stray = sorted(written_names - touched_set)
-        if stray:
-            # belt-and-braces for the invariant above: a merged row
-            # landing outside the touched set would shadow a
-            # by-reference bucket with a partial rewrite — refuse to
-            # commit rather than lose data silently
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(
-                f"bucketed MERGE produced rows in untouched bucket(s) "
-                f"{stray} — bucket function/type drift; commit aborted "
-                "before the claim"
-            )
-        try:
-            claimed = _claim_merge_version(
-                root, base, bmeta, touched_set, spec, tmp, marker_timeout
-            )
-        except BaseException:
-            # every deliberate exit path removes tmp itself; this belt
-            # covers unexpected raises so a full bucket rewrite never
-            # leaks to disk (vacuum deliberately ignores non-v<n> dirs)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if claimed is None:
-            attempts += 1
-            if attempts > max_retries:
-                raise MergeConflictError(
-                    f"concurrent MERGE on {root} aborted after "
-                    f"{max_retries} retries: every attempt found an "
-                    "intervening commit whose write-set overlaps "
-                    f"{sorted(touched_set)}"
-                )
-            continue
-        n, newest_meta = claimed
-        base_man = newest_meta["manifest"]
-        written = _manifest_from_snapshot(root, n)
-        new_man = {
-            b: rel for b, rel in base_man.items() if b not in touched_set
-        }
-        new_man.update(written)
-        payload = {
-            "manifest": new_man,
-            "bucket": spec,
-            # the newest COMMITTED version this commit chains after —
-            # NOT n-1, which may be a skipped dead-claimant orphan
-            # (round-12 review)
-            "base_version": newest_meta.get("version", base),
-            "read_base": base,
-            "touched_buckets": sorted(touched_set),
-            **(meta or {}),
-        }
-        # carry the file statistics forward: fresh footer min/max for
-        # rewritten buckets, recorded entries for by-reference ones —
-        # so ranges= reads keep working across merges, as the
-        # commit_bucketed docstring promises
-        _carry_stats(
-            payload, root, newest_meta, new_man,
-            sorted(written.values()), spec,
+        return _bucket_commit(
+            root, tmp, base, bmeta, "touched_buckets", touched_set, meta
         )
-        _write_marker(root, n, payload, exc=MergeConflictError)
-        return n
+
+    return _occ_commit(root, "MERGE", attempt, max_retries, marker_timeout)
 
 
 def commit_mor_delete(
@@ -2311,15 +2231,14 @@ def commit_mor_delete(
     claim retried, up to ``max_retries`` (then
     ``MergeConflictError``).  A published rival marker is never
     replaced.  Returns the committed version number."""
-    import threading
-
     keys: List[str] = [on] if isinstance(on, str) else list(on)
-    attempts = 0
-    while True:
+
+    def attempt(tmp: str):
         base = latest_version(root)
         if base is None:
             raise FileNotFoundError(f"no committed version under {root}")
-        if commit_meta(root, base).get("manifest") is not None:
+        bmeta = commit_meta(root, base)
+        if bmeta.get("manifest") is not None:
             raise ValueError(
                 "merge-on-read deletes are not supported on bucketed "
                 "tables"
@@ -2330,47 +2249,22 @@ def commit_mor_delete(
             raise ValueError(
                 f"delete key column(s) {missing} not on the table"
             )
-        dels = (
-            cur.where(F.expr(predicate)).select(*keys).distinct()
-            .coalesce(n_files)
-        )
-        tmp = os.path.join(
-            root,
-            f".tmpd{os.getpid()}-{threading.get_ident()}-{base}-{attempts}",
-        )
-        dels.write.mode("overwrite").parquet(os.path.join(tmp, "_deletes"))
-        try:
-            claimed = _claim_slot(
-                root, base, commit_meta(root, base), tmp,
-                marker_timeout, lambda m_meta: False,
-            )
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if claimed is None:
-            attempts += 1
-            if attempts > max_retries:
-                raise MergeConflictError(
-                    f"concurrent MoR delete on {root} aborted after "
-                    f"{max_retries} retries: every attempt found an "
-                    "intervening commit (the delete keys must be "
-                    "derived from the version directly below)"
-                )
-            continue
-        n, _ = claimed
-        _write_marker(
-            root,
-            n,
-            {
+        cur.where(F.expr(predicate)).select(*keys).distinct().coalesce(
+            n_files
+        ).write.mode("overwrite").parquet(os.path.join(tmp, "_deletes"))
+        return base, bmeta, _any_rival_conflicts, (
+            lambda n, _newest: {
                 "mor_base": base,
                 "delete_rel": f"v{n}/_deletes",
                 "delete_key": keys,
                 "predicate": predicate,
                 **(meta or {}),
-            },
-            exc=MergeConflictError,
+            }
         )
-        return n
+
+    return _occ_commit(
+        root, "MoR delete", attempt, max_retries, marker_timeout
+    )
 
 
 def compact_mor(
@@ -2397,54 +2291,24 @@ def compact_mor(
     retries the OCC claim (if-absent publish; a published rival marker
     is never replaced), raising ``MergeConflictError`` after
     ``max_retries``.  Returns the committed version number."""
-    import threading
 
-    attempts = 0
-    while True:
+    def attempt(tmp: str):
         base = latest_version(root)
         if base is None:
             raise FileNotFoundError(f"no committed version under {root}")
-        tmp = os.path.join(
-            root,
-            f".tmpq{os.getpid()}-{threading.get_ident()}-{base}-{attempts}",
-        )
         _shape_for_write(
             read_version(spark, root, base), n_files, stats_key
         ).write.mode("overwrite").parquet(tmp)
-        try:
-            claimed = _claim_slot(
-                root, base, commit_meta(root, base), tmp,
-                marker_timeout, lambda m_meta: False,
+        return base, commit_meta(root, base), _any_rival_conflicts, (
+            lambda n, _newest: _stats_payload(
+                root, n, stats_key,
+                {"op": "compact_mor", "compacted_from": base, **(meta or {})},
             )
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if claimed is None:
-            attempts += 1
-            if attempts > max_retries:
-                raise MergeConflictError(
-                    f"concurrent MoR compaction on {root} aborted after "
-                    f"{max_retries} retries: every attempt found an "
-                    "intervening commit"
-                )
-            continue
-        n, _ = claimed
-        _write_marker(
-            root,
-            n,
-            _stats_payload(
-                root,
-                n,
-                stats_key,
-                {
-                    "op": "compact_mor",
-                    "compacted_from": base,
-                    **(meta or {}),
-                },
-            ),
-            exc=MergeConflictError,
         )
-        return n
+
+    return _occ_commit(
+        root, "MoR compaction", attempt, max_retries, marker_timeout
+    )
 
 
 def optimize_zorder(
@@ -2482,13 +2346,11 @@ def optimize_zorder(
     maintenance flag, so this verb refuses them.
 
     Returns the committed version number."""
-    import threading
-
     zcols = list(cols)
     if len(zcols) != 2:
         raise ValueError("optimize_zorder takes exactly two columns")
-    attempts = 0
-    while True:
+
+    def attempt(tmp: str):
         base = latest_version(root)
         if base is None:
             raise FileNotFoundError(f"no committed version under {root}")
@@ -2506,38 +2368,12 @@ def optimize_zorder(
             raise ValueError(
                 f"zorder column(s) {missing} not on the table"
             )
-        tmp = os.path.join(
-            root,
-            f".tmpz{os.getpid()}-{threading.get_ident()}-{base}-{attempts}",
-        )
         _shape_for_write(cur, n_files, None, zorder_by=zcols).write.mode(
             "overwrite"
         ).parquet(tmp)
-        try:
-            claimed = _claim_slot(
-                root, base, bmeta, tmp,
-                marker_timeout, lambda m_meta: False,
-            )
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if claimed is None:
-            attempts += 1
-            if attempts > max_retries:
-                raise MergeConflictError(
-                    f"concurrent OPTIMIZE ZORDER on {root} aborted "
-                    f"after {max_retries} retries: every attempt found "
-                    "an intervening commit"
-                )
-            continue
-        n, _ = claimed
-        _write_marker(
-            root,
-            n,
-            _stats_payload(
-                root,
-                n,
-                None,
+        return base, bmeta, _any_rival_conflicts, (
+            lambda n, _newest: _stats_payload(
+                root, n, None,
                 {
                     "op": "optimize_zorder",
                     "zordered_from": base,
@@ -2545,10 +2381,12 @@ def optimize_zorder(
                     **(meta or {}),
                 },
                 stats_cols=zcols,
-            ),
-            exc=MergeConflictError,
+            )
         )
-        return n
+
+    return _occ_commit(
+        root, "OPTIMIZE ZORDER", attempt, max_retries, marker_timeout
+    )
 
 
 def table_changes(
@@ -2634,6 +2472,41 @@ def _read_manifest_subset(
     return _empty(spark, root, man, schema)
 
 
+def _holds_map(dt) -> bool:
+    """Whether a MAP occurs anywhere inside the data type ``dt``."""
+    if isinstance(dt, ArrayType):
+        return _holds_map(dt.elementType)
+    if isinstance(dt, StructType):
+        return any(_holds_map(fld.dataType) for fld in dt.fields)
+    return isinstance(dt, MapType)
+
+
+def _comparable(col, dt):
+    """``col`` (of type ``dt``) in a form ``<=>`` can compare.  A MAP has
+    no ordering (``<=>`` refuses it at analysis), so every MAP inside
+    ``dt``, at any depth, becomes its entries sorted, its values
+    normalized first — entry order is not a change.  A struct holding a
+    MAP is rebuilt from its normalized fields (NULL stays NULL), an
+    array goes through ``transform``; a type holding no MAP keeps
+    ``col`` as it is."""
+    if not _holds_map(dt):
+        return col
+    if isinstance(dt, MapType):
+        entries = F.map_entries(col)
+        if _holds_map(dt.valueType):
+            entries = F.transform(entries, lambda e: F.struct(
+                e["key"].alias("key"),
+                _comparable(e["value"], dt.valueType).alias("value"),
+            ))
+        return F.array_sort(entries)
+    if isinstance(dt, ArrayType):
+        return F.transform(col, lambda e: _comparable(e, dt.elementType))
+    return F.when(col.isNotNull(), F.struct(*[
+        _comparable(col[fld.name], fld.dataType).alias(fld.name)
+        for fld in dt.fields
+    ]))
+
+
 def _diff_changes(f: SDF, t: SDF, keys: List[str]) -> SDF:
     """The CDF kernel: full-outer join ``f`` (pre) vs ``t`` (post) on the
     key, classify each key in one projection, explode the change
@@ -2671,12 +2544,7 @@ def _diff_changes(f: SDF, t: SDF, keys: List[str]) -> SDF:
     nonkey = [c for c in tcols if c not in keys]
 
     def comparable(side: str, c: str):
-        col = F.col(f"{side}.{c}")
-        if isinstance(tdtypes[c], MapType):
-            # a MAP has no ordering (<=> refuses it at analysis): compare
-            # its entries sorted, so entry order is not a change
-            return F.array_sort(F.map_entries(col))
-        return col
+        return _comparable(F.col(f"{side}.{c}"), tdtypes[c])
 
     same = reduce(
         lambda a, b: a & b,
@@ -2828,16 +2696,15 @@ def compact_buckets(
     carried forward for referenced ones.
 
     CONCURRENT-SAFE (round 13, r12 VERDICT item 1): compaction commits
-    through the same OCC protocol as ``merge_into_bucketed``
-    — private temp write, atomic rename claim, if-absent marker link —
-    with ``compacted_buckets`` as its write-set.  Racing a live OCC
-    merge, a compaction either REBASES (the merge touched other
-    buckets: manifest union, zero recompute), RECOMPUTES its fragment
-    set from the new latest (overlap — the merge may have de- or
-    re-fragmented the bucket), or raises ``MergeConflictError`` after
-    ``max_retries``.  A published merge marker is NEVER replaced —
-    the replace-semantics ``_write_marker`` rename is gone from this
-    path (the round-12 lost-update class for admin ops racing ingest).
+    through the one OCC loop, as ``merge_into_bucketed`` does —
+    private temp write, if-absent ``_claims/<n>`` put, if-absent
+    marker put — with ``compacted_buckets`` as its write-set.  Racing
+    a live OCC merge, a compaction either REBASES (the merge touched
+    other buckets: manifest union, zero recompute), RECOMPUTES its
+    fragment set from the new latest (overlap — the merge may have
+    de- or re-fragmented the bucket), or raises ``MergeConflictError``
+    after ``max_retries``.  A published merge marker is NEVER replaced
+    (the round-12 lost-update class for admin ops racing ingest).
 
     At 100 TB this is the maintenance pass that bounds read-side file
     counts after many small merges WITHOUT the full-table rewrite a
@@ -2847,8 +2714,6 @@ def compact_buckets(
     Returns the new committed version, or the CURRENT version untouched
     when no bucket exceeds the threshold (compaction is advisory; a
     no-op must not burn a version number)."""
-    import threading
-
     if max_files < 1:
         raise ValueError("compact_buckets max_files must be >= 1")
 
@@ -2859,8 +2724,7 @@ def compact_buckets(
             if x.endswith(".parquet")
         )
 
-    attempts = 0
-    while True:
+    def attempt(tmp: str):
         base = latest_version(root)
         if base is None:
             raise FileNotFoundError(f"no committed version under {root}")
@@ -2883,68 +2747,80 @@ def compact_buckets(
         # data column, so re-derive it from the table's own expression
         # (deterministic on the key — the same routing that put the
         # rows there)
-        shaped = _shape_bucket_rewrite(
+        _shape_bucket_rewrite(
             df.withColumn(_BUCKET_COL, F.expr(spec["expr"])), spec
+        ).write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
+        return _bucket_commit(
+            root, tmp, base, bmeta, "compacted_buckets", set(frag), meta
         )
-        tmp = os.path.join(
-            root,
-            f".tmpc{os.getpid()}-{threading.get_ident()}-{base}-{attempts}",
-        )
-        shaped.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
-        written_names = {
+
+    return _occ_commit(
+        root, "compaction", attempt, max_retries, marker_timeout
+    )
+
+
+def _bucket_commit(
+    root: str,
+    tmp: str,
+    base: int,
+    bmeta: dict,
+    ws_key: str,
+    write_set: "set[str]",
+    meta: Optional[dict],
+):
+    """The claim half of a bucket-scoped rewrite (the bucketed MERGE and
+    compaction): refuse a temp holding rows outside the write-set, then
+    hand ``_occ_commit`` the bucket-overlap policy and a payload that
+    overlays the written buckets on the newest manifest, records the
+    write-set under ``ws_key`` (what future rivals check against) and
+    carries the file statistics forward."""
+    spec = bmeta["bucket"]
+    stray = sorted(
+        {
             x.split("=", 1)[1]
             for x in os.listdir(tmp)
             if x.startswith(f"{_BUCKET_COL}=")
         }
-        stray = sorted(written_names - set(frag))
-        if stray:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(
-                f"bucket compaction produced rows in foreign bucket(s) "
-                f"{stray} — bucket function drift; commit aborted before "
-                "the claim"
-            )
-        try:
-            claimed = _claim_slot(
-                root,
-                base,
-                bmeta,
-                tmp,
-                marker_timeout,
-                _bucket_overlap_policy(root, set(frag), spec),
-            )
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if claimed is None:
-            attempts += 1
-            if attempts > max_retries:
-                raise MergeConflictError(
-                    f"concurrent compaction on {root} aborted after "
-                    f"{max_retries} retries: every attempt found an "
-                    "intervening commit whose write-set overlaps "
-                    f"{sorted(frag)}"
-                )
-            continue
-        n, newest_meta = claimed
-        base_man = newest_meta["manifest"]
+        - write_set
+    )
+    if stray:
+        # belt-and-braces for the bucket invariant: a row landing
+        # outside the write-set would shadow a by-reference bucket with
+        # a partial rewrite — refuse to commit rather than lose data
+        raise ValueError(
+            f"bucket rewrite produced rows in bucket(s) {stray} outside "
+            f"its write-set {sorted(write_set)} — bucket function/type "
+            "drift; commit aborted before the claim"
+        )
+
+    def payload(n: int, newest_meta: dict) -> dict:
         written = _manifest_from_snapshot(root, n)
-        new_man = {b: rel for b, rel in base_man.items() if b not in frag}
+        new_man = {
+            b: rel
+            for b, rel in newest_meta["manifest"].items()
+            if b not in write_set
+        }
         new_man.update(written)
-        payload = {
+        out = {
             "manifest": new_man,
             "bucket": spec,
+            # the newest COMMITTED version this commit chains after —
+            # NOT n-1, which may be a skipped dead-claimant orphan
+            # (round-12 review)
             "base_version": newest_meta.get("version", base),
             "read_base": base,
-            "compacted_buckets": sorted(frag),
+            ws_key: sorted(write_set),
             **(meta or {}),
         }
+        # fresh footer min/max for rewritten buckets, recorded entries
+        # for by-reference ones — so ranges= reads keep working across
+        # rewrites, as the commit_bucketed docstring promises
         _carry_stats(
-            payload, root, newest_meta, new_man,
-            sorted(written.values()), spec,
+            out, root, newest_meta, new_man, sorted(written.values()), spec
         )
-        _write_marker(root, n, payload, exc=MergeConflictError)
-        return n
+        return out
+
+    return base, bmeta, _bucket_overlap_policy(root, write_set, spec), payload
 
 
 def _carry_stats(
@@ -3007,16 +2883,17 @@ def commit_snapshot_exclusive(
     caller-chosen version number — closing the version-number race the
     module docstring documents for ``commit_snapshot``.
 
-    Protocol: the snapshot is written ONCE to a writer-private temp
-    dir; the writer then claims the smallest unclaimed version through
-    ``_claim_slot`` (round 14: an if-absent ``_claims/<n>`` put on the
-    CommitStore — the same loop and primitive every OCC commit kind
-    uses), advancing past committed rivals unconditionally (a snapshot
-    replace conflicts with no write-set) and fencing claimants silent
-    past ``marker_timeout``.  Only the claim winner materializes
-    ``v<n>`` and publishes marker ``n`` via the store's conditional
-    put; a lost publish is disambiguated by writer nonce and never
-    swallowed (see ``_write_marker``).
+    Protocol: the one OCC loop (``_occ_commit``) with a policy that
+    never conflicts.  The snapshot is written ONCE to a writer-private
+    temp dir; the writer then claims the smallest unclaimed version
+    (an if-absent ``_claims/<n>`` put on the CommitStore), starting
+    above every taken slot — committed, claimed or holding a ``v<n>``
+    dir — and advancing past committed rivals unconditionally (a
+    snapshot replace conflicts with no write-set), fencing claimants
+    silent past ``marker_timeout``.  Only the claim winner
+    materializes ``v<n>`` and publishes marker ``n`` via the store's
+    conditional put; a lost publish is disambiguated by writer nonce
+    and never swallowed (see ``_write_marker``).
 
     Two writers racing the same next version therefore both land, as
     ``v_n`` and ``v_{n+1}``, each marker describing its own writer's
@@ -3044,31 +2921,27 @@ def commit_snapshot_exclusive(
 
     Returns the committed version number."""
     os.makedirs(os.path.join(root, "_commits"), exist_ok=True)
-    tmp = os.path.join(root, f".tmpx{os.getpid()}-{id(df)}")
-    _shape_for_write(df, n_files, stats_key, zorder_by).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    st = commit_store_for(root)
-    taken = {int(x) for x in st.list("_commits") if x.isdigit()}
-    taken |= {int(x) for x in st.list("_claims") if x.isdigit()}
-    taken |= {
-        int(x[1:])
-        for x in os.listdir(root)
-        if x.startswith("v") and x[1:].isdigit()
-    }
-    # round 14: the claim is _claim_slot's if-absent _claims/<n> put —
-    # the SAME loop every OCC commit kind uses (previously an inline
-    # rename-race loop here).  Snapshot-replace semantics never
-    # conflict with a rival's write-set, so the policy is
-    # always-rebase: advance past any committed rival.
-    n, _ = _claim_slot(
-        root, max(taken, default=-1), {}, tmp, marker_timeout,
-        lambda m_meta: True,
-    )
-    _write_marker(
-        root, n, _stats_payload(root, n, stats_key, meta, stats_cols)
-    )
-    return n
+
+    def attempt(tmp: str):
+        _shape_for_write(df, n_files, stats_key, zorder_by).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        st = commit_store_for(root)
+        taken = {int(x) for x in st.list("_commits") if x.isdigit()}
+        taken |= {int(x) for x in st.list("_claims") if x.isdigit()}
+        taken |= {
+            int(x[1:])
+            for x in os.listdir(root)
+            if x.startswith("v") and x[1:].isdigit()
+        }
+        return max(taken, default=-1), {}, _every_rival_rebases, (
+            lambda n, _newest: _stats_payload(
+                root, n, stats_key, meta, stats_cols
+            )
+        )
+
+    # max_retries=0: the always-rebase policy never reports a conflict
+    return _occ_commit(root, "snapshot commit", attempt, 0, marker_timeout)
 
 
 # ---------------------------------------------------------------------------
@@ -3100,12 +2973,12 @@ def restore_table(
     re-snapshot of the target's content (documented cost, not hidden).
 
     CONCURRENT-SAFE (round 13, r12 VERDICT item 1 + r12 ADVICE): both
-    paths commit through the OCC protocol — the plain path through
-    ``commit_snapshot_exclusive`` (temp write → rename claim →
-    if-absent link), the bucketed path by claiming a version slot with
-    a placeholder-bearing temp dir (non-empty, so a rival's rename
-    onto it fails) and publishing if-absent.  A restore racing live
-    OCC ingest can therefore never attach its marker to a rival's
+    paths commit through the one OCC loop (``_occ_commit``: private
+    temp write → if-absent ``_claims/<n>`` put → if-absent marker put)
+    — the plain path through ``commit_snapshot_exclusive``, the
+    bucketed path with a temp dir that holds only a placeholder, since
+    its manifest references the target's files.  A restore racing
+    live OCC ingest can therefore never attach its marker to a rival's
     just-claimed dir, never rmtree a live claimant's snapshot, and
     never replace a just-published merge marker: the rival lands as
     version k and the restore as a later version whose content is
@@ -3114,8 +2987,6 @@ def restore_table(
     the restore, auditable and time-travelable).
 
     Returns the committed version number."""
-    import threading
-
     base = latest_version(root)
     if base is None:
         raise FileNotFoundError(f"no committed version under {root}")
@@ -3147,41 +3018,32 @@ def restore_table(
             stats_key=stats.get("key"),
             stats_cols=stats.get("cols"),
         )
-    # bucketed: zero data movement — claim a slot whose dir holds only
-    # a placeholder (the non-empty dir makes the rename claim
-    # exclusive; the manifest never references it) and publish the
-    # target's manifest if-absent.  Restore overrides ALL buckets by
-    # definition, so a rival commit is never a conflict: record it as
-    # base_version and keep claiming the next slot.
-    tmp = os.path.join(
-        root, f".tmpr{os.getpid()}-{threading.get_ident()}"
-    )
-    os.makedirs(tmp)
-    with open(os.path.join(tmp, "_mt_restore"), "w") as fh:
-        json.dump({"op": "restore", "restored_from": to_version}, fh)
-    try:
-        claimed = _claim_slot(
-            root, base, commit_meta(root, base), tmp,
-            marker_timeout, lambda m_meta: True,
-        )
-    except BaseException:
-        # same belt as every other _claim_slot caller (round-13
-        # review): an interrupt inside the claim wait must not leak
-        # the placeholder temp (vacuum deliberately ignores non-v<n>)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    n, newest_meta = claimed  # never None: the policy always rebases
-    payload = {
-        "manifest": dict(man),
-        "bucket": tmeta.get("bucket"),
-        "base_version": newest_meta.get("version", base),
-        **payload_meta,
-    }
-    stats = _file_stats(tmeta)
-    if stats:
-        payload["file_stats_cols"] = stats
-    _write_marker(root, n, payload)
-    return n
+
+    # bucketed: zero data movement — the claimed v<n> holds only a
+    # placeholder naming the restore (the manifest never references
+    # it) and the marker publishes the target's manifest.  Restore
+    # overrides ALL buckets by definition, so a rival commit is never
+    # a conflict: record it as base_version and claim the next slot.
+    def payload(n: int, newest_meta: dict) -> dict:
+        out = {
+            "manifest": dict(man),
+            "bucket": tmeta.get("bucket"),
+            "base_version": newest_meta.get("version", base),
+            **payload_meta,
+        }
+        stats = _file_stats(tmeta)
+        if stats:
+            out["file_stats_cols"] = stats
+        return out
+
+    def attempt(tmp: str):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "_mt_restore"), "w") as fh:
+            json.dump({"op": "restore", "restored_from": to_version}, fh)
+        return base, commit_meta(root, base), _every_rival_rebases, payload
+
+    # max_retries=0: the always-rebase policy never reports a conflict
+    return _occ_commit(root, "restore", attempt, 0, marker_timeout)
 
 
 def clone_shallow(
@@ -3373,6 +3235,63 @@ def _try_claim(root: str, n: int) -> bool:
     return False
 
 
+def _any_rival_conflicts(m_meta: dict) -> bool:
+    """Rival policy of the kinds that derive their whole snapshot from
+    the version directly below (MoR delete, MoR compaction, Z-order):
+    ANY intervening commit is a conflict."""
+    return False
+
+
+def _every_rival_rebases(m_meta: dict) -> bool:
+    """Rival policy of the kinds whose content ignores the race base
+    (snapshot replace, restore): every rival lands below them."""
+    return True
+
+
+def _occ_commit(root: str, what: str, attempt, max_retries: int,
+                marker_timeout: float) -> int:
+    """The one OCC commit loop every claim-published commit kind runs.
+    Each try calls ``attempt(tmp)`` with a fresh writer-private temp
+    path ``.tmp<pid>-<uuid4>-<try>`` under ``root``.  The attempt reads
+    its base, validates, writes its data to ``tmp`` and returns either
+    a version number — handed back without claiming (a no-op commit)
+    — or ``(base, bmeta, on_rival, payload)``: the version its claim
+    starts above, that version's metadata, the rival policy
+    ``_claim_slot`` consults, and ``payload(n, newest_meta)``, the
+    marker's fields once slot ``n`` is won.  A conflict retries the
+    whole attempt from the new latest version, up to ``max_retries``
+    times, then raises ``MergeConflictError``; the marker is published
+    with ``_write_marker``.  ``tmp`` is removed on every exit that does
+    not commit — a conflict or anything raised while writing, claiming
+    or building the payload (vacuum deliberately ignores non-``v<n>``
+    dirs, so a leaked temp would never be swept)."""
+    import uuid
+
+    call = uuid.uuid4().hex
+    for i in range(max_retries + 1):
+        tmp = os.path.join(root, f".tmp{os.getpid()}-{call}-{i}")
+        try:
+            got = attempt(tmp)
+            if isinstance(got, int):
+                return got
+            base, bmeta, on_rival, payload = got
+            claimed = _claim_slot(
+                root, base, bmeta, tmp, marker_timeout, on_rival
+            )
+            if claimed is not None:
+                n, newest_meta = claimed
+                _write_marker(root, n, payload(n, newest_meta))
+                return n
+        finally:
+            # a won claim renamed tmp to v<n>: this is a no-op then
+            shutil.rmtree(tmp, ignore_errors=True)
+    raise MergeConflictError(
+        f"concurrent {what} on {root} aborted after {max_retries} "
+        "retries: every attempt found an intervening commit it "
+        "conflicts with"
+    )
+
+
 def _claim_slot(
     root: str,
     base: int,
@@ -3381,14 +3300,14 @@ def _claim_slot(
     marker_timeout: float,
     on_rival,
 ):
-    """The generic OCC claim loop (round 13 — ONE loop for every
-    OCC-published commit kind): win the first free version slot above
-    ``base`` via an if-absent ``_claims/<n>`` put (round 14 — through
-    the CommitStore, so the claim works on conditional-put object
-    stores; the subsequent ``tmp`` → ``v<n>`` rename is UNCONTENDED
-    data materialization by the claim winner, not a coordination
-    primitive), consulting ``on_rival(m_meta)`` for every intervening
-    COMMITTED rival along the way.  ``on_rival`` returns True to
+    """The claim step of ``_occ_commit`` (its only caller): win the
+    first free version slot above ``base`` via an if-absent
+    ``_claims/<n>`` put (round 14 — through the CommitStore, so the
+    claim works on conditional-put object stores; the subsequent
+    ``tmp`` → ``v<n>`` rename is UNCONTENDED data materialization by
+    the claim winner, not a coordination primitive), consulting
+    ``on_rival(m_meta)`` for every intervening COMMITTED rival along
+    the way.  ``on_rival`` returns True to
     REBASE past the rival (its metadata becomes the ``newest_meta``
     the caller chains after) or False to ABORT with a conflict; it may
     also raise (e.g. an unresolvable bucket-spec change).  Fencing of
@@ -3403,8 +3322,8 @@ def _claim_slot(
     snapshot); vacuum sweeps it once superseded.
 
     Returns ``(n, newest_meta)`` on a successful claim (``newest_meta``
-    is ``bmeta`` when nothing intervened), or ``None`` on conflict
-    (``tmp`` removed; the caller recomputes from the new base)."""
+    is ``bmeta`` when nothing intervened), or ``None`` on conflict (the
+    caller removes ``tmp`` and recomputes from the new base)."""
     newest_meta = bmeta
     n = base + 1
     while True:
@@ -3429,7 +3348,6 @@ def _claim_slot(
                         # the claim made this rename uncontended among
                         # CLAIMING writers: a failure with no rival dir
                         # is real (EACCES, EXDEV...), never a race
-                        shutil.rmtree(tmp, ignore_errors=True)
                         raise
                     # v<n> appeared between the isdir probe and the
                     # rename: a caller-numbered commit (commit_snapshot
@@ -3456,13 +3374,7 @@ def _claim_slot(
             if _publish_fence(root, n):
                 n += 1  # fenced: permanent gap; vacuum sweeps it later
             continue
-        try:
-            ok = on_rival(m_meta)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        if not ok:
-            shutil.rmtree(tmp, ignore_errors=True)
+        if not on_rival(m_meta):
             return None
         newest_meta = m_meta
         n += 1
@@ -3496,27 +3408,3 @@ def _bucket_overlap_policy(root: str, touched_set: "set[str]", spec: dict):
         )
 
     return policy
-
-
-def _claim_merge_version(
-    root: str,
-    base: int,
-    bmeta: dict,
-    touched_set: "set[str]",
-    spec: dict,
-    tmp: str,
-    marker_timeout: float,
-):
-    """The OCC MERGE claim: ``_claim_slot`` under the bucket write-set
-    overlap policy.  Returns ``(n, newest_intervening_meta)`` on
-    success (the meta supplies the manifest the commit rebases onto),
-    or ``None`` on a write-set conflict (``tmp`` removed; caller
-    recomputes from the new base)."""
-    return _claim_slot(
-        root,
-        base,
-        bmeta,
-        tmp,
-        marker_timeout,
-        _bucket_overlap_policy(root, touched_set, spec),
-    )

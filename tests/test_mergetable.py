@@ -1777,9 +1777,9 @@ def test_occ_merge_rebase_on_disjoint_intervening(spark, tmp_path,
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root)
     fired = {"n": 0}
-    orig = mt._claim_merge_version
+    orig = mt._claim_slot
 
-    def hooked(root_, base, bmeta, touched, spec, tmp, timeout):
+    def hooked(root_, base, bmeta, tmp, timeout, on_rival):
         if fired["n"] == 0:
             fired["n"] += 1
             # rival lands AFTER our merge computed, BEFORE our claim:
@@ -1787,9 +1787,9 @@ def test_occ_merge_rebase_on_disjoint_intervening(spark, tmp_path,
             mt.merge_into_bucketed(
                 spark, root_, _occ_chg(spark, [1, 9], 7.0), **_OCC_CLAUSES
             )
-        return orig(root_, base, bmeta, touched, spec, tmp, timeout)
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
 
-    monkeypatch.setattr(mt, "_claim_merge_version", hooked)
+    monkeypatch.setattr(mt, "_claim_slot", hooked)
     n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
@@ -1815,18 +1815,18 @@ def test_occ_merge_recompute_on_overlap(spark, tmp_path, monkeypatch):
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root)
     fired = {"n": 0}
-    orig = mt._claim_merge_version
+    orig = mt._claim_slot
 
-    def hooked(root_, base, bmeta, touched, spec, tmp, timeout):
+    def hooked(root_, base, bmeta, tmp, timeout, on_rival):
         if fired["n"] == 0:
             fired["n"] += 1
             # rival touches bucket 0 TOO (key 8), same keys as ours
             mt.merge_into_bucketed(
                 spark, root_, _occ_chg(spark, [8], 7.0), **_OCC_CLAUSES
             )
-        return orig(root_, base, bmeta, touched, spec, tmp, timeout)
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
 
-    monkeypatch.setattr(mt, "_claim_merge_version", hooked)
+    monkeypatch.setattr(mt, "_claim_slot", hooked)
     n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
@@ -1840,7 +1840,7 @@ def test_occ_merge_recompute_on_overlap(spark, tmp_path, monkeypatch):
     }
     assert got == {0: 5.0, 8: 12.0}  # 7 (rival) + 5 (ours) composed
     # no leftover writer-private temp dirs
-    assert not [x for x in os.listdir(root) if x.startswith(".tmpm")]
+    assert not [x for x in os.listdir(root) if x.startswith(".tmp")]
 
 
 def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
@@ -1857,11 +1857,11 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
 
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root)
-    orig = mt._claim_merge_version
+    orig = mt._claim_slot
 
     in_rival = []
 
-    def always_rival(root_, base, bmeta, touched, spec, tmp, timeout):
+    def always_rival(root_, base, bmeta, tmp, timeout, on_rival):
         # the rival's own merge claims through this hook too: let it
         # claim unhooked instead of spawning a rival of its own
         if not in_rival:
@@ -1872,9 +1872,9 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
                 )
             finally:
                 in_rival.pop()
-        return orig(root_, base, bmeta, touched, spec, tmp, timeout)
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
 
-    monkeypatch.setattr(mt, "_claim_merge_version", always_rival)
+    monkeypatch.setattr(mt, "_claim_slot", always_rival)
     with pytest.raises(MergeConflictError):
         mt.merge_into_bucketed(
             spark,
@@ -1890,13 +1890,13 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
         if r.val != 0.0
     }
     assert got == {0: 2.0}  # two rival commits, loser left no trace
-    assert not [x for x in os.listdir(root) if x.startswith(".tmpm")]
+    assert not [x for x in os.listdir(root) if x.startswith(".tmp")]
 
     # write-set-less rival: a full commit_bucketed rewrite at the next
     # version — first attempt conflicts conservatively, retry succeeds
     fired = {"n": 0}
 
-    def full_rewrite_rival(root_, base, bmeta, touched, spec, tmp, timeout):
+    def full_rewrite_rival(root_, base, bmeta, tmp, timeout, on_rival):
         if fired["n"] == 0:
             fired["n"] += 1
             cur = mt.read_bucketed(spark, root_)
@@ -1904,9 +1904,9 @@ def test_occ_merge_conflict_exhaustion_and_writesetless_rival(
                 cur, root_, mt.latest_version(root_) + 1, on="k",
                 n_buckets=8, hashed=False,
             )
-        return orig(root_, base, bmeta, touched, spec, tmp, timeout)
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
 
-    monkeypatch.setattr(mt, "_claim_merge_version", full_rewrite_rival)
+    monkeypatch.setattr(mt, "_claim_slot", full_rewrite_rival)
     n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0), **_OCC_CLAUSES
     )
@@ -1926,10 +1926,10 @@ def test_occ_merge_rejects_rebucketed_rival(spark, tmp_path, monkeypatch):
 
     root = str(tmp_path / "tbl")
     _mk_occ_base(spark, root, nb=8)
-    orig = mt._claim_merge_version
+    orig = mt._claim_slot
     fired = {"n": 0}
 
-    def rebucket_rival(root_, base, bmeta, touched, spec, tmp, timeout):
+    def rebucket_rival(root_, base, bmeta, tmp, timeout, on_rival):
         if fired["n"] == 0:
             fired["n"] += 1
             cur = mt.read_bucketed(spark, root_)
@@ -1937,14 +1937,14 @@ def test_occ_merge_rejects_rebucketed_rival(spark, tmp_path, monkeypatch):
                 cur, root_, mt.latest_version(root_) + 1, on="k",
                 n_buckets=4, hashed=False,
             )
-        return orig(root_, base, bmeta, touched, spec, tmp, timeout)
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
 
-    monkeypatch.setattr(mt, "_claim_merge_version", rebucket_rival)
+    monkeypatch.setattr(mt, "_claim_slot", rebucket_rival)
     with pytest.raises(ValueError, match="bucket spec"):
         mt.merge_into_bucketed(
             spark, root, _occ_chg(spark, [0], 5.0), **_OCC_CLAUSES
         )
-    assert not [x for x in os.listdir(root) if x.startswith(".tmpm")]
+    assert not [x for x in os.listdir(root) if x.startswith(".tmp")]
 
 
 def test_occ_merge_genuinely_concurrent_writers(spark, tmp_path):
@@ -2543,7 +2543,7 @@ def test_occ_merge_skips_dead_claimant_orphan(spark, tmp_path):
         if r.val != 0.0
     }
     assert got == {0: 5.0}
-    assert not [x for x in os.listdir(root) if x.startswith(".tmpm")]
+    assert not [x for x in os.listdir(root) if x.startswith(".tmp")]
     # the orphan is still invisible and sweepable once aged: fake age
     # by back-dating every committed marker's committed_at
     import json as _json
@@ -3415,18 +3415,18 @@ def test_occ_merge_strict_check_runs_once_across_retries(
 
     monkeypatch.setattr(mt, "_assert_unique_source_keys", counting)
     fired = {"n": 0}
-    orig = mt._claim_merge_version
+    orig = mt._claim_slot
 
-    def hooked(root_, base, bmeta, touched, spec, tmp, timeout):
+    def hooked(root_, base, bmeta, tmp, timeout, on_rival):
         if fired["n"] == 0:
             fired["n"] += 1
             # OVERLAPPING rival (same bucket 0): forces abort-and-rerun
             mt.merge_into_bucketed(
                 spark, root_, _occ_chg(spark, [16], 3.0), **_OCC_CLAUSES
             )
-        return orig(root_, base, bmeta, touched, spec, tmp, timeout)
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
 
-    monkeypatch.setattr(mt, "_claim_merge_version", hooked)
+    monkeypatch.setattr(mt, "_claim_slot", hooked)
     n = mt.merge_into_bucketed(
         spark, root, _occ_chg(spark, [0, 8], 5.0),
         strict_source_keys=True, **_OCC_CLAUSES,
@@ -3910,3 +3910,193 @@ def test_table_changes_compares_map_columns_by_entries(spark, tmp_path):
         for r in mt.table_changes(spark, root, 0, 1, on="k").collect()
     )
     assert got == [(2, "update_postimage", 3), (2, "update_preimage", 2)]
+
+
+@pytest.mark.parametrize(
+    "wrap, sql_type, m_of",
+    [
+        ("named_struct('m', {})", "struct<m: map<string, bigint>>", "s.m"),
+        ("array({})", "array<map<string, bigint>>", "s[0]"),
+    ],
+    ids=["struct", "array"],
+)
+def test_table_changes_compares_nested_map_columns(
+    spark, tmp_path, wrap, sql_type, m_of
+):
+    """A MAP nested inside a STRUCT or an ARRAY is compared by its
+    sorted entries too: reordered entries are no change, a changed
+    value emits both images, and a NULL container against a container
+    of a NULL map is a change (the rebuilt struct keeps NULL as NULL)."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    null_map = wrap.format("CAST(NULL AS map<string, bigint>)")
+
+    def version(rows):
+        return spark.sql(" UNION ALL ".join(
+            f"SELECT {k}L AS k, {v} AS s" for k, v in rows
+        ))
+
+    root = str(tmp_path / "tbl")
+    mt.commit_snapshot(version([
+        (1, wrap.format("map('a', 1L, 'b', 2L)")),
+        (2, wrap.format("map('a', 1L, 'b', 2L)")),
+        (3, f"CAST(NULL AS {sql_type})"),
+        (4, null_map),
+    ]), root, 0, n_files=1)
+    mt.commit_snapshot(version([
+        (1, wrap.format("map('b', 2L, 'a', 1L)")),
+        (2, wrap.format("map('a', 1L, 'b', 3L)")),
+        (3, null_map),
+        (4, null_map),
+    ]), root, 1, n_files=1)
+    order = [
+        mt.read_version(spark, root, n).where("k = 1")
+        .selectExpr(f"map_keys({m_of}) AS ks").first().ks
+        for n in (0, 1)
+    ]
+    assert order == [["a", "b"], ["b", "a"]]
+    got = sorted(
+        (r.k, r.change_type, r.b)
+        for r in mt.table_changes(spark, root, 0, 1, on="k")
+        .selectExpr("k", "change_type", f"{m_of}['b'] AS b").collect()
+    )
+    assert got == [
+        (2, "update_postimage", 3), (2, "update_preimage", 2),
+        (3, "update_postimage", None), (3, "update_preimage", None),
+    ]
+
+
+# ---------------------------------------------------------------------------
+# the one OCC commit loop: every claim-published kind, exhaustion, errors
+# ---------------------------------------------------------------------------
+
+
+def _mk_kind_base(spark, root, bucketed):
+    """v0 for one OCC commit kind: a modulo-bucketed table whose bucket
+    dirs hold several files each (so compaction has work), or a plain
+    ``k, x, y`` table."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    if bucketed:
+        mt.commit_bucketed(
+            spark.createDataFrame(
+                [(k, float(k)) for k in range(256)], "k long, val double"
+            ),
+            root, 0, on="k", n_buckets=8, hashed=False, stats_key="k",
+            n_files=32,
+        )
+    else:
+        mt.commit_snapshot(
+            spark.createDataFrame(
+                [(k, k % 5, k // 5) for k in range(20)],
+                "k long, x long, y long",
+            ),
+            root, 0, n_files=4,
+        )
+
+
+def _read_latest(spark, root, bucketed):
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    read = mt.read_bucketed if bucketed else mt.read_version
+    return sorted(tuple(r) for r in read(spark, root).collect())
+
+
+def _tmp_entries(root):
+    return [x for x in os.listdir(root) if x.startswith(".tmp")]
+
+
+# kind -> (bucketed base, commit call with max_retries=1 where it has one)
+_OCC_KINDS = {
+    "merge": (True, lambda spark, mt, root, **kw: mt.merge_into_bucketed(
+        spark, root, _occ_chg(spark, [0, 8], 5.0), **kw, **_OCC_CLAUSES
+    )),
+    "compaction": (True, lambda spark, mt, root, **kw: mt.compact_buckets(
+        spark, root, max_files=1, **kw
+    )),
+    "mor_delete": (False, lambda spark, mt, root, **kw: mt.commit_mor_delete(
+        spark, root, "x < 2", on="k", **kw
+    )),
+    "compact_mor": (False, lambda spark, mt, root, **kw: mt.compact_mor(
+        spark, root, **kw
+    )),
+    "optimize_zorder": (False, lambda spark, mt, root, **kw: (
+        mt.optimize_zorder(spark, root, ("x", "y"), **kw)
+    )),
+}
+_ALWAYS_REBASE_KINDS = {
+    "snapshot_exclusive": (False, lambda spark, mt, root: (
+        mt.commit_snapshot_exclusive(mt.read_version(spark, root), root)
+    )),
+    "restore": (True, lambda spark, mt, root: mt.restore_table(
+        spark, root, 0
+    )),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_OCC_KINDS))
+def test_occ_every_conflicting_kind_exhausts_retries(
+    spark, tmp_path, monkeypatch, kind
+):
+    """Every kind whose rival policy can conflict runs the one OCC loop:
+    a conflicting rival (a RESTORE, which records no write-set) landing
+    before EVERY claim exhausts max_retries=1 into MergeConflictError.
+    The table is exactly what the two rival commits made it — no loser
+    marker, data dir or claim — and no temp dir of any kind is left."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    bucketed, run = _OCC_KINDS[kind]
+    root = str(tmp_path / "tbl")
+    _mk_kind_base(spark, root, bucketed)
+    v0_rows = _read_latest(spark, root, bucketed)
+    orig = mt._claim_slot
+    in_rival, rivals = [], []
+
+    def rival_first(root_, base, bmeta, tmp, timeout, on_rival):
+        # the rival's own claim runs through this hook too: let it
+        # claim unhooked instead of spawning a rival of its own
+        if not in_rival:
+            in_rival.append(True)
+            try:
+                rivals.append(mt.restore_table(spark, root_, 0))
+            finally:
+                in_rival.pop()
+        return orig(root_, base, bmeta, tmp, timeout, on_rival)
+
+    monkeypatch.setattr(mt, "_claim_slot", rival_first)
+    with pytest.raises(mt.MergeConflictError, match="after 1 retries"):
+        run(spark, mt, root, max_retries=1)
+    assert rivals == [1, 2]
+    assert mt.committed_versions(root) == [0, 1, 2]
+    assert [mt.commit_meta(root, n)["op"] for n in rivals] == ["restore"] * 2
+    assert sorted(os.listdir(os.path.join(root, "_claims"))) == ["1", "2"]
+    assert sorted(x for x in os.listdir(root) if x.startswith("v")) == [
+        "v0", "v1", "v2"
+    ]
+    assert _read_latest(spark, root, bucketed) == v0_rows
+    assert not _tmp_entries(root)
+
+
+@pytest.mark.parametrize(
+    "kind", sorted(_OCC_KINDS) + sorted(_ALWAYS_REBASE_KINDS)
+)
+def test_occ_claim_error_leaves_no_temp(spark, tmp_path, monkeypatch, kind):
+    """An error raised inside the claim (here: the claim put itself)
+    propagates out of every claim-published commit kind — the
+    always-rebase ones (commit_snapshot_exclusive, bucketed restore)
+    included — and the one loop removes the attempt's temp dir on the
+    way out."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    bucketed, run = {**_OCC_KINDS, **_ALWAYS_REBASE_KINDS}[kind]
+    root = str(tmp_path / "tbl")
+    _mk_kind_base(spark, root, bucketed)
+
+    def broken_claim(root_, n):
+        raise OSError("injected claim-store failure")
+
+    monkeypatch.setattr(mt, "_try_claim", broken_claim)
+    with pytest.raises(OSError, match="injected claim-store failure"):
+        run(spark, mt, root)
+    assert mt.committed_versions(root) == [0]
+    assert not _tmp_entries(root)
