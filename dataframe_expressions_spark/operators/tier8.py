@@ -2956,10 +2956,11 @@ def table_merge_upsert(spark: SparkSession, sf_dir: str) -> SDF:
     READ-BACK of committed v1 — the oracle checks the full write → 
     commit → read round trip, not just the merge arithmetic.
 
-    The merge kernel is mergetable.merge_into: ONE null-safe full-outer
-    shuffle join (cdc_upsert_compact's shape with three-way clause
-    resolution).  Commit protocol, crash behavior, object-store caveat
-    and the 100 TB partition-scoped-COW refinement: module docstring.
+    The merge kernel is mergetable.merge_into: ONE shuffle, a cogroup
+    with the null-safe full-outer join's pairs (cdc_upsert_compact's
+    shape with three-way clause resolution).  Commit protocol, crash
+    behavior, object-store caveat and the 100 TB partition-scoped-COW
+    refinement: module docstring.
     Build is write-once per testdata fingerprint; steady state (and the
     bench sample) is the snapshot read.  Doubles are emitted UNROUNDED:
     both engines add the identical IEEE operands (the join_salted
@@ -3294,9 +3295,10 @@ def table_merge_bucketed(spark: SparkSession, sf_dir: str) -> SDF:
     table instead of all of it (here 3/16), with the touched-bucket set
     computed by one map-side-combined distinct over the source's bucket
     id (≤ B tiny rows to the driver).  The merge kernel itself is
-    unchanged: ONE null-safe full-outer shuffle join per touched-bucket
-    subset.  Vacuum stays safe across the reference graph
-    (manifest-aware: sources/mergetable.vacuum)."""
+    unchanged: ONE shuffle per touched-bucket subset, a cogroup on the
+    bucket id that the write runs straight from.  Vacuum stays safe
+    across the reference graph (manifest-aware:
+    sources/mergetable.vacuum)."""
     from ..sources.mergetable import read_bucketed
 
     root = _ensure_bucketed_table(spark, sf_dir)

@@ -143,8 +143,8 @@ def table_merge_delete(spark: SparkSession, sf_dir: str) -> SDF:
     five-clause write → commit → read round trip.
 
     Plan: both delete clauses lower to ONE extra filter on the same
-    null-safe full-outer merge join (sources/mergetable.py merge_into)
-    — no second shuffle; at 100 TB a MERGE with deletes costs exactly
+    one-shuffle merge cogroup (sources/mergetable.py merge_into) — no
+    second shuffle; at 100 TB a MERGE with deletes costs exactly
     what a MERGE without them costs, which is why lakehouse CDC
     pipelines fold retention rules into the merge instead of running a
     separate DELETE pass."""
@@ -275,9 +275,10 @@ def table_change_feed(spark: SparkSession, sf_dir: str) -> SDF:
     MERGE deletes nothing so no delete rows appear (the kernel's
     delete/evolution paths are unit-tested in tests/test_mergetable.py).
 
-    Plan: ONE null-safe full-outer join of the two snapshots on the
-    key; classification and both images are built in a single
-    projection (an array of change structs, exploded) — no second pass.
+    Plan: ONE cogroup of the two snapshots on the key (the null-safe
+    full-outer join's pairs, one shuffle); classification and both
+    images are built in a single projection (an array of change
+    structs, exploded) — no second pass.
     On a BUCKETED table the feed reads only buckets whose manifest
     entries differ (by-reference buckets are provably unchanged:
     immutable files, identical paths), so a k-of-B-bucket merge yields
@@ -353,8 +354,8 @@ def table_feed_versions(spark: SparkSession, sf_dir: str) -> SDF:
     feed is CONSISTENT across commits, which the oracle (the two diffs
     stated directly over the v0/v1 CTE chain) proves by hash.
 
-    Scale: the feed costs the SUM of per-step diffs — one full-outer
-    join per commit over exactly the versions involved; for bucketed
+    Scale: the feed costs the SUM of per-step diffs — one one-shuffle
+    cogroup per commit over exactly the versions involved; for bucketed
     tables each step reads only manifest-differing buckets, so
     consuming a day of k-bucket merges is O(k × commits), never
     O(table × commits).  Versions are immutable, so any range's feed

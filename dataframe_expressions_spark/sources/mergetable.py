@@ -107,9 +107,10 @@ priced by its scale trade:
 
 * **All five MERGE clause kinds**: ``matched_delete`` /
   ``not_matched_by_source_delete`` are one extra filter on the same
-  full-outer join (a MERGE with retention rules costs what a plain
-  MERGE costs).  ``matched_delete`` composes with bucket scoping (a
-  matched row's bucket is touched by construction);
+  one-shuffle cogroup that pairs target and source rows by key — the
+  rows of a null-safe full-outer join (a MERGE with retention rules
+  costs what a plain MERGE costs).  ``matched_delete`` composes with
+  bucket scoping (a matched row's bucket is touched by construction);
   ``not_matched_by_source_delete`` deliberately does NOT (it targets
   untouched buckets — honoring it would silently forfeit the k/B
   bound, so it stays table-granularity-only).
@@ -120,7 +121,7 @@ priced by its scale trade:
   savings.  ``vacuum`` promotes a kept delete version's base chain to
   kept (data AND markers — resolution reads ancestor metadata).
 * **Change data feed** (``table_changes`` / ``feed_since``): one
-  full-outer diff join per commit pair, Delta-CDF image contract
+  cogroup diff (one shuffle) per commit pair, Delta-CDF image contract
   (updates emit pre AND post — what makes downstream incremental
   aggregation exact); bucketed versions diff only manifest-differing
   buckets (immutable files: identical path ⇒ identical bytes), so a
@@ -1464,13 +1465,16 @@ def merge_into(
       satisfying it is dropped instead of passing through (``s.``
       columns are NULL on these rows by construction).
 
-    Both lower to ONE extra filter on the same full-outer join — no
-    second shuffle, no second pass; at 100 TB a MERGE with deletes
-    costs exactly what a MERGE without them costs.
+    Both lower to ONE extra filter on the same cogroup — no second
+    shuffle, no second pass; at 100 TB a MERGE with deletes costs
+    exactly what a MERGE without them costs.
 
-    Expressions are SQL strings over the aliases ``t.`` (target) and
-    ``s.`` (source) — the WHEN MATCHED / WHEN NOT MATCHED clause bodies,
-    verbatim.  Output schema = target schema (names and order).
+    Expressions are SQL strings over ``t.`` (target) and ``s.``
+    (source) — the WHEN MATCHED / WHEN NOT MATCHED clause bodies,
+    verbatim.  ``t`` and ``s`` are struct columns holding the two
+    sides' rows, so every column name in a clause body must be
+    qualified with ``t.`` or ``s.``; a bare name does not resolve.
+    Output schema = target schema (names and order).
 
     ``evolve=True`` is MERGE WITH SCHEMA EVOLUTION (the Delta
     ``mergeSchema`` behavior, round 10): clause expressions may target
@@ -1483,11 +1487,16 @@ def merge_into(
     ``evolve``, an expression keyed on an unknown column raises — the
     strict-schema default.
 
-    Plan: ONE null-safe full-outer shuffle join on the key — the exact
-    kernel a lakehouse MERGE runs (cdc_upsert_compact is the latest-wins
-    variant of the same shape); at 100 TB both sides shuffle on the key
-    once, skew on hot keys is AQE's skew-split problem (join_skew_aqe
-    proves that fires), and the source side is broadcast when small.
+    Plan: ONE shuffle — a cogroup (``_cogroup``) that yields exactly
+    the rows of the null-safe full-outer join on the key, the kernel a
+    lakehouse MERGE runs (cdc_upsert_compact is the latest-wins variant
+    of the same shape).  Both sides are unioned, repartitioned on the
+    key once, grouped per key and paired back with ``explode_outer``;
+    duplicate keys pair as the join's cross product, NULL keys pair
+    with each other.  A full outer join would shuffle each side in a
+    map-stage job of its own (Spark broadcasts neither side of one).
+    A hot key lands in one task with all its rows, target and source
+    alike.
 
     PRECONDITION: the source must be unique on the join key.  A
     duplicate source key fans out the matched target row — SQL MERGE
@@ -1496,9 +1505,92 @@ def merge_into(
     groupBy(key) guarantees uniqueness by construction) don't pay a
     check; ``strict_source_keys=True`` adds the runtime guard — one
     aggregate over the SOURCE only (cheap: the source is the small,
-    already-folded side) that raises before the merge join runs.
+    already-folded side) that raises before the merge runs.
     """
     keys: List[str] = [on] if isinstance(on, str) else list(on)
+    return _merge(
+        target, source, keys, matched_update, not_matched_insert, evolve,
+        strict_source_keys, matched_delete, not_matched_by_source_delete,
+    )
+
+
+def _fresh(name: str, taken) -> str:
+    """``name``, suffixed with ``_`` until no column in ``taken`` has it
+    — how every helper column here stays clear of user columns."""
+    while name in taken:
+        name += "_"
+    return name
+
+
+def _cogroup(
+    a: SDF,
+    b: SDF,
+    keys: List[str],
+    names: "tuple[str, str]",
+    by: Optional[str] = None,
+) -> SDF:
+    """The rows of the null-safe full-outer join of ``a`` and ``b`` on
+    ``keys``, built with ONE shuffle: a cogroup.  Each output row pairs
+    one ``a`` row with one ``b`` row of the same key, as the struct
+    columns ``names[0]`` and ``names[1]``; a key with no row on one side
+    pairs with NULL there.  Duplicate keys pair as the join's cross
+    product, and NULL keys group together, as ``<=>`` pairs them.
+
+    The two sides are unioned — each packed into one struct column, the
+    other side's column NULL, the keys cast to their common type (the
+    union's schema gives it without a job) — and repartitioned on ONE
+    column set: the keys, or the SQL expression ``by`` over them, which
+    the output then carries as ``_BUCKET_COL``.  That repartition is the
+    only exchange, and rows cross it, not partial arrays: the groupBy
+    that ``collect_list``s each side per key is already clustered by it,
+    and ``explode_outer`` of each list in turn yields the pairs."""
+    common = {
+        fld.name: fld.dataType
+        for fld in a.select(*keys).unionByName(b.select(*keys)).schema.fields
+    }
+    ca = _fresh("_mt_a", set(keys))
+    cb = _fresh("_mt_b", set(keys) | {ca})
+
+    def packed(df: SDF, mine: str, other: str, other_df: SDF) -> SDF:
+        return df.select(
+            *[F.col(k).cast(common[k]).alias(k) for k in keys],
+            F.struct(*[F.col(c) for c in df.columns]).alias(mine),
+            F.lit(None).cast(other_df.schema).alias(other),
+        )
+
+    u = packed(a, ca, cb, b).unionByName(packed(b, cb, ca, a))
+    group, carry = list(keys), []
+    if by is not None:
+        part = _fresh(_BUCKET_COL, set(keys) | {ca, cb})
+        u = u.withColumn(part, F.expr(by)).repartition(F.col(part))
+        group, carry = [part] + group, [F.col(part).alias(_BUCKET_COL)]
+    else:
+        u = u.repartition(*keys)
+    lists = u.groupBy(*group).agg(
+        F.collect_list(ca).alias(ca), F.collect_list(cb).alias(cb)
+    )
+    firsts = lists.select(*carry, F.explode_outer(ca).alias(names[0]), cb)
+    return firsts.select(
+        *[c for c in firsts.columns if c != cb],
+        F.explode_outer(cb).alias(names[1]),
+    )
+
+
+def _merge(
+    target: SDF,
+    source: SDF,
+    keys: List[str],
+    matched_update: Dict[str, str],
+    not_matched_insert: Dict[str, str],
+    evolve: bool,
+    strict_source_keys: bool,
+    matched_delete: Optional[str],
+    not_matched_by_source_delete: Optional[str],
+    by: Optional[str] = None,
+) -> SDF:
+    """``merge_into`` on a key list: the MERGE clauses over the cogroup
+    of ``target`` (struct ``t``) and ``source`` (struct ``s``),
+    repartitioned on ``by`` when given (see ``_cogroup``)."""
     bad_key_sets = sorted(
         c for c in keys if c in matched_update or c in not_matched_insert
     )
@@ -1526,23 +1618,10 @@ def merge_into(
     out_cols = target.columns + sorted(
         set(extra), key=(list(matched_update) + list(not_matched_insert)).index
     )
-    # Presence-flag helper columns must not collide with user columns
-    # on EITHER frame (round-10 ADVICE): derive a name no input carries.
-    taken = set(target.columns) | set(source.columns)
-    tflag, sflag = "_mt_t_present", "_mt_s_present"
-    while tflag in taken or sflag in taken:
-        tflag, sflag = tflag + "_", sflag + "_"
-    t = target.withColumn(tflag, F.lit(1)).alias("t")
-    s = source.withColumn(sflag, F.lit(1)).alias("s")
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in keys],
-    )
-    j = t.join(s, cond, "full_outer")
-    both = (
-        F.col(f"t.{tflag}").isNotNull() & F.col(f"s.{sflag}").isNotNull()
-    )
-    t_only = F.col(f"s.{sflag}").isNull()
+    j = _cogroup(target, source, keys, ("t", "s"), by)
+    t, s = F.col("t"), F.col("s")
+    both = t.isNotNull() & s.isNotNull()
+    t_only = s.isNull()
     if matched_delete is not None or not_matched_by_source_delete is not None:
         drop = F.lit(False)
         if matched_delete is not None:
@@ -1574,19 +1653,20 @@ def merge_into(
             out.append(col.alias(c))
             continue
         if c in keys:
-            out.append(F.coalesce(F.col(f"t.{c}"), F.col(f"s.{c}")).alias(c))
+            out.append(F.coalesce(t[c], s[c]).alias(c))
             continue
         upd = matched_update.get(c)
         ins = not_matched_insert.get(c)
-        tcol = F.col(f"t.{c}")
         col = (
-            F.when(both, F.expr(upd) if upd is not None else tcol)
-            .when(t_only, tcol)
+            F.when(both, F.expr(upd) if upd is not None else t[c])
+            .when(t_only, t[c])
             .otherwise(
                 F.expr(ins) if ins is not None else F.lit(None)
             )
         )
         out.append(col.alias(c))
+    if by is not None:
+        out.append(F.col(_BUCKET_COL))
     return j.select(*out)
 
 
@@ -1844,30 +1924,29 @@ def _shape_bucketed_write(
     return df_with_bucket.repartition(F.col(_BUCKET_COL))
 
 
-def _shape_bucket_rewrite(df_with_bucket: SDF, spec: dict) -> SDF:
-    """Rewrite layout for bucket-scoped commits (MERGE, compaction):
-    repartition on the bucket id, preserving the table's recorded sort
-    discipline — stats-key sort or within-bucket Z-order — so the
-    refreshed per-file statistics of rewritten buckets stay as tight
-    as the original commit's (round 13: previously only stats_key
-    survived a rewrite; a Z-ordered bucket silently lost its layout on
-    first merge)."""
+def _sort_bucket_layout(df_with_bucket: SDF, spec: dict) -> SDF:
+    """Sort layout for bucket-scoped rewrites (MERGE, compaction), within
+    the partitions the caller already clustered on the bucket id: the
+    table's recorded sort discipline — stats-key sort or within-bucket
+    Z-order — so the refreshed per-file statistics of rewritten buckets
+    stay as tight as the original commit's (round 13: previously only
+    stats_key survived a rewrite; a Z-ordered bucket silently lost its
+    layout on first merge)."""
     zb = spec.get("zorder_by")
     if spec.get("stats_key"):
-        return df_with_bucket.repartition(
-            F.col(_BUCKET_COL)
-        ).sortWithinPartitions(_BUCKET_COL, spec["stats_key"])
+        return df_with_bucket.sortWithinPartitions(
+            _BUCKET_COL, spec["stats_key"]
+        )
     if zb:
         zc = "_mt_zval"
         return (
             df_with_bucket.withColumn(
                 zc, _morton2(F.col(zb[0]), F.col(zb[1]))
             )
-            .repartition(F.col(_BUCKET_COL))
             .sortWithinPartitions(_BUCKET_COL, zc)
             .drop(zc)
         )
-    return df_with_bucket.repartition(F.col(_BUCKET_COL))
+    return df_with_bucket
 
 
 def read_bucketed(
@@ -2092,7 +2171,12 @@ def merge_into_bucketed(
     Scale: a MERGE whose change set hits k of B buckets reads and
     rewrites k/B of the table instead of all of it; the touched-bucket
     set is one map-side-combined distinct over the source's derived
-    bucket id (≤ B tiny rows to the driver).  A rebase costs one marker
+    bucket id (≤ B tiny rows to the driver).  The merge itself is ONE
+    shuffle: ``_cogroup`` repartitions the union of the touched
+    buckets' rows and the source on the bucket id, and the write runs
+    straight from it — the table's sort layout is a narrow
+    ``sortWithinPartitions`` — so each touched bucket's rows sit in one
+    task and land as one file.  A rebase costs one marker
     read + one claim retry (no data touched) — so N concurrent merges
     over disjoint bucket sets serialize with N-1 rebases and exactly N
     bucket rewrites total.  Recompute is paid only on true overlap,
@@ -2155,14 +2239,13 @@ def merge_into_bucketed(
                 if tgt_paths
                 else _empty(spark, root, man, schema)
             )
-            merged = merge_into(
-                tgt,
-                src,
-                on=keys if len(keys) > 1 else keys[0],
-                matched_update=matched_update,
-                not_matched_insert=not_matched_insert,
-                strict_source_keys=False,  # hoisted above the retry loop
-                matched_delete=matched_delete,
+            # cogrouped on the bucket id: each touched bucket's rows sit
+            # in one partition, so the write below runs on the merge's
+            # one shuffle and leaves one file per touched bucket
+            merged = _merge(
+                tgt, src, keys, matched_update, not_matched_insert,
+                False, False,  # the key guard is hoisted above the retries
+                matched_delete, None, by=expr,
             )
             # back to the table's types: a SET expression's type (e.g.
             # DECIMAL(12,2) + DECIMAL(12,2) is DECIMAL(13,2)) must not
@@ -2171,17 +2254,15 @@ def merge_into_bucketed(
             # same-type cast is a no-op the optimizer removes.
             merged = merged.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name)
-                  for f in schema.fields]
+                  for f in schema.fields],
+                _BUCKET_COL,
             )
             # rewritten buckets keep the table's recorded sort layout
             # (stats-key sort or within-bucket Z-order) so refreshed
             # stats stay as tight as the original commit's
-            shaped = _shape_bucket_rewrite(
-                merged.withColumn(_BUCKET_COL, F.expr(expr)), spec
-            )
-            shaped.write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(
-                tmp
-            )
+            _sort_bucket_layout(merged, spec).write.mode(
+                "overwrite"
+            ).partitionBy(_BUCKET_COL).parquet(tmp)
         else:
             os.makedirs(tmp)  # empty change set: no-op version, no job
         return _bucket_commit(
@@ -2408,9 +2489,11 @@ def table_changes(
     Key columns come from the table's own bucket spec when it has one;
     plain tables pass ``on=``.
 
-    Plan: ONE null-safe full-outer join on the key, classification and
-    image construction in a single projection (an array of change
-    structs, exploded — no second pass, no second shuffle).
+    Plan: ONE shuffle — the cogroup of the two versions on the key
+    (``_cogroup``: the rows of a null-safe full-outer join, both sides
+    repartitioned together once), classification and image
+    construction in a single projection (an array of change structs,
+    exploded — no second pass, no second shuffle).
 
     BUCKETED FAST PATH: when both versions carry manifests under the
     same bucket function, only buckets whose manifest entries DIFFER
@@ -2508,9 +2591,10 @@ def _comparable(col, dt):
 
 
 def _diff_changes(f: SDF, t: SDF, keys: List[str]) -> SDF:
-    """The CDF kernel: full-outer join ``f`` (pre) vs ``t`` (post) on the
-    key, classify each key in one projection, explode the change
-    structs.  Output columns = ``t``'s schema + ``change_type``."""
+    """The CDF kernel: cogroup ``f`` (pre) with ``t`` (post) on the key
+    (the null-safe full-outer join's pairs, one shuffle), classify each
+    pair in one projection, explode the change structs.  Output columns
+    = ``t``'s schema + ``change_type``."""
     tcols = list(t.columns)
     missing_k = [k for k in keys if k not in tcols]
     if missing_k:
@@ -2528,31 +2612,20 @@ def _diff_changes(f: SDF, t: SDF, keys: List[str]) -> SDF:
         if c not in f.columns:
             # schema evolution: the column did not exist at from_v
             f = f.withColumn(c, F.lit(None).cast(tdtypes[c]))
-    taken = set(tcols)
-    fflag, tflag = "_cf_f_present", "_cf_t_present"
-    while fflag in taken or tflag in taken:
-        fflag, tflag = fflag + "_", tflag + "_"
-    fa = f.select(*tcols).withColumn(fflag, F.lit(1)).alias("f")
-    ta = t.select(*tcols).withColumn(tflag, F.lit(1)).alias("t")
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(f"f.{k}").eqNullSafe(F.col(f"t.{k}")) for k in keys],
-    )
-    j = fa.join(ta, cond, "full_outer")
-    ins = F.col(f"f.{fflag}").isNull()
-    dele = F.col(f"t.{tflag}").isNull()
+    j = _cogroup(f.select(*tcols), t.select(*tcols), keys, ("f", "t"))
+    ins, dele = F.col("f").isNull(), F.col("t").isNull()
     nonkey = [c for c in tcols if c not in keys]
 
     def comparable(side: str, c: str):
-        return _comparable(F.col(f"{side}.{c}"), tdtypes[c])
+        return _comparable(F.col(side)[c], tdtypes[c])
 
     same = reduce(
         lambda a, b: a & b,
         [comparable("f", c).eqNullSafe(comparable("t", c)) for c in nonkey],
         F.lit(True),
     )
-    pre = F.struct(*[F.col(f"f.{c}").alias(c) for c in tcols])
-    post = F.struct(*[F.col(f"t.{c}").alias(c) for c in tcols])
+    pre = F.struct(*[F.col("f")[c].alias(c) for c in tcols])
+    post = F.struct(*[F.col("t")[c].alias(c) for c in tcols])
 
     def ch(img, kind):
         return F.struct(img.alias("row"), F.lit(kind).alias("change_type"))
@@ -2747,8 +2820,11 @@ def compact_buckets(
         # data column, so re-derive it from the table's own expression
         # (deterministic on the key — the same routing that put the
         # rows there)
-        _shape_bucket_rewrite(
-            df.withColumn(_BUCKET_COL, F.expr(spec["expr"])), spec
+        _sort_bucket_layout(
+            df.withColumn(_BUCKET_COL, F.expr(spec["expr"])).repartition(
+                F.col(_BUCKET_COL)
+            ),
+            spec,
         ).write.mode("overwrite").partitionBy(_BUCKET_COL).parquet(tmp)
         return _bucket_commit(
             root, tmp, base, bmeta, "compacted_buckets", set(frag), meta
@@ -2926,15 +3002,7 @@ def commit_snapshot_exclusive(
         _shape_for_write(df, n_files, stats_key, zorder_by).write.mode(
             "overwrite"
         ).parquet(tmp)
-        st = commit_store_for(root)
-        taken = {int(x) for x in st.list("_commits") if x.isdigit()}
-        taken |= {int(x) for x in st.list("_claims") if x.isdigit()}
-        taken |= {
-            int(x[1:])
-            for x in os.listdir(root)
-            if x.startswith("v") and x[1:].isdigit()
-        }
-        return max(taken, default=-1), {}, _every_rival_rebases, (
+        return _top_taken_slot(root), {}, _every_rival_rebases, (
             lambda n, _newest: _stats_payload(
                 root, n, stats_key, meta, stats_cols
             )
@@ -3023,12 +3091,16 @@ def restore_table(
     # placeholder naming the restore (the manifest never references
     # it) and the marker publishes the target's manifest.  Restore
     # overrides ALL buckets by definition, so a rival commit is never
-    # a conflict: record it as base_version and claim the next slot.
+    # a conflict: the claim starts above every taken slot (as
+    # commit_snapshot_exclusive's does — a dead claimant's slot below
+    # costs no wait), and base_version records the newest version
+    # committed below the restore when it publishes.
     def payload(n: int, newest_meta: dict) -> dict:
+        below = [v for v in committed_versions(root) if v < n]
         out = {
             "manifest": dict(man),
             "bucket": tmeta.get("bucket"),
-            "base_version": newest_meta.get("version", base),
+            "base_version": max(below, default=base),
             **payload_meta,
         }
         stats = _file_stats(tmeta)
@@ -3040,7 +3112,7 @@ def restore_table(
         os.makedirs(tmp)
         with open(os.path.join(tmp, "_mt_restore"), "w") as fh:
             json.dump({"op": "restore", "restored_from": to_version}, fh)
-        return base, commit_meta(root, base), _every_rival_rebases, payload
+        return _top_taken_slot(root), {}, _every_rival_rebases, payload
 
     # max_retries=0: the always-rebase policy never reports a conflict
     return _occ_commit(root, "restore", attempt, 0, marker_timeout)
@@ -3233,6 +3305,23 @@ def _try_claim(root: str, n: int) -> bool:
             continue
         return occ.get("writer_nonce") == nonce
     return False
+
+
+def _top_taken_slot(root: str) -> int:
+    """The highest version slot anything occupies — a marker, a claim or
+    a ``v<n>`` dir (-1 on an empty root).  The claim of a kind whose
+    content ignores the race base (snapshot replace, restore) starts
+    above it, so a dead claimant's marker-less slot below costs no
+    ``marker_timeout`` wait: nothing needs its marker."""
+    st = commit_store_for(root)
+    taken = {int(x) for x in st.list("_commits") if x.isdigit()}
+    taken |= {int(x) for x in st.list("_claims") if x.isdigit()}
+    taken |= {
+        int(x[1:])
+        for x in os.listdir(root)
+        if x.startswith("v") and x[1:].isdigit()
+    }
+    return max(taken, default=-1)
 
 
 def _any_rival_conflicts(m_meta: dict) -> bool:

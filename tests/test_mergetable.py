@@ -4100,3 +4100,227 @@ def test_occ_claim_error_leaves_no_temp(spark, tmp_path, monkeypatch, kind):
         run(spark, mt, root)
     assert mt.committed_versions(root) == [0]
     assert not _tmp_entries(root)
+
+
+# ---------------------------------------------------------------------------
+# the cogroup kernel: the full-outer join's rows, one shuffle
+# ---------------------------------------------------------------------------
+
+# duplicate and NULL keys on BOTH sides: 1 and NULL match 2×2, 2 is
+# target-only twice, 7 is source-only twice
+_DUP_TGT = [(1, "a", 10.0), (1, "b", 11.0), (2, "c", 20.0),
+            (2, "d", 21.0), (None, "n", 5.0), (None, "m", 6.0), (3, "e", -1.0)]
+_DUP_SRC = [(1, 100.0), (1, 200.0), (7, 700.0), (7, 701.0),
+            (None, 50.0), (None, 60.0), (3, 1.0)]
+_NULL_KEY = -999  # stands in for NULL in the pandas reference join
+
+
+def _pandas_outer(left, lcols, right, rcols):
+    """pandas' full-outer merge of two row lists on ``k`` (NULL keys pair
+    like ``<=>``): one dict per pair, ``_merge`` naming its side."""
+    import pandas as pd
+
+    def frame(rows, cols):
+        df = pd.DataFrame(rows, columns=["k", *cols], dtype=object)
+        df["k"] = df["k"].map(lambda k: _NULL_KEY if k is None else k)
+        return df
+
+    out = pd.merge(
+        frame(left, lcols), frame(right, rcols), on="k", how="outer",
+        suffixes=("_l", "_r"), indicator=True,
+    )
+    recs = out.astype(object).where(out.notna(), None).to_dict("records")
+    for r in recs:
+        r["k"] = None if r["k"] == _NULL_KEY else r["k"]
+    return recs
+
+
+def _multiset(rows):
+    import numbers
+
+    def plain(v):
+        if isinstance(v, numbers.Integral):
+            return int(v)
+        return float(v) if isinstance(v, numbers.Real) else v
+
+    return sorted((tuple(plain(v) for v in r) for r in rows), key=repr)
+
+
+@pytest.mark.parametrize("case", ["plain", "matched_delete", "evolve"])
+def test_merge_into_duplicate_and_null_keys_match_pandas(spark, case):
+    """The MERGE keeps the join's product semantics: every target row of
+    a key pairs with every source row of it (NULL keys included), so the
+    output is the multiset a pandas full-outer merge gives — with a
+    matched DELETE clause and with schema evolution too."""
+    tgt = spark.createDataFrame(_DUP_TGT, "k long, name string, bal double")
+    src = spark.createDataFrame(_DUP_SRC, "k long, delta double")
+    kw = dict(
+        matched_update={"bal": "t.bal + s.delta"},
+        not_matched_insert={"bal": "s.delta"},
+    )
+    if case == "matched_delete":
+        kw["matched_delete"] = "t.bal + s.delta > 205"
+    if case == "evolve":
+        kw = dict(
+            matched_update={**kw["matched_update"], "tag": "'u'"},
+            not_matched_insert={**kw["not_matched_insert"], "tag": "'i'"},
+            evolve=True,
+        )
+    out = merge_into(tgt, src, on="k", **kw)
+    want_cols = ["k", "name", "bal"] + (["tag"] if case == "evolve" else [])
+    assert out.columns == want_cols
+    want = []
+    for r in _pandas_outer(_DUP_TGT, ["name", "bal"], _DUP_SRC, ["delta"]):
+        side = r["_merge"]
+        if side == "both":
+            bal = r["bal"] + r["delta"]
+            if case == "matched_delete" and bal > 205:
+                continue
+            row = (r["k"], r["name"], bal, "u")
+        elif side == "left_only":
+            row = (r["k"], r["name"], r["bal"], None)
+        else:
+            row = (r["k"], None, r["delta"], "i")
+        want.append(row if case == "evolve" else row[:3])
+    got = [tuple(r) for r in out.collect()]
+    # 1 and NULL pair 2×2, 2 and 7 pass through twice, 3 once
+    assert len(got) == 13 - (2 if case == "matched_delete" else 0)
+    assert _multiset(got) == _multiset(want)
+
+
+def test_diff_changes_duplicate_and_null_keys_match_pandas(spark):
+    """The change-feed kernel pairs duplicate and NULL keys as the join
+    did: each (before, after) pair of a key is classified on its own,
+    as a pandas full-outer merge pairs them."""
+    from dataframe_expressions_spark.sources.mergetable import _diff_changes
+
+    before = [(1, "a"), (1, "b"), (None, "n"), (None, "m"), (2, "x"),
+              (4, "gone")]
+    after = [(1, "a"), (1, "z"), (None, "n"), (2, "x"), (2, "y"),
+             (5, "new")]
+    schema = "k long, v string"
+    got = [
+        (r.k, r.v, r.change_type)
+        for r in _diff_changes(
+            spark.createDataFrame(before, schema),
+            spark.createDataFrame(after, schema), ["k"],
+        ).collect()
+    ]
+    want = []
+    for r in _pandas_outer(before, ["v"], after, ["v"]):
+        if r["_merge"] == "left_only":
+            want.append((r["k"], r["v_l"], "delete"))
+        elif r["_merge"] == "right_only":
+            want.append((r["k"], r["v_r"], "insert"))
+        elif r["v_l"] != r["v_r"]:
+            want.append((r["k"], r["v_l"], "update_preimage"))
+            want.append((r["k"], r["v_r"], "update_postimage"))
+    assert _multiset(got) == _multiset(want)
+
+
+@pytest.mark.parametrize("key", ["t", "s"])
+def test_merge_into_key_named_like_a_side(spark, key):
+    """A key column named ``t`` or ``s`` — the names the clause bodies
+    use for the two sides — merges like any other key: ``t.<col>`` and
+    ``s.<col>`` still name the sides' fields."""
+    tgt = spark.createDataFrame(
+        [(1, 10.0), (2, 20.0)], f"{key} long, bal double"
+    )
+    src = spark.createDataFrame(
+        [(1, 5.0), (3, 7.0)], f"{key} long, delta double"
+    )
+    out = merge_into(
+        tgt, src, on=key,
+        matched_update={"bal": f"t.bal + s.delta + t.{key} - s.{key}"},
+        not_matched_insert={"bal": "s.delta"},
+    )
+    assert out.columns == [key, "bal"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, 15.0), (2, 20.0), (3, 7.0)
+    ]
+
+
+def _exchanges(df) -> int:
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"(?<![A-Za-z])Exchange\b", plan))
+
+
+@pytest.mark.parametrize("layout", [{}, {"stats_key": "val"}])
+def test_bucketed_merge_and_feed_run_one_exchange(
+    spark, tmp_path, monkeypatch, layout
+):
+    """The bucketed MERGE writes straight from its cogroup: the write's
+    plan holds exactly one Exchange (the cogroup's, on the bucket id)
+    and each touched bucket gets one file.  The change feed between the
+    two versions plans exactly one Exchange too."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    root = str(tmp_path / "tbl")
+    mt.commit_bucketed(
+        spark.createDataFrame(
+            [(k, 0.0) for k in range(40)], "k long, val double"
+        ),
+        root, 0, on="k", n_buckets=8, hashed=False, **layout,
+    )
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording(self, path, *a, **kw):
+        written.append(self._df)
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    n = mt.merge_into_bucketed(
+        spark, root, _occ_chg(spark, [0, 8, 3, 41, 43], 5.0), **_OCC_CLAUSES
+    )
+    monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+    assert n == 1 and len(written) == 1
+    assert _exchanges(written[0]) == 1
+    meta = mt.commit_meta(root, 1)
+    assert meta["touched_buckets"] == ["0", "1", "3"]
+    for b in meta["touched_buckets"]:
+        files = [
+            x for x in os.listdir(os.path.join(root, meta["manifest"][b]))
+            if x.endswith(".parquet")
+        ]
+        assert len(files) == 1, (b, files)
+    got = {r.k: r.val for r in mt.read_bucketed(spark, root).collect()}
+    assert got == {**{k: 0.0 for k in range(40)},
+                   0: 5.0, 8: 5.0, 3: 5.0, 41: 5.0, 43: 5.0}
+    feed = mt.table_changes(spark, root, 0, 1)
+    assert _exchanges(feed) == 1
+    assert sorted((r.k, r.change_type) for r in feed.collect()) == sorted(
+        [(k, c) for k in (0, 3, 8)
+         for c in ("update_preimage", "update_postimage")]
+        + [(41, "insert"), (43, "insert")]
+    )
+
+
+def test_restore_bucketed_starts_above_an_orphan_slot(
+    spark, tmp_path, monkeypatch
+):
+    """A dead claimant's marker-less ``v1`` costs the bucketed restore no
+    wait: its claim starts above every taken slot, as the exclusive
+    snapshot commit's does, so the await/fence path never runs."""
+    import dataframe_expressions_spark.sources.mergetable as mt
+
+    root = str(tmp_path / "tbl")
+    _mk_occ_base(spark, root)
+    os.makedirs(os.path.join(root, "v1"))  # dead claimant's orphan
+
+    def never(*a, **kw):
+        raise AssertionError("the restore awaited or fenced a slot")
+
+    monkeypatch.setattr(mt, "_await_commit_meta", never)
+    monkeypatch.setattr(mt, "_publish_fence", never)
+    assert mt.restore_table(spark, root, 0, marker_timeout=30.0) == 2
+    meta = mt.commit_meta(root, 2)
+    assert meta["restored_from"] == 0 and meta["base_version"] == 0
+    assert mt.committed_versions(root) == [0, 2]
+    assert {r.k: r.val for r in mt.read_bucketed(spark, root).collect()} == {
+        k: 0.0 for k in range(40)
+    }

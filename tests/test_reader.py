@@ -209,3 +209,30 @@ def test_marker_without_schema_still_reads(spark, tmp_path):
     got = sorted(r.k for r in read_bucketed(spark, root).collect())
     assert got == want + [200]
     assert [r.k for r in feed_since(spark, root, 0).collect()] == [200]
+
+
+def test_schema_evolution_merge_pins_the_latest_schema(spark):
+    """``schema_evolution_merge`` reads its two generations with the
+    latest generation's memoized schema instead of ``mergeSchema``: a
+    warm call fires no job, and the answer is the ``mergeSchema`` read's
+    (the older generation's rows carry NULL in the added column)."""
+    from pyspark.sql import functions as F
+
+    from dataframe_expressions_spark.operators.tier5 import (
+        _maint_dir,
+        schema_evolution_merge,
+    )
+
+    schema_evolution_merge(spark, SF_SMOKE)
+    with jobs(spark) as warm:
+        df = schema_evolution_merge(spark, SF_SMOKE)
+    assert warm == [], warm
+    out = _maint_dir(SF_SMOKE, "evolve")
+    merged = spark.read.option("mergeSchema", True).parquet(
+        out + "/gen=1", out + "/gen=2"
+    ).select("n_nationkey", "n_name", F.col("n_regionkey").cast("long"))
+    assert df.schema == merged.schema
+    got = sorted(df.collect(), key=repr)
+    assert got == sorted(merged.collect(), key=repr)
+    assert any(r.n_regionkey is None for r in got)
+    assert any(r.n_regionkey is not None for r in got)
